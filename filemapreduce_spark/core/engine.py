@@ -259,10 +259,17 @@ class FileEngine:
     ) -> dict[str, Any]:
         """Execute all jobs over a single shared scan.
 
-        The files DF is persisted so each file is read and parsed once
-        no matter how many jobs consume it (the reference's scan
-        sharing, jobs.go:3-5); each job then triggers exactly one
-        action (its finalizer, or nothing if it stays lazy).
+        With more than one job, the canonical files DF — every file's
+        path, content bytes, length and mod time — is persisted at
+        ``persist_level`` so each file is read once no matter how many
+        jobs consume it (the reference's scan sharing, jobs.go:3-5);
+        loaders run per job over the cached bytes. A disk root keeps
+        ``read_files``' byte-sized partitioning — ``max(
+        defaultParallelism, ceil(listed bytes / maxPartitionBytes))``,
+        not one partition per few files — so every stage that reads
+        the cache runs that many tasks; an explicit ``files_df`` keeps
+        its own partitioning. Each job then triggers exactly one action
+        (its finalizer, or nothing if it stays lazy).
 
         ``with_metrics=True`` attaches an ``Observation`` to each
         job's mapped frame: the returned dict gains a ``"_metrics"``

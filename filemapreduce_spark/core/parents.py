@@ -15,14 +15,17 @@ rules encoded by the goldens (mapreduce_test.go:403-503):
   (mapreduce.go:152-184).
 
 Spark-native design: directory metadata is by construction tiny
-relative to the data (one payload per folder), so we build a small
-``(meta_dir, depth, payload)`` DataFrame and BROADCAST it into a theta
-join on path-prefix (``file_dir LIKE meta_dir || '/%'``). At 100 TB the
-data side streams through executors while the broadcast side stays
-resident — no shuffle of the big side at all. The root-first ordering
-is reconstructed with ``array_sort`` over (depth, payload) structs, so
-ordering is deterministic and computed JVM-side (no Python in the row
-path).
+relative to the data (one payload per folder), so it is folded into ONE
+row — a ``map<meta_dir, array<payload>>`` — and broadcast onto the data
+side. Each data row lists its strict-ancestor directories root-first
+(``''``, ``a``, ``a/b`` for a file in ``a/b/c``), looks each one up in
+the map and flattens the hits. At 100 TB the data side streams through
+executors with no shuffle and no join build beyond that one row. Several
+directory files in one folder are ordered by payload (``array_sort``),
+so the stack is deterministic and computed JVM-side (no Python in the
+row path). Payloads are wrapped in a struct while they are collected,
+because ``collect_list`` drops nulls and a null payload stays in the
+stack.
 """
 
 from __future__ import annotations
@@ -43,10 +46,16 @@ def dir_of(path: Column) -> Column:
     return F.regexp_replace(path, "(^|/)[^/]*$", "")
 
 
-def _depth(dir_col: Column) -> Column:
-    """0 for root dir '', else number of segments."""
-    return F.when(dir_col == "", F.lit(0)).otherwise(
-        F.size(F.split(dir_col, "/"))
+def _strict_ancestors(dir_col: Column) -> Column:
+    """Root-first strict ancestors of a directory: '' → [],
+    'a' → [''], 'a/b/c' → ['', 'a', 'a/b']."""
+    segs = F.split(dir_col, "/")
+    prefixes = F.transform(
+        segs, lambda _, i: F.array_join(F.slice(segs, 1, i), "/")
+    )
+    # distinct: a leading '/' would otherwise list '' twice
+    return F.when(dir_col == "", F.array().cast("array<string>")).otherwise(
+        F.array_distinct(prefixes)
     )
 
 
@@ -55,7 +64,6 @@ def attach_parents(
     data_df: DataFrame,
     dir_filter: Filter | str,
     payload: Column,
-    broadcast_dirs: bool = True,
 ) -> DataFrame:
     """Attach a root-first ``parents`` array column to ``data_df``.
 
@@ -67,59 +75,34 @@ def attach_parents(
       parsed payload handed to mappers (e.g. ``from_json(decode(
       content,'UTF-8'), schema)``).
 
-    - ``broadcast_dirs``: broadcast the per-directory parents table for
-      the final equi-join (right default when distinct dirs × payload
-      fit in the broadcast budget; set False on trees with tens of
-      millions of folders to fall back to a shuffled equi-join).
-
     Returns ``data_df`` plus ``parents: ARRAY<payload_type>`` ordered
     root-first (empty array when no ancestors match).
     """
     flt = as_filter(dir_filter)
-    meta = (
+    lookup = (
         files_df.filter(F.col("path").rlike(flt.to_regex()))
-        .select(
-            dir_of(F.col("path")).alias("_meta_dir"),
-            payload.alias("_meta_payload"),
-        )
-        .withColumn("_meta_depth", _depth(F.col("_meta_dir")))
-    )
-
-    data = data_df.withColumn("_file_dir", dir_of(F.col("path")))
-
-    # Parents are a property of the DIRECTORY, not the file: aggregate
-    # the ancestor stack once per distinct dir (small), then equi-join
-    # it back onto the data. At scale this keeps the expensive theta
-    # join on a tiny (dirs × meta) input instead of (files × meta).
-    dirs = data.select("_file_dir").distinct()
-
-    # strict-descendant prefix condition (subfolders only, not siblings)
-    cond = (
-        (F.col("_meta_dir") == "") & (F.col("_file_dir") != "")
-    ) | F.col("_file_dir").startswith(F.concat(F.col("_meta_dir"), F.lit("/")))
-
-    dir_parents = (
-        dirs.join(F.broadcast(meta), cond, "left")
-        .groupBy("_file_dir")
+        .groupBy(dir_of(F.col("path")).alias("_meta_dir"))
         .agg(
             F.array_sort(
-                F.collect_list(
-                    F.when(
-                        F.col("_meta_dir").isNotNull(),
-                        F.struct(
-                            F.col("_meta_depth").alias("d"),
-                            F.col("_meta_payload").alias("p"),
-                        ),
-                    )
-                )
+                F.collect_list(F.struct(payload.alias("p")))
             ).alias("_stack")
         )
-        .select(
-            "_file_dir",
-            F.transform(F.col("_stack"), lambda s: s["p"]).alias("parents"),
+        .agg(
+            F.map_from_entries(
+                F.collect_list(F.struct("_meta_dir", "_stack"))
+            ).alias("_lookup")
         )
     )
-
-    if broadcast_dirs:
-        dir_parents = F.broadcast(dir_parents)
-    return data.join(dir_parents, "_file_dir", "left").drop("_file_dir")
+    ancestors = F.filter(
+        _strict_ancestors(dir_of(F.col("path"))),
+        lambda d: F.map_contains_key(F.col("_lookup"), d),
+    )
+    parents = F.transform(
+        F.flatten(F.transform(ancestors, lambda d: F.col("_lookup")[d])),
+        lambda s: s["p"],
+    )
+    return (
+        data_df.crossJoin(F.broadcast(lookup))
+        .withColumn("parents", parents)
+        .drop("_lookup")
+    )

@@ -156,9 +156,9 @@ def parents_prefix_inheritance(spark: SparkSession, sf_dir: str) -> DataFrame:
     SIBLING meta that must NOT be inherited (subfolder-only scope,
     work.go:68-100). The oracle replays the strict-prefix join in SQL.
 
-    Scale shape: meta table is folders-sized (tiny) and broadcast;
-    ancestors aggregate once per distinct directory, then equi-join
-    back — the big side never shuffles.
+    Scale shape: the meta table is folders-sized (tiny) and folded
+    into one broadcast folder → weights map; each document looks up
+    its ancestor folders in it — the big side never shuffles.
     """
     from filemapreduce_spark.core.parents import attach_parents
     from filemapreduce_spark.globs import MultiFilter

@@ -14,6 +14,19 @@ tree (/root/reference/interfaces.go:89-94) with a disk implementation
 - In-memory: ``files_from_memory`` builds the same shape from a dict
   (the reference's StaticVirtualFileSystem).
 
+Split policy: Spark packs a binaryFile scan into partitions by charging
+every file ``spark.sql.files.openCostInBytes`` (4 MB) on top of its
+length, so a tree of small files becomes many near-empty partitions,
+and every stage that reads the (shared, persisted) scan pays Spark's
+fixed per-task cost once per partition. ``read_files`` sizes the scan
+by the bytes the listing found instead:
+``n = max(defaultParallelism, ceil(total_bytes / maxPartitionBytes))``,
+applied as a no-shuffle ``coalesce(n)`` only when ``n`` is below the
+count Spark chose. The byte total is the relation's own size
+statistic, taken from the listing Spark already made (no job, no
+second listing). Every core stays busy, and on large trees, where the
+byte need reaches Spark's own count, partitioning is unchanged.
+
 Canonical schema: path STRING (relative, '/'-separated), content BINARY,
 length LONG, mod_time TIMESTAMP.
 
@@ -68,6 +81,11 @@ def read_files(
     non-matching files are pruned at listing time (never opened); the
     full anchored regex is applied on the relative path for exactness.
 
+    Partitions: ``max(defaultParallelism, ceil(listed bytes /
+    spark.sql.files.maxPartitionBytes))`` when that is fewer than
+    Spark's file-count-driven split (a no-shuffle ``coalesce``);
+    otherwise Spark's own split. See the module docstring.
+
     ``max_file_bytes`` (opt-in; costs one metadata-only listing job):
     fail fast with the offending paths if any matched file exceeds
     the limit, instead of an opaque mid-scan JVM failure at the
@@ -87,6 +105,10 @@ def read_files(
 
     abs_root = os.path.abspath(root).rstrip("/")
     df = reader.load(abs_root)
+    # the relation's size statistic: the listing's summed file lengths
+    listed_bytes = int(
+        str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    )
     rel = F.regexp_replace(F.col("path"), "^.*?" + re.escape(abs_root) + "/", "")
     df = df.select(
         rel.alias("path"),
@@ -116,6 +138,14 @@ def read_files(
                 f"straggler): {listing}. Use read_files_chunked for "
                 "oversized inputs."
             )
+    # split policy (module docstring); an unknown size (Long.MaxValue)
+    # needs more partitions than any scan has, so it changes nothing
+    max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    need = max(
+        spark.sparkContext.defaultParallelism, -(-listed_bytes // max_bytes)
+    )
+    if need < df._jdf.rdd().getNumPartitions():
+        df = df.coalesce(need)
     return df
 
 

@@ -189,26 +189,42 @@ def test_doc_example_sum_14(spark):
 
 
 def test_parents_depth_and_root_first_order(spark):
-    """map.txt sees 3 parents root-first (mapreduce_test.go:431-471)."""
-    eng = FileEngine.from_memory(spark, DEEP_TREE)
-    out = eng.run(
-        [
-            Job(
-                name="deep",
-                path_filter="**/map.txt",
-                directory_files="**",  # every file is a potential dir file
-                loader="text",
-                dir_loader="text",
-                mapper=lambda df: df.select("path", "parents"),
-                finalizer=lambda df: df.collect(),
-            )
-        ]
-    )
-    rows = out["deep"]
-    assert len(rows) == 1
-    assert rows[0].path == "folder/folder/folder/map.txt"
-    # root-first: depth ascending
-    assert rows[0].parents == ["even more content", "more content", "content"]
+    """map.txt sees 3 parents root-first (mapreduce_test.go:431-471);
+    two directory files in one folder are both kept, ordered by
+    payload; a null payload (here: an empty file) keeps its slot."""
+    cases = {
+        "goldens": ({}, ["even more content", "more content", "content"]),
+        "two_in_one_folder": (
+            {"folder/file2.txt": "a second file"},
+            ["even more content", "a second file", "more content", "content"],
+        ),
+        "null_payload": (
+            {"folder/file.txt": ""},
+            ["even more content", None, "content"],
+        ),
+    }
+    for case, (extra, expected) in cases.items():
+        eng = FileEngine.from_memory(spark, {**DEEP_TREE, **extra})
+        out = eng.run(
+            [
+                Job(
+                    name="deep",
+                    path_filter="**/map.txt",
+                    directory_files="**",  # every file is a potential dir file
+                    loader="text",
+                    dir_loader=lambda c: F.nullif(
+                        F.decode(c, "UTF-8"), F.lit("")
+                    ),
+                    mapper=lambda df: df.select("path", "parents"),
+                    finalizer=lambda df: df.collect(),
+                )
+            ]
+        )
+        rows = out["deep"]
+        assert len(rows) == 1, case
+        assert rows[0].path == "folder/folder/folder/map.txt", case
+        # root-first: depth ascending
+        assert rows[0].parents == expected, case
 
 
 def test_parents_per_job_scoping(spark):
@@ -261,6 +277,65 @@ def test_directory_file_not_visible_to_siblings(spark):
     assert out["sib"][0].parents == []
 
 
+def _partitions_job():
+    return Job(name="n", finalizer=lambda df: df.rdd.getNumPartitions())
+
+
+def test_disk_scan_partitions_sized_by_bytes(spark, tmp_path):
+    """A disk scan gets max(defaultParallelism, ceil(bytes /
+    maxPartitionBytes)) partitions, not one per few files; the byte
+    total comes from the listing, with no Spark job; an explicit
+    files DF keeps its own partitioning."""
+    import math
+
+    from filemapreduce_spark.sources.files import read_files
+
+    tree = {
+        f"d{i % 7}/s{i % 11}/f{i}.txt": "x" * (40 + i % 90) for i in range(300)
+    }
+    for rel, text in tree.items():
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_text(text)
+    total = sum(len(t) for t in tree.values())
+    sc = spark.sparkContext
+    dp = sc.defaultParallelism
+    key = "spark.sql.files.maxPartitionBytes"
+    default_max = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+
+    sc.setJobGroup("read_files_listing", "read_files_listing")
+    try:
+        read_files(spark, str(tmp_path))
+        assert sc.statusTracker().getJobIdsForGroup("read_files_listing") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    eng = FileEngine(spark, root=str(tmp_path))
+    need = math.ceil(total / default_max)
+    assert eng.run([_partitions_job()])["n"] == max(dp, need)
+
+    # a lowered maxPartitionBytes: never coalesced below the byte need
+    before = spark.conf.get(key)
+    max_bytes = total // (dp + 8)
+    spark.conf.set(key, str(max_bytes))
+    try:
+        need = math.ceil(total / max_bytes)
+        assert need > dp
+        assert eng.run([_partitions_job()])["n"] == need
+    finally:
+        spark.conf.set(key, before)
+
+    # an explicit files DF (size unknown to Spark) keeps its partitions
+    files = {f"f{i}": "x" for i in range(300)}
+    mem = files_from_memory(spark, files)
+    assert (
+        FileEngine.from_memory(spark, files).run([_partitions_job()])["n"]
+        == mem.rdd.getNumPartitions()
+    )
+    wide = mem.repartition(3 * dp)
+    assert FileEngine(spark, files_df=wide).run([_partitions_job()])["n"] == 3 * dp
+
+
 def test_scale_smoke_1000_files(spark):
     """1,000-file VFS, map-only '**' job completes
     (mapreduce_test.go:505-531)."""
@@ -272,7 +347,7 @@ def test_scale_smoke_1000_files(spark):
     assert out["all"] == 1000
 
 
-def test_mapper_error_propagates(spark):
+def test_mapper_task_error_propagates(spark):
     """A failing mapper surfaces as the job's error
     (mapreduce_test.go:185-274)."""
     eng = FileEngine.from_memory(spark, NUMBERS_TREE)

@@ -5,7 +5,7 @@ fixtures (testFixtures/a mirrors, depth <= 3). This axis stresses the
 shapes a real repository/crawl tree produces:
 
 - >= 64-deep nesting with a directory file at EVERY level (the
-  broadcast prefix join's parents stack at maximum practical depth);
+  ancestor lookup's parents stack at maximum practical depth);
 - unicode / whitespace path segments (glob compiler must treat them
   as literals — no regex-metachar or encoding surprises);
 - empty folders and metadata-only folders (scan yields no rows, no

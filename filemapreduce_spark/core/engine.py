@@ -263,13 +263,14 @@ class FileEngine:
         path, content bytes, length and mod time — is persisted at
         ``persist_level`` so each file is read once no matter how many
         jobs consume it (the reference's scan sharing, jobs.go:3-5);
-        loaders run per job over the cached bytes. A disk root keeps
-        ``read_files``' byte-sized partitioning — ``max(
-        defaultParallelism, ceil(listed bytes / maxPartitionBytes))``,
-        not one partition per few files — so every stage that reads
-        the cache runs that many tasks; an explicit ``files_df`` keeps
-        its own partitioning. Each job then triggers exactly one action
-        (its finalizer, or nothing if it stays lazy).
+        loaders run per job over the cached bytes. A ``files_df`` the
+        caller already persisted is used as is and left cached. A disk
+        root keeps ``read_files``' partitioning (Spark's split-size
+        rule over the listed bytes; see ``read_files``), so every stage
+        that reads the cache runs that many tasks; an explicit
+        ``files_df`` keeps its own partitioning. Each job then triggers
+        exactly one action (its finalizer, or nothing if it stays
+        lazy).
 
         ``with_metrics=True`` attaches an ``Observation`` to each
         job's mapped frame: the returned dict gains a ``"_metrics"``
@@ -286,8 +287,10 @@ class FileEngine:
             raise ValueError(f"duplicate job names: {names}")
 
         files = self._files()
-        shared = len(jobs) > 1
-        if shared:
+        # a cache the caller made is theirs: neither re-persisted nor
+        # released here
+        owned = len(jobs) > 1 and files.storageLevel == StorageLevel.NONE
+        if owned:
             files = files.persist(self.persist_level)
         try:
             results: dict[str, Any] = {}
@@ -318,7 +321,7 @@ class FileEngine:
                 results["_metrics"] = metrics
             return results
         finally:
-            if shared:
+            if owned:
                 # lazily-returned DataFrames still benefit while the
                 # session lives; unpersist only frees the cache eagerly
                 # when every job had a finalizer (i.e. already ran).

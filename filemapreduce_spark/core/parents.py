@@ -19,11 +19,14 @@ relative to the data (one payload per folder), so it is folded into ONE
 row — a ``map<meta_dir, array<payload>>`` — and broadcast onto the data
 side. Each data row lists its strict-ancestor directories root-first
 (``''``, ``a``, ``a/b`` for a file in ``a/b/c``), looks each one up in
-the map and flattens the hits. At 100 TB the data side streams through
-executors with no shuffle and no join build beyond that one row. Several
-directory files in one folder are ordered by payload (``array_sort``),
-so the stack is deterministic and computed JVM-side (no Python in the
-row path). Payloads are wrapped in a struct while they are collected,
+the map once and flattens the hits. At 100 TB the data side streams
+through executors with no shuffle and no join build beyond that one row.
+The lookup is not constant-time: Spark's map access scans the keys
+linearly, so each row costs O(depth x folders that hold directory
+files); the design assumes those folders are few. Several directory
+files in one folder are ordered by payload (``array_sort``), so the
+stack is deterministic and computed JVM-side (no Python in the row
+path). Payloads are wrapped in a struct while they are collected,
 because ``collect_list`` drops nulls and a null payload stays in the
 stack.
 """
@@ -93,14 +96,14 @@ def attach_parents(
             ).alias("_lookup")
         )
     )
-    ancestors = F.filter(
+    # one map lookup per ancestor; a folder with no directory file
+    # gives an empty stack, since flatten of any null element is null
+    none = F.array().cast(lookup.schema["_lookup"].dataType.valueType)
+    stacks = F.transform(
         _strict_ancestors(dir_of(F.col("path"))),
-        lambda d: F.map_contains_key(F.col("_lookup"), d),
+        lambda d: F.coalesce(F.col("_lookup")[d], none),
     )
-    parents = F.transform(
-        F.flatten(F.transform(ancestors, lambda d: F.col("_lookup")[d])),
-        lambda s: s["p"],
-    )
+    parents = F.transform(F.flatten(stacks), lambda s: s["p"])
     return (
         data_df.crossJoin(F.broadcast(lookup))
         .withColumn("parents", parents)

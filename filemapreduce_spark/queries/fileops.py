@@ -158,7 +158,9 @@ def parents_prefix_inheritance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the meta table is folders-sized (tiny) and folded
     into one broadcast folder → weights map; each document looks up
-    its ancestor folders in it — the big side never shuffles.
+    its ancestor folders in it — the big side never shuffles. Each
+    lookup scans the map's keys linearly, so a document costs
+    O(depth x meta folders), not a constant-time probe.
     """
     from filemapreduce_spark.core.parents import attach_parents
     from filemapreduce_spark.globs import MultiFilter

@@ -19,13 +19,31 @@ every file ``spark.sql.files.openCostInBytes`` (4 MB) on top of its
 length, so a tree of small files becomes many near-empty partitions,
 and every stage that reads the (shared, persisted) scan pays Spark's
 fixed per-task cost once per partition. ``read_files`` sizes the scan
-by the bytes the listing found instead:
-``n = max(defaultParallelism, ceil(total_bytes / maxPartitionBytes))``,
-applied as a no-shuffle ``coalesce(n)`` only when ``n`` is below the
-count Spark chose. The byte total is the relation's own size
+with Spark's own split-size rule (``FilePartition.maxSplitBytes``),
+applied to the bytes the listing found, without the per-file
+open-cost padding::
+
+    split = min(maxPartitionBytes,
+                max(openCostInBytes, ceil(bytes / defaultParallelism)))
+    n     = max(1, ceil(bytes / split))
+
+and applies ``n`` as a no-shuffle ``coalesce(n)`` only when it is
+below the count Spark chose. The byte total is the relation's own size
 statistic, taken from the listing Spark already made (no job, no
-second listing). Every core stays busy, and on large trees, where the
-byte need reaches Spark's own count, partitioning is unchanged.
+second listing). Trees of at least ``openCostInBytes x
+defaultParallelism`` (16 MB on 4 cores) get ``max(defaultParallelism,
+ceil(bytes / maxPartitionBytes))`` partitions: every core stays busy,
+and on large trees, where the byte need reaches Spark's own count,
+partitioning is unchanged. Smaller trees get ``ceil(bytes /
+openCostInBytes)`` partitions, so a tree of a few hundred KB is one
+partition. There is deliberately no ``defaultParallelism`` floor: by
+Spark's own reasoning a split carrying less than one file-open's worth
+of bytes costs more in per-task overhead than it wins in parallelism,
+so an expensive mapper over a few-MB tree runs in fewer tasks, the
+same trade-off Spark's file sources make. With one partition every
+distribution an operator requires is already met, so an
+order-insensitive reduce, the directory-file lookup and a partitioned
+write run with no exchange.
 
 Canonical schema: path STRING (relative, '/'-separated), content BINARY,
 length LONG, mod_time TIMESTAMP.
@@ -69,6 +87,17 @@ FILES_SCHEMA = T.StructType(
 WHOLE_FILE_LIMIT_BYTES = (1 << 31) - 1
 
 
+def scan_partitions(
+    total_bytes: int, parallelism: int, max_partition_bytes: int, open_cost: int
+) -> int:
+    """The split policy's partition count (module docstring): Spark's
+    ``FilePartition.maxSplitBytes`` over ``total_bytes``, without the
+    per-file open-cost padding."""
+    per_core = -(-total_bytes // parallelism)
+    split = min(max_partition_bytes, max(open_cost, per_core))
+    return max(1, -(-total_bytes // split))
+
+
 def read_files(
     spark: SparkSession,
     root: str,
@@ -81,10 +110,17 @@ def read_files(
     non-matching files are pruned at listing time (never opened); the
     full anchored regex is applied on the relative path for exactness.
 
-    Partitions: ``max(defaultParallelism, ceil(listed bytes /
-    spark.sql.files.maxPartitionBytes))`` when that is fewer than
-    Spark's file-count-driven split (a no-shuffle ``coalesce``);
-    otherwise Spark's own split. See the module docstring.
+    Partitions: Spark's split-size rule (``FilePartition.
+    maxSplitBytes``) over the listed bytes, ``n = max(1, ceil(bytes /
+    split))`` with ``split = min(maxPartitionBytes, max(
+    openCostInBytes, ceil(bytes / defaultParallelism)))``, when that
+    is fewer than Spark's file-count-driven split (a no-shuffle
+    ``coalesce``); otherwise Spark's own split. There is no
+    ``defaultParallelism`` floor: a tree below ``openCostInBytes x
+    defaultParallelism`` (16 MB on 4 cores) gets fewer partitions than
+    cores, down to one; larger trees get ``max(defaultParallelism,
+    ceil(bytes / maxPartitionBytes))``. An unknown size never
+    coalesces. See the module docstring.
 
     ``max_file_bytes`` (opt-in; costs one metadata-only listing job):
     fail fast with the offending paths if any matched file exceeds
@@ -138,11 +174,14 @@ def read_files(
                 f"straggler): {listing}. Use read_files_chunked for "
                 "oversized inputs."
             )
-    # split policy (module docstring); an unknown size (Long.MaxValue)
-    # needs more partitions than any scan has, so it changes nothing
-    max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    need = max(
-        spark.sparkContext.defaultParallelism, -(-listed_bytes // max_bytes)
+    # an unknown size (Long.MaxValue) needs more partitions than any
+    # scan has, so it changes nothing
+    conf = spark._jsparkSession.sessionState().conf()
+    need = scan_partitions(
+        listed_bytes,
+        spark.sparkContext.defaultParallelism,
+        conf.filesMaxPartitionBytes(),
+        conf.filesOpenCostInBytes(),
     )
     if need < df._jdf.rdd().getNumPartitions():
         df = df.coalesce(need)

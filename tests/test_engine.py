@@ -5,6 +5,8 @@ Each test reproduces a hard-coded golden value from
 through the Spark-native engine.
 """
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -281,11 +283,32 @@ def _partitions_job():
     return Job(name="n", finalizer=lambda df: df.rdd.getNumPartitions())
 
 
+def _write_tree(root, tree):
+    for rel, text in tree.items():
+        (root / rel).parent.mkdir(parents=True, exist_ok=True)
+        (root / rel).write_text(text)
+    return sum(len(t) for t in tree.values())
+
+
+@contextlib.contextmanager
+def _files_conf(spark, name, value):
+    """Set ``spark.sql.files.<name>`` for a block, then restore it."""
+    key = f"spark.sql.files.{name}"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(value))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_disk_scan_partitions_sized_by_bytes(spark, tmp_path):
-    """A disk scan gets max(defaultParallelism, ceil(bytes /
-    maxPartitionBytes)) partitions, not one per few files; the byte
-    total comes from the listing, with no Spark job; an explicit
-    files DF keeps its own partitioning."""
+    """A disk scan gets Spark's split-size rule over its listed bytes,
+    ``ceil(bytes / split)`` with ``split = min(maxPartitionBytes,
+    max(openCostInBytes, ceil(bytes / defaultParallelism)))``, not one
+    partition per few files: a tree far below one open cost per core
+    is one partition. The byte total comes from the listing, with no
+    Spark job; an explicit files DF keeps its own partitioning."""
     import math
 
     from filemapreduce_spark.sources.files import read_files
@@ -293,14 +316,9 @@ def test_disk_scan_partitions_sized_by_bytes(spark, tmp_path):
     tree = {
         f"d{i % 7}/s{i % 11}/f{i}.txt": "x" * (40 + i % 90) for i in range(300)
     }
-    for rel, text in tree.items():
-        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
-        (tmp_path / rel).write_text(text)
-    total = sum(len(t) for t in tree.values())
+    total = _write_tree(tmp_path, tree)
     sc = spark.sparkContext
     dp = sc.defaultParallelism
-    key = "spark.sql.files.maxPartitionBytes"
-    default_max = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
 
     sc.setJobGroup("read_files_listing", "read_files_listing")
     try:
@@ -311,19 +329,22 @@ def test_disk_scan_partitions_sized_by_bytes(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
 
     eng = FileEngine(spark, root=str(tmp_path))
-    need = math.ceil(total / default_max)
-    assert eng.run([_partitions_job()])["n"] == max(dp, need)
+    assert eng.run([_partitions_job()])["n"] == 1
 
     # a lowered maxPartitionBytes: never coalesced below the byte need
-    before = spark.conf.get(key)
     max_bytes = total // (dp + 8)
-    spark.conf.set(key, str(max_bytes))
-    try:
+    with _files_conf(spark, "maxPartitionBytes", max_bytes):
         need = math.ceil(total / max_bytes)
         assert need > dp
         assert eng.run([_partitions_job()])["n"] == need
-    finally:
-        spark.conf.set(key, before)
+
+    # an open cost of a third of the tree: the split is that cost (or
+    # one core's share of bytes, if larger)
+    cost = math.ceil(total / 3)
+    with _files_conf(spark, "openCostInBytes", cost):
+        n = eng.run([_partitions_job()])["n"]
+    assert n == math.ceil(total / max(cost, math.ceil(total / dp)))
+    assert n == 3 or dp < 3
 
     # an explicit files DF (size unknown to Spark) keeps its partitions
     files = {f"f{i}": "x" for i in range(300)}
@@ -334,6 +355,100 @@ def test_disk_scan_partitions_sized_by_bytes(spark, tmp_path):
     )
     wide = mem.repartition(3 * dp)
     assert FileEngine(spark, files_df=wide).run([_partitions_job()])["n"] == 3 * dp
+
+
+def test_scan_split_unchanged_from_open_cost_per_core(spark, tmp_path):
+    """Trees of at least ``openCostInBytes x defaultParallelism`` keep
+    ``max(defaultParallelism, ceil(bytes / maxPartitionBytes))``
+    partitions: the rule only narrows scans smaller than that."""
+    import math
+
+    from filemapreduce_spark.sources.files import scan_partitions
+
+    mb = 1 << 20
+    for cores in (1, 2, 3, 4, 7, 16, 64):
+        for max_bytes in (mb, 128 * mb):
+            for cost in (4 * mb, 64 * mb):
+                for total in (cost * cores, cost * cores + 1, 3 * cost * cores + 5,
+                              10**9 + 7, 10**12 + 3, 100 * 10**12):
+                    if total < cost * cores:
+                        continue
+                    assert scan_partitions(total, cores, max_bytes, cost) == max(
+                        cores, math.ceil(total / max_bytes)
+                    ), (total, cores, max_bytes, cost)
+    # and below the threshold: one partition per open cost
+    assert scan_partitions(120 * 1024, 4, 128 * mb, 4 * mb) == 1
+    assert scan_partitions(9 * mb, 4, 128 * mb, 4 * mb) == 3
+    assert scan_partitions(0, 4, 128 * mb, 4 * mb) == 1
+
+    # the same on a disk tree, with the open cost lowered so the tree
+    # is above the threshold
+    tree = {f"d{i % 5}/f{i}.txt": "y" * (60 + i % 70) for i in range(200)}
+    total = _write_tree(tmp_path, tree)
+    dp = spark.sparkContext.defaultParallelism
+    eng = FileEngine(spark, root=str(tmp_path))
+    with _files_conf(spark, "openCostInBytes", total // (2 * dp)):
+        assert eng.run([_partitions_job()])["n"] == dp
+        max_bytes = total // (dp + 5)
+        with _files_conf(spark, "maxPartitionBytes", max_bytes):
+            assert eng.run([_partitions_job()])["n"] == math.ceil(total / max_bytes)
+
+
+def test_one_partition_scan_reduces_without_exchange(spark, tmp_path):
+    """A scan of one partition meets every distribution a reduce needs,
+    so an order-insensitive reducer over the shared cache runs with no
+    Exchange; a scan split in two brings the Exchange back."""
+    tree = {f"k{i % 3}/f{i}.txt": str(i) for i in range(40)}
+    total = _write_tree(tmp_path, tree)
+
+    def executed_plan(df):
+        df.collect()
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    jobs = [
+        Job(
+            name="by_dir",
+            path_filter="**/*.txt",
+            loader="text",
+            mapper=lambda df: df.select(
+                F.regexp_extract("path", "^(k\\d)/", 1).alias("k"),
+                F.col("data").cast("long").alias("v"),
+            ),
+            reducer=lambda df: df.groupBy("k").agg(F.sum("v").alias("s")),
+            finalizer=executed_plan,
+        ),
+        _partitions_job(),
+    ]
+    eng = FileEngine(spark, root=str(tmp_path))
+    out = eng.run(jobs)
+    assert out["n"] == 1
+    assert "Exchange" not in out["by_dir"]
+
+    with _files_conf(spark, "openCostInBytes", total // 2):
+        out = eng.run(jobs)
+    assert out["n"] >= 2
+    assert "Exchange" in out["by_dir"]
+
+
+def test_run_keeps_callers_cache(spark):
+    """run() persists and releases only a files DF it cached itself:
+    a cache the caller made before run() is still there after it."""
+    from pyspark.storagelevel import StorageLevel
+
+    files = files_from_memory(spark, NUMBERS_TREE).cache()
+    try:
+        assert files.storageLevel != StorageLevel.NONE
+        out = FileEngine(spark, files_df=files).run(
+            [
+                Job(name="n", finalizer=lambda df: df.count()),
+                Job(name="txt", path_filter="**/*.txt",
+                    finalizer=lambda df: df.count()),
+            ]
+        )
+        assert out == {"n": 3, "txt": 3}
+        assert files.storageLevel != StorageLevel.NONE
+    finally:
+        files.unpersist()
 
 
 def test_scale_smoke_1000_files(spark):

@@ -33,7 +33,7 @@ Spark-native translation:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, replace
 from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -155,9 +155,6 @@ class FileEngine:
     spark: SparkSession
     root: str | None = None
     files_df: DataFrame | None = None
-    persist_level: StorageLevel = field(
-        default_factory=lambda: StorageLevel.MEMORY_AND_DISK
-    )
 
     @classmethod
     def from_memory(
@@ -260,9 +257,9 @@ class FileEngine:
         """Execute all jobs over a single shared scan.
 
         With more than one job, the canonical files DF — every file's
-        path, content bytes, length and mod time — is persisted at
-        ``persist_level`` so each file is read once no matter how many
-        jobs consume it (the reference's scan sharing, jobs.go:3-5);
+        path, content bytes, length and mod time — is persisted
+        ``MEMORY_AND_DISK`` so each file is read once no matter how
+        many jobs consume it (the reference's scan sharing, jobs.go:3-5);
         loaders run per job over the cached bytes. A ``files_df`` the
         caller already persisted is used as is and left cached. A disk
         root keeps ``read_files``' partitioning (Spark's split-size
@@ -291,7 +288,7 @@ class FileEngine:
         # released here
         owned = len(jobs) > 1 and files.storageLevel == StorageLevel.NONE
         if owned:
-            files = files.persist(self.persist_level)
+            files = files.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             results: dict[str, Any] = {}
             metrics: dict[str, dict[str, Any]] = {}

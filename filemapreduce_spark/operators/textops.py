@@ -2,7 +2,7 @@
 
 All built from JVM-side ``pyspark.sql.functions`` (no Python in the row
 path): tokenization, n-gram shingling, MinHash signatures, SimHash,
-token counting, quality stats, language-ID heuristic, fingerprints.
+token counting, language-ID marker words, fingerprints.
 
 Determinism: every hash is MD5 over explicit UTF-8 strings (identical
 in Spark and DuckDB), so each operator has an exact SQL oracle twin.
@@ -15,7 +15,7 @@ does its candidate generation via banded bucket self-join (shuffle on
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # A tiny function-word table per language for the lang-id heuristic.
@@ -101,51 +101,21 @@ SIMHASH_BITS = 60  # 15 md5 hex digits — fits in a signed 64-bit int
 SIMHASH_BANDS = 4  # 4 × 15-bit bands: hamming ≤ 3 ⟹ ≥1 band equal
 
 
-def word_hash60(w: Column) -> Column:
-    """First 60 bits of md5(word) as a BIGINT (15 hex digits)."""
-    return F.conv(F.substring(F.md5(w), 1, 15), 16, 10).cast("long")
-
-
-def simhash_from_word_hashes(df: DataFrame, doc_col: str, hash_col: str) -> DataFrame:
-    """(doc, word-hash) rows → (doc, simhash) with a 60-bit SimHash.
-
-    Bit i of the signature is set iff the ±1 majority vote of bit i
-    across the doc's word hashes is positive. Computed as explode(60
-    bits) → groupBy — two shuffles on (doc, bit) / (doc), fully
-    distributed, no per-row Python.
-    """
-    bits = df.select(
-        F.col(doc_col),
-        F.col(hash_col).alias("_h"),
-        F.explode(F.sequence(F.lit(0), F.lit(SIMHASH_BITS - 1))).alias("_i"),
-    ).select(
-        doc_col,
-        "_i",
-        F.expr("(shiftright(_h, _i) & 1) * 2 - 1").alias("_sign"),
-    )
-    votes = bits.groupBy(doc_col, "_i").agg(F.sum("_sign").alias("_s"))
-    return votes.groupBy(doc_col).agg(
-        F.sum(
-            F.when(
-                F.col("_s") > 0, F.expr("CAST(pow(2, _i) AS BIGINT)")
-            ).otherwise(F.lit(0))
-        ).alias("simhash")
-    )
-
-
 def simhash_from_words_expr(words_col: str) -> Column:
     """60-bit SimHash computed entirely per row (zero shuffles).
 
-    Same semantics as :func:`simhash_from_word_hashes` (verified
-    identical output) but as one JVM-side expression: hash each
+    Bit i of the signature is set iff the ±1 majority vote of bit i
+    across the hashes of the doc's distinct words (first 60 bits of
+    md5(word)) is positive. One JVM-side expression: hash each
     distinct word once, fold ±1 bit votes into a 60-slot accumulator
     array, then assemble the majority-vote bits into a BIGINT. SQL
     string because the Python HOF API can't express a variable shift
     amount (``shiftright(h, i)`` with lambda-bound ``i``).
 
-    Scale shape: the explode-based variant shuffles 60·W rows per doc
-    through two groupBys; this one touches no shuffle at all — the
-    signature is available wherever the document row already is.
+    Scale shape: an explode(60 bits) → groupBy form would shuffle
+    60·W rows per doc through two groupBys; this one touches no
+    shuffle at all — the signature is available wherever the document
+    row already is.
     """
     return F.expr(
         f"""
@@ -178,36 +148,6 @@ def simhash_bands(simhash: Column) -> Column:
             for b in range(SIMHASH_BANDS)
         ]
     )
-
-
-def quality_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document quality stats: token/char counts, ratios."""
-    ws = words(text_col)
-    return df.withColumns(
-        {
-            "n_tokens": F.size(ws).cast("long"),
-            "n_chars_calc": F.length(text_col).cast("long"),
-            "avg_token_len": (
-                F.aggregate(ws, F.lit(0).cast("long"), lambda a, w: a + F.length(w))
-                / F.greatest(F.size(ws), F.lit(1))
-            ).cast("double"),
-            "stopword_ratio": (
-                F.size(F.filter(ws, lambda w: w.isin(*STOPWORDS)))
-                / F.greatest(F.size(ws), F.lit(1))
-            ).cast("double"),
-            "uniq_token_ratio": (
-                F.size(F.array_distinct(ws)) / F.greatest(F.size(ws), F.lit(1))
-            ).cast("double"),
-        }
-    )
-
-
-def lang_scores(ws: Column) -> dict[str, Column]:
-    """Marker-word hit counts per language."""
-    return {
-        lang: F.size(F.filter(ws, lambda w: w.isin(*markers))).cast("long")
-        for lang, markers in LANG_MARKERS.items()
-    }
 
 
 def fingerprint(shingles: Column) -> Column:

@@ -134,13 +134,61 @@ def write_clustered(
     (contrast hash bucketing, which balances counts but scatters
     ranges across every file).
     """
-    cols = [df[c] for c in cluster_by]
+    _range_write(df, [df[c] for c in cluster_by], path, n_files, format, mode)
+
+
+def _range_write(df, keys, path, n_files, format, mode, drop=()) -> None:
+    """Range-partition ``df`` on ``keys``, sort within each partition,
+    drop the ``drop`` helper columns and write."""
     part = (
-        df.repartitionByRange(n_files, *cols)
+        df.repartitionByRange(n_files, *keys)
         if n_files
-        else df.repartitionByRange(*cols)
+        else df.repartitionByRange(*keys)
     )
-    part.sortWithinPartitions(*cols).write.mode(mode).format(format).save(path)
+    part.sortWithinPartitions(*keys).drop(*drop).write.mode(mode).format(
+        format
+    ).save(path)
+
+
+def _write_curve(
+    df, path, cluster_by, bits, curve, n_files, format, mode
+) -> None:
+    """Shared body of the two-column curve writers: min/max-scale each
+    cluster column to a ``bits``-bit cell coordinate, let ``curve(df,
+    x, y)`` add the cell's curve position ``__k``, then range-partition,
+    sort and write on it. Rows with a NULL in either cluster column get
+    the dedicated position -1 (before every real cell).
+
+    The min/max scaling pass is one cheap aggregate over the input. An
+    empty input (or an all-NULL cluster column) yields NULL min/max;
+    the bounds then default to [0, 1) and the write still produces a
+    valid (possibly empty) dataset.
+    """
+    from pyspark.sql import functions as F
+
+    c1, c2 = cluster_by
+    bounds = df.agg(
+        *(f(F.col(c).cast("double")) for c in cluster_by for f in (F.min, F.max))
+    ).collect()[0]
+    top = (1 << bits) - 1
+
+    def scaled(c, lo, hi):
+        if lo is None:
+            lo, hi = 0.0, 1.0  # empty input / all-NULL column
+        span = (hi - lo) or 1.0
+        return F.least(
+            F.lit(top),
+            F.floor((F.col(c).cast("double") - lo) * (top + 1) / span).cast(
+                "long"
+            ),
+        )
+
+    null = F.col(c1).isNull() | F.col(c2).isNull()
+    keyed = curve(df, scaled(c1, *bounds[:2]), scaled(c2, *bounds[2:]))
+    keyed = keyed.withColumn(
+        "__k", F.when(null, F.lit(-1).cast("long")).otherwise(F.col("__k"))
+    )
+    _range_write(keyed, ["__k"], path, n_files, format, mode, drop=["__k"])
 
 
 def _spread_bits_16(col):
@@ -164,12 +212,11 @@ def write_zordered(
     n_files: int | None = None,
     format: str = "parquet",
     mode: str = "overwrite",
-    bits: int = 16,
 ) -> None:
     """Write ``df`` clustered on the Z-ORDER (Morton) curve of TWO
-    numeric columns: each column is min/max-scaled to ``bits`` bits,
-    the bit patterns are interleaved, and rows are range-partitioned +
-    sorted by the interleaved key.
+    numeric columns: each column is min/max-scaled to 16 bits (what
+    ``_spread_bits_16`` spreads), the bit patterns are interleaved,
+    and rows are range-partitioned + sorted by the interleaved key.
 
     Where ``write_clustered`` gives perfect file skipping on ONE
     dimension (and none on the others), the Z-curve keeps every file's
@@ -177,8 +224,7 @@ def write_zordered(
     file-skipping layout (Delta OPTIMIZE ZORDER BY / Hudi z-order).
     Right choice when predicates hit either column alone.
 
-    The min/max scaling pass is one cheap aggregate over the input;
-    the interleave is pure integer codegen (no UDF). Ties in the
+    The interleave is pure integer codegen (no UDF). Ties in the
     z-value are broken arbitrarily within a file — irrelevant for
     skipping, which only reads footer min/max.
 
@@ -186,56 +232,15 @@ def write_zordered(
     the dedicated curve position -1 (before every real cell), so they
     cluster into their own leading file region instead of silently
     landing in the hottest corner cell and widening its min/max
-    stats. An empty input (or an all-NULL cluster column) yields NULL
-    min/max; the bounds default to [0, 1) and the write still
-    produces a valid (possibly empty) dataset.
+    stats. Empty inputs: see ``_write_curve``.
     """
     from pyspark.sql import functions as F
 
-    c1, c2 = cluster_by
-    lo1, hi1, lo2, hi2 = df.agg(
-        F.min(F.col(c1).cast("double")),
-        F.max(F.col(c1).cast("double")),
-        F.min(F.col(c2).cast("double")),
-        F.max(F.col(c2).cast("double")),
-    ).collect()[0]
-    if lo1 is None:
-        lo1, hi1 = 0.0, 1.0  # empty input / all-NULL column
-    if lo2 is None:
-        lo2, hi2 = 0.0, 1.0
-    top = (1 << bits) - 1
+    def curve(df, x, y):
+        z = F.shiftleft(_spread_bits_16(x), 1).bitwiseOR(_spread_bits_16(y))
+        return df.withColumn("__k", z)
 
-    def scaled(c, lo, hi):
-        span = (hi - lo) or 1.0
-        return F.least(
-            F.lit(top),
-            F.floor((F.col(c).cast("double") - lo) * (top + 1) / span).cast(
-                "long"
-            ),
-        )
-
-    z = F.when(
-        F.col(c1).isNull() | F.col(c2).isNull(), F.lit(-1).cast("long")
-    ).otherwise(
-        F.shiftleft(_spread_bits_16(scaled(c1, lo1, hi1)), 1).bitwiseOR(
-            _spread_bits_16(scaled(c2, lo2, hi2))
-        )
-    )
-    zdf = df.withColumn("__z", z)
-    part = (
-        zdf.repartitionByRange(n_files, "__z")
-        if n_files
-        else zdf.repartitionByRange("__z")
-    )
-    (
-        part.sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode(mode)
-        .format(format)
-        .save(path)
-    )
-
-
+    _write_curve(df, path, cluster_by, 16, curve, n_files, format, mode)
 
 
 def hilbert_xy2d(x, y, bits: int):
@@ -278,7 +283,6 @@ def write_hilbert(
     n_files: int | None = None,
     format: str = "parquet",
     mode: str = "overwrite",
-    bits: int = 8,
 ) -> None:
     """Write ``df`` clustered on the HILBERT curve of two numeric
     columns — the same multi-dimensional file-skipping contract as
@@ -289,7 +293,7 @@ def write_hilbert(
     Databricks liquid clustering and Iceberg's hilbert sort order).
 
     Cost shape: one min/max aggregate over the input; a driver-built
-    2^(2·bits)-row curve LUT (bits=8 → 65,536 rows ≈ 1 MB —
+    2^(2·8)-row curve LUT (8 bits per column → 65,536 rows ≈ 1 MB —
     config-bounded, data-independent) broadcast-joined on the
     quantized (x, y) cell; then the same range shuffle + local sort
     as z-order. No Python in the row path.
@@ -304,60 +308,29 @@ def write_hilbert(
     import pandas as pd
     from pyspark.sql import functions as F
 
-    c1, c2 = cluster_by
-    lo1, hi1, lo2, hi2 = df.agg(
-        F.min(F.col(c1).cast("double")),
-        F.max(F.col(c1).cast("double")),
-        F.min(F.col(c2).cast("double")),
-        F.max(F.col(c2).cast("double")),
-    ).collect()[0]
-    if lo1 is None:
-        lo1, hi1 = 0.0, 1.0  # empty input / all-NULL column
-    if lo2 is None:
-        lo2, hi2 = 0.0, 1.0
-    top = (1 << bits) - 1
-
-    def scaled(c, lo, hi):
-        span = (hi - lo) or 1.0
-        return F.least(
-            F.lit(top),
-            F.floor((F.col(c).cast("double") - lo) * (top + 1) / span).cast(
-                "long"
-            ),
-        )
-
+    bits = 8
     n = 1 << bits
     xs, ys = np.meshgrid(
         np.arange(n, dtype=np.int64), np.arange(n, dtype=np.int64),
         indexing="ij",
     )
-    lut = pd.DataFrame(
-        {
-            "__cell": (xs * n + ys).ravel(),
-            "__h": hilbert_xy2d(xs.ravel(), ys.ravel(), bits),
-        }
+    lut = df.sparkSession.createDataFrame(
+        pd.DataFrame(
+            {
+                "__cell": (xs * n + ys).ravel(),
+                "__k": hilbert_xy2d(xs.ravel(), ys.ravel(), bits),
+            }
+        )
     )
-    lut_df = df.sparkSession.createDataFrame(lut)
-    cell = F.when(
-        F.col(c1).isNull() | F.col(c2).isNull(), F.lit(-1).cast("long")
-    ).otherwise(scaled(c1, lo1, hi1) * n + scaled(c2, lo2, hi2))
-    # LEFT join: the NULL-key cell (-1) has no LUT row — those rows
-    # must survive the join and take curve position -1 via coalesce,
-    # not be dropped by an inner join.
-    hdf = (
-        df.withColumn("__cell", cell)
-        .join(F.broadcast(lut_df), "__cell", "left")
-        .withColumn("__h", F.coalesce("__h", F.lit(-1).cast("long")))
-    )
-    part = (
-        hdf.repartitionByRange(n_files, "__h")
-        if n_files
-        else hdf.repartitionByRange("__h")
-    )
-    (
-        part.sortWithinPartitions("__h")
-        .drop("__h", "__cell")
-        .write.mode(mode)
-        .format(format)
-        .save(path)
-    )
+
+    def curve(df, x, y):
+        # LEFT join: a row with a NULL cluster column has a NULL cell
+        # and no LUT row — it must survive the join and take curve
+        # position -1, not be dropped by an inner join.
+        return (
+            df.withColumn("__cell", x * n + y)
+            .join(F.broadcast(lut), "__cell", "left")
+            .drop("__cell")
+        )
+
+    _write_curve(df, path, cluster_by, bits, curve, n_files, format, mode)

@@ -225,19 +225,8 @@ def _list_via_pyarrow(
 
     if filesystem is not None:
         # injected handle (a configured S3FileSystem, a SubTree, an
-        # FSSpecHandler wrapper, ...): the root is a path WITHIN it.
-        # Validate the type HERE, at plan time (r9 advice): a raw
-        # fsspec filesystem passed without the PyFileSystem(
-        # FSSpecHandler(...)) wrapper would otherwise surface as an
-        # opaque AttributeError deep inside get_file_info.
-        if not isinstance(filesystem, pafs.FileSystem):
-            raise TypeError(
-                "read_files_chunked: filesystem must be a"
-                " pyarrow.fs.FileSystem (wrap fsspec filesystems in"
-                " pyarrow.fs.PyFileSystem(pyarrow.fs.FSSpecHandler("
-                f"fs))); got {type(filesystem).__module__}."
-                f"{type(filesystem).__qualname__}"
-            )
+        # FSSpecHandler wrapper, ...): the root is a path WITHIN it;
+        # read_files_chunked has checked its type
         fs, base = filesystem, root_uri
     else:
         try:
@@ -340,14 +329,17 @@ def read_files_chunked(
         import pyarrow.fs as pafs
 
         if not isinstance(filesystem, pafs.FileSystem):
-            # fail at plan time with the wrapper named, instead of deep
-            # inside get_file_info / task deserialization (a raw fsspec
-            # object is the likely mistake and its error is obscure)
+            # fail at plan time with the wrapper named, instead of as an
+            # opaque AttributeError deep inside get_file_info / task
+            # deserialization (a raw fsspec object passed without the
+            # PyFileSystem(FSSpecHandler(...)) wrapper is the likely
+            # mistake)
             raise TypeError(
                 "read_files_chunked: filesystem must be a"
                 " pyarrow.fs.FileSystem; wrap fsspec filesystems as"
                 " pyarrow.fs.PyFileSystem(pyarrow.fs.FSSpecHandler(fs))"
-                f" (got {type(filesystem).__name__})"
+                f" (got {type(filesystem).__module__}."
+                f"{type(filesystem).__qualname__})"
             )
 
     flt = as_filter(path_filter)

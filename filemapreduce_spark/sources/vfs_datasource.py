@@ -41,6 +41,12 @@ from pyspark.sql.datasource import (
 _N_PARTITIONS = 8
 
 
+def _row(path: str, text: str) -> tuple:
+    """One files-schema row; ``length`` is the content's BYTE length."""
+    content = text.encode("utf-8")
+    return (path, content, len(content), None)
+
+
 class _VfsReader(DataSourceReader):
     def __init__(self, options):
         self.manifest_path = options.get("manifest")
@@ -63,8 +69,7 @@ class _VfsReader(DataSourceReader):
             bucket = zlib.crc32(path.encode("utf-8")) % self.n_partitions
             if bucket != partition.value:
                 continue
-            content = manifest[path].encode("utf-8")
-            yield (path, content, len(content), None)
+            yield _row(path, manifest[path])
 
 
 class _VfsStreamReader(SimpleDataSourceStreamReader):
@@ -95,10 +100,7 @@ class _VfsStreamReader(SimpleDataSourceStreamReader):
     def _rows(self, paths, manifest):
         # a LIST, not a generator: the runtime pickles the batch for
         # its prefetch cache (replay between read and commit)
-        return [
-            (p, manifest[p].encode("utf-8"), len(manifest[p]), None)
-            for p in paths
-        ]
+        return [_row(p, manifest[p]) for p in paths]
 
     def read(self, start):
         manifest, paths = self._paths()

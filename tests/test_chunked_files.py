@@ -140,6 +140,20 @@ def test_chunked_unknown_scheme_fails_at_plan_time(spark):
     assert "foobar://" in str(ei.value)
 
 
+def test_chunked_rejects_non_pyarrow_filesystem(spark, tmp_path):
+    """A filesystem that is not a pyarrow.fs.FileSystem (e.g. a raw
+    fsspec object) fails at plan time, naming the wrapper to use."""
+
+    class FsspecLike:
+        def ls(self, path):
+            return []
+
+    with pytest.raises(TypeError) as ei:
+        read_files_chunked(spark, str(tmp_path), filesystem=FsspecLike())
+    assert "FSSpecHandler" in str(ei.value)
+    assert "FsspecLike" in str(ei.value)
+
+
 def test_chunked_respects_path_filter(spark, big_tree):
     df = read_files_chunked(
         spark, big_tree, path_filter="**/*.bin", chunk_bytes=64 << 20

@@ -1,7 +1,7 @@
 """Regression tests for the round-9 NULL-semantics catches.
 
-The adversarial fixtures that found these (scripts/null_fixture.py,
-scripts/skew_fixture.py) are ephemeral /tmp sweeps; these tests pin
+The adversarial fixtures that found these (the null_* and skew axes
+of scripts/fixtures.py) are ephemeral /tmp sweeps; these tests pin
 the OPERATOR-level fixes durably on tiny inline frames. Query-level
 declared semantics (the ts-IS-NOT-NULL filters etc.) are pinned by
 the oracle gates themselves — any drift breaks the driver compare.

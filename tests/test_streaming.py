@@ -197,7 +197,7 @@ def test_vfs_stream_source_incremental(spark, tmp_path):
 
     def run_once():
         q = (
-            stream.selectExpr("path", "length")
+            stream.selectExpr("path", "length", "octet_length(content) AS octets")
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
@@ -211,15 +211,18 @@ def test_vfs_stream_source_incremental(spark, tmp_path):
     got1 = sorted(r.path for r in spark.read.parquet(out).collect())
     assert got1 == ["a.txt", "b/b.txt"]
 
-    # append one file; a new run on the same checkpoint processes ONLY it
-    manifest.write_text(
-        json.dumps({"a.txt": "1", "b/b.txt": "22", "c.txt": "333"})
-    )
+    # append files; a new run on the same checkpoint processes ONLY them
+    entries = {"a.txt": "1", "b/b.txt": "22", "c.txt": "333", "d.txt": "é€😀"}
+    manifest.write_text(json.dumps(entries))
     run_once()
     rows = spark.read.parquet(out).collect()
-    assert sorted(r.path for r in rows) == ["a.txt", "b/b.txt", "c.txt"]
+    assert sorted(r.path for r in rows) == sorted(entries)
     # exactly-once: no row duplicated across the two runs
-    assert len(rows) == 3
+    assert len(rows) == 4
+    # length is the content's byte length, as in the batch reader and
+    # the files schema, also for non-ASCII content
+    assert all(r.length == r.octets for r in rows)
+    assert {r.path: r.length for r in rows}["d.txt"] == 9
 
 
 def test_streaming_partitioned_sink(spark, tmp_path):

@@ -15,7 +15,7 @@ does its candidate generation via banded bucket self-join (shuffle on
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # A tiny function-word table per language for the lang-id heuristic.
@@ -83,18 +83,51 @@ def token_count_regex(text_col: str) -> Column:
 
 def minhash_signature(shingles: Column, num_hashes: int = 8) -> Column:
     """Array of ``num_hashes`` MinHash values: for seed j, the lexical
-    min of md5(j || ':' || shingle). Empty shingle set → nulls."""
+    min of md5(j || ':' || shingle), as its 16 raw bytes (``unhex``).
+    Empty shingle set → nulls.
+
+    The min is taken over the md5 hex strings the DuckDB oracles
+    compare, and only the minima are unhexed, not every shingle's
+    hash: each minimum, band key and candidate pair is the hex form's,
+    at half the bytes. Equal-length lowercase hex sorts like the
+    unsigned bytes it spells, so the binary minima order as the hex
+    ones do.
+    """
     return F.array(
         *[
-            F.array_min(
-                F.transform(
-                    shingles,
-                    lambda s: F.md5(F.concat(F.lit(f"{j}:"), s)),
+            F.unhex(
+                F.array_min(
+                    F.transform(
+                        shingles,
+                        lambda s: F.md5(F.concat(F.lit(f"{j}:"), s)),
+                    )
                 )
             )
             for j in range(num_hashes)
         ]
     )
+
+
+def minhash_band_keys(df: DataFrame, id_col: str, n_bands: int = 4) -> DataFrame:
+    """(id_col, sig) → (id_col, band, key): one row per LSH band, the
+    key being the band's two minhashes concatenated in j order."""
+    return df.select(
+        id_col,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.concat(
+                            F.element_at("sig", 2 * b + 1),
+                            F.element_at("sig", 2 * b + 2),
+                        ).alias("key"),
+                    )
+                    for b in range(n_bands)
+                ]
+            )
+        ).alias("bk"),
+    ).select(id_col, "bk.band", "bk.key")
 
 
 SIMHASH_BITS = 60  # 15 md5 hex digits — fits in a signed 64-bit int

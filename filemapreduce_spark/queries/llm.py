@@ -19,6 +19,7 @@ from filemapreduce_spark.operators.textops import (
     STOPWORDS,
     TOKEN_REGEX,
     fingerprint,
+    minhash_band_keys,
     minhash_signature,
     simhash_bands,
     simhash_from_words_expr,
@@ -149,6 +150,17 @@ _MINHASH_ORACLE = """
 """.format(words=_SQL_WORDS, shingles=_SQL_SHINGLES3)
 
 
+def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, shingles): distinct 3-word shingles of every document
+    with at least 3 words — the MinHash-LSH family's input."""
+    d = t(spark, sf_dir, "documents").select(
+        "doc_id", words("text").alias("ws")
+    )
+    return d.filter(F.size("ws") >= 3).select(
+        "doc_id", word_shingles(F.col("ws"), 3).alias("shingles")
+    )
+
+
 @register(
     "neardup_minhash_lsh",
     _MINHASH_ORACLE,
@@ -165,49 +177,25 @@ def neardup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (band, band-key) — never an O(N²) cross join; a candidate needs
     TWO minhashes equal (one full band), so buckets stay small on
     non-duplicate corpora. The exact verify joins the (few) candidate
-    pairs back to the per-doc shingle arrays and uses array_intersect
-    row-locally — it only ever touches candidate pairs.
+    pairs back to per-doc shingle arrays and uses array_intersect
+    row-locally — it only ever touches candidate pairs. Only the
+    signature is cached; the verify recomputes the arrays from the
+    documents scan rather than pin O(corpus shingles) in memory.
     """
-    d = t(spark, sf_dir, "documents").select(
-        "doc_id", words("text").alias("ws")
-    )
-    d2 = d.filter(F.size("ws") >= 3).select(
-        "doc_id", word_shingles(F.col("ws"), 3).alias("shingles")
-    )
+    d2 = _doc_shingles(spark, sf_dir)
     # per-row signature: sig[j] = min over shingles of md5(j ':' s).
-    # Persisted because FOUR downstream plan branches read it (two
-    # band self-join sides, two verify-join sides) — without the cache
-    # the shingling + 8×md5 signature would be recomputed per branch.
+    # The one cache: (doc_id, sig), 8 × 16 bytes per doc. Both band
+    # self-join sides read it; without it the shingling + 8×md5 would
+    # run once per side. The shingle arrays are NOT cached: they are
+    # O(corpus shingles), and only the verify reads them.
     sig = d2.select(
-        "doc_id",
-        "shingles",
-        minhash_signature(F.col("shingles"), 8).alias("sig"),
+        "doc_id", minhash_signature(F.col("shingles"), 8).alias("sig")
     ).persist()
     # no eager count: plan construction (EXPLAIN, plan audits) stays
     # lazy; the cache fills on the first real action and later branches
     # read the cached partitions
-    d2 = sig.select("doc_id", "shingles")
-    # band key = the two minhashes of the band concatenated in j order
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bnd).alias("band"),
-                        F.concat(
-                            F.element_at("sig", 2 * bnd + 1),
-                            F.element_at("sig", 2 * bnd + 2),
-                        ).alias("key"),
-                    )
-                    for bnd in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.key")
-
-    a = bands.alias("a")
-    b = bands.alias("b")
+    bands = minhash_band_keys(sig, "doc_id")
+    a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
             b,
@@ -220,7 +208,9 @@ def neardup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    # exact verify: join candidates to shingle arrays, intersect row-locally
+    # exact verify: join candidates to shingle arrays recomputed row by
+    # row from the documents scan (one exchange, which AQE reuses for
+    # the second side), intersect row-locally
     sa = d2.select(
         F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
     )
@@ -1261,10 +1251,20 @@ def _lsh_class_graph(
     BOTH the clean bench (0.38→0.28 s warm at sf0.1) and the
     dup-saturated fixture (0.35→0.18 s).
 
-    Returns (doc_cls, classes, verified):
+    One cache: the collapsed frame (doc_id, rep, csize, sig), sig
+    set on representatives only. doc_cls and both band self-join
+    sides read it; without it each would re-run the words → shingles
+    → window pass over the corpus. It pins O(docs) narrow rows plus
+    one 128-byte signature per distinct content, and no shingle
+    arrays: the verify recomputes the reps' arrays row by row from
+    the documents scan and intersects them for candidate class pairs
+    only. Trade recorded: that recompute is one more words → shingles
+    pass over the corpus, measured at +0.3 to +0.6 s warm for
+    dedup_survivors_minhash at sf0.1 on 4 cores, against 15.5 → 1.1
+    MB cached.
+
+    Returns (doc_cls, verified):
       doc_cls: (doc_id, rep, csize) for shingle-eligible docs;
-      classes: persisted (rep, sh, sig), one row per distinct
-               shingle array;
       verified: (rep_a, rep_b, jaccard) class pairs, rep_a < rep_b,
                 sharing >= 1 LSH band with exact Jaccard >= 0.2
                 (jaccard rounded to 6 dp, the pair query's output
@@ -1274,69 +1274,36 @@ def _lsh_class_graph(
                 aggregation is duplicate-insensitive — min() — skip
                 the distinct exchange).
     """
-    from pyspark.sql import Window
-
-    d = t(spark, sf_dir, "documents").select(
-        "doc_id", words("text").alias("ws")
-    )
-    elig = (
-        d.filter(F.size("ws") >= 3)
-        .select("doc_id", word_shingles(F.col("ws"), 3).alias("sh"))
-        # xxhash64 prefix so the collapse exchange hashes/sorts on a
-        # cheap scalar first and only equal-hash rows compare arrays
-        .withColumn("h", F.xxhash64("sh"))
-    )
-    w0 = Window.partitionBy("h", "sh")
-    # persisted at THIS level: doc_cls and classes both derive from
-    # the collapsed frame; without the cache each branch re-runs the
-    # words→shingles→window pass over the corpus. Members carry a
-    # NULLed sh (only reps keep the payload), so the cached footprint
-    # is O(docs) narrow rows + O(distinct contents) payloads.
-    elig2 = (
+    sh = _doc_shingles(spark, sf_dir)
+    # xxhash64 prefix so the collapse exchange hashes/sorts on a cheap
+    # scalar first and only equal-hash rows compare arrays
+    elig = sh.withColumn("h", F.xxhash64("shingles"))
+    w0 = Window.partitionBy("h", "shingles")
+    # the signature is computed in the collapse pass itself, once per
+    # class (members get NULL), so the shingle arrays never reach the
+    # cache
+    cls = (
         elig.select(
             "doc_id",
             F.min("doc_id").over(w0).alias("rep"),
             F.count(F.lit(1)).over(w0).alias("csize"),
-            "sh",
+            "shingles",
         )
         .select(
             "doc_id",
             "rep",
             "csize",
-            F.when(F.col("doc_id") == F.col("rep"), F.col("sh")).alias(
-                "sh"
-            ),
+            F.when(
+                F.col("doc_id") == F.col("rep"),
+                minhash_signature(F.col("shingles"), 8),
+            ).alias("sig"),
         )
         .persist()
     )
-    doc_cls = elig2.select("doc_id", "rep", "csize")
-    # one row per distinct content; minhash signature computed ONCE.
-    # Persisted: the signature is read by BOTH band self-join sides
-    # and the shingle arrays by both verify sides.
-    classes = (
-        elig2.where(F.col("doc_id") == F.col("rep"))
-        .select("rep", "sh")
-        .withColumn("sig", minhash_signature(F.col("sh"), 8))
-        .persist()
+    doc_cls = cls.select("doc_id", "rep", "csize")
+    bands = minhash_band_keys(
+        cls.where(F.col("doc_id") == F.col("rep")).select("rep", "sig"), "rep"
     )
-    sig = classes.select("rep", "sig")
-    bands = sig.select(
-        "rep",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bnd).alias("band"),
-                        F.concat(
-                            F.element_at("sig", 2 * bnd + 1),
-                            F.element_at("sig", 2 * bnd + 2),
-                        ).alias("key"),
-                    )
-                    for bnd in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select("rep", "bk.band", "bk.key")
     a, b = bands.alias("a"), bands.alias("b")
     cand = a.join(
         b,
@@ -1346,8 +1313,10 @@ def _lsh_class_graph(
     ).select(F.col("a.rep").alias("rep_a"), F.col("b.rep").alias("rep_b"))
     if dedup_cand:
         cand = cand.distinct()
-    ca = classes.select(F.col("rep").alias("rep_a"), F.col("sh").alias("sh_a"))
-    cb = classes.select(F.col("rep").alias("rep_b"), F.col("sh").alias("sh_b"))
+    # a rep is a document: the verify recomputes its shingles from the
+    # documents scan
+    ca = sh.select(F.col("doc_id").alias("rep_a"), F.col("shingles").alias("sh_a"))
+    cb = sh.select(F.col("doc_id").alias("rep_b"), F.col("shingles").alias("sh_b"))
     n_common = F.size(F.array_intersect("sh_a", "sh_b"))
     jac = n_common.cast("double") / (
         F.size("sh_a") + F.size("sh_b") - n_common
@@ -1358,7 +1327,7 @@ def _lsh_class_graph(
         .filter(jac >= 0.2)
         .select("rep_a", "rep_b", F.round(jac, 6).alias("jaccard"))
     )
-    return doc_cls, classes, verified
+    return doc_cls, verified
 
 
 @register(
@@ -1388,7 +1357,7 @@ def dedup_survivors_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: dedup_cand=False — the only aggregation below is min(),
     # which is duplicate-insensitive, so the candidate-distinct
     # exchange is skipped
-    doc_cls, classes, verified = _lsh_class_graph(
+    doc_cls, verified = _lsh_class_graph(
         spark, sf_dir, dedup_cand=False
     )
     # min adjacent rep per class, adjacency made symmetric: doc b in
@@ -1424,13 +1393,13 @@ def dedup_survivors_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     docs = t(spark, sf_dir, "documents").select("doc_id", "source")
-    # classes stays persisted until the harness clearCache()/the
-    # consumer's cache_scope() — the returned plan references it
-    # lazily. No presentation orderBy (r12): the output is one row
-    # per surviving DOCUMENT — the range-exchange boundary sampling
-    # of a global sort re-executes the anti-join pipeline (result SET
-    # unchanged; the oracle twin keeps its ORDER BY; the harness
-    # compares order-insensitively).
+    # the class-graph cache stays persisted until the harness
+    # clearCache()/the consumer's cache_scope() — the returned plan
+    # references it lazily. No presentation orderBy (r12): the output
+    # is one row per surviving DOCUMENT — the range-exchange boundary
+    # sampling of a global sort re-executes the anti-join pipeline
+    # (result SET unchanged; the oracle twin keeps its ORDER BY; the
+    # harness compares order-insensitively).
     return docs.join(dropped, "doc_id", "left_anti")
 
 
@@ -1624,7 +1593,7 @@ def dedup_clusters_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy-min over the bounded class graph, localCheckpoint()ed so
     plan depth stays constant (large-star/small-star pattern).
     """
-    doc_cls, classes, verified = _lsh_class_graph(spark, sf_dir)
+    doc_cls, verified = _lsh_class_graph(spark, sf_dir)
     vp = verified.select("rep_a", "rep_b")
     edges = vp.union(
         vp.select(

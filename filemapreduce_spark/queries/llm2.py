@@ -21,9 +21,9 @@ from pyspark.sql import functions as F
 from filemapreduce_spark.operators.textops import (
     LANG_MARKERS,
     TOKEN_REGEX,
+    minhash_band_keys,
     minhash_signature,
     token_count_regex,
-    word_shingles,
     words,
 )
 from filemapreduce_spark.queries import register
@@ -31,30 +31,10 @@ from filemapreduce_spark.queries.llm import (
     _LANG_SCORE_SQL,
     _SQL_SHINGLES3,
     _SQL_WORDS,
+    _doc_shingles,
 )
 from filemapreduce_spark.queries.relational import t
 from filemapreduce_spark.sources.tables import table_rowcount
-
-
-def _band_keys(sig_df: DataFrame, n_bands: int = 4) -> DataFrame:
-    """(doc_id, sig) → (doc_id, band, key) with 2 minhashes per band."""
-    return sig_df.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat(
-                            F.element_at("sig", 2 * b + 1),
-                            F.element_at("sig", 2 * b + 2),
-                        ).alias("key"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.key")
 
 
 # --------------------------------------------------------------------
@@ -112,17 +92,18 @@ def neardup_incremental_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame
     included), and count_distinct collapses to an exact sum because
     classes partition the docs — one class-level bucket join plus a
     linear member join-back."""
-    d = t(spark, sf_dir, "documents").select("doc_id", words("text").alias("ws"))
-    elig = d.filter(F.size("ws") >= 3).select(
-        "doc_id", word_shingles(F.col("ws"), 3).alias("shingles")
-    ).withColumn("ckey", F.md5(F.to_json(F.col("shingles"))))
+    elig = _doc_shingles(spark, sf_dir).withColumn(
+        "ckey", F.md5(F.to_json(F.col("shingles")))
+    )
     # compact doc -> content-class map, persisted for the delta-side
     # join-back (without it every action re-shingles the corpus for
     # that branch)
     eligk = elig.select("doc_id", "ckey").persist()
     # one row per distinct content: signature + base-side member
-    # count. Persisted: the band build (both self-join sides) and the
-    # match-sum join-back read it.
+    # count, (ckey, base_cnt, sig) only. Persisted: the band build
+    # (both self-join sides) and the match-sum join-back read it. The
+    # shingle array feeds only the signature, so it is dropped before
+    # the cache.
     classes = (
         elig.groupBy("ckey")
         .agg(
@@ -131,12 +112,12 @@ def neardup_incremental_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame
             .cast("long")
             .alias("base_cnt"),
         )
-        .withColumn("sig", minhash_signature(F.col("shingles"), 8))
+        .select(
+            "ckey", "base_cnt", minhash_signature(F.col("shingles"), 8).alias("sig")
+        )
         .persist()
     )
-    bands = _band_keys(
-        classes.select(F.col("ckey").alias("doc_id"), "sig")
-    ).withColumnRenamed("doc_id", "ckey")
+    bands = minhash_band_keys(classes, "ckey")
     a, b = bands.alias("a"), bands.alias("b")
     # distinct class pairs sharing >= 1 band; self-pair included — a
     # delta doc's own class carries its base-side duplicates

@@ -547,7 +547,7 @@ def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from filemapreduce_spark.queries.llm import _lsh_class_graph
 
-    doc_cls, classes, verified = _lsh_class_graph(spark, sf_dir)
+    doc_cls, verified = _lsh_class_graph(spark, sf_dir)
     docs = t(spark, sf_dir, "documents").select("doc_id", "source")
     # per-(class, source) member counts — the whole doc-level input
     # compressed to |classes|×|sources| rows

@@ -83,7 +83,7 @@ def _ensure_conf(spark: SparkSession) -> None:
         "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
         # perf: the driver's runs are sf0.001/sf0.01 (~MB tables) —
         # 8 fat shuffle partitions beat core-count-many near-empty
-        # ones at that size (measured -26%; scripts/perf_ab.py)
+        # ones at that size (measured -26%; BASELINE.md round 3)
         "spark.sql.shuffle.partitions": "8",
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",

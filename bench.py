@@ -443,7 +443,7 @@ def main():
     # Size shuffle partitions to the data, not the core count: at
     # sf<=0.1 every shuffled table is ~10 MB, so a few fat partitions
     # beat 32 near-empty ones (8 vs 32 measured -26% total,
-    # scripts/perf_ab.py; 4 vs 8 measured better ratio_total in all
+    # BASELINE.md round 3; 4 vs 8 measured better ratio_total in all
     # three round-4 paired runs — 0.94/1.35/1.46 vs 1.29/1.64/1.73 —
     # the floor-bound sub-second queries pay per-task scheduling 2x
     # less and nothing at this volume needs more than 4 reducers).

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from filemapreduce_spark.globs import MultiFilter, PathFilter, compile_glob
 from filemapreduce_spark.queries import register
-from filemapreduce_spark.queries.relational import t
+from filemapreduce_spark.sources.tables import load_table as t
 
 _GLOB = "src1*/*.txt"
 _REGEX = compile_glob(_GLOB)  # ^src1[^/]*/[^/]*\.txt$

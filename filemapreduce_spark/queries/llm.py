@@ -36,7 +36,7 @@ from filemapreduce_spark.operators.vectors import (
 )
 from filemapreduce_spark.operators.output import one_part_sorted, tiny_sorted
 from filemapreduce_spark.queries import register
-from filemapreduce_spark.queries.relational import t
+from filemapreduce_spark.sources.tables import load_table as t
 
 # DuckDB fragments mirroring operators.textops
 _SQL_WORDS = "list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+'), w -> w != '')"

@@ -33,8 +33,7 @@ from filemapreduce_spark.queries.llm import (
     _SQL_WORDS,
     _doc_shingles,
 )
-from filemapreduce_spark.queries.relational import t
-from filemapreduce_spark.sources.tables import table_rowcount
+from filemapreduce_spark.sources.tables import load_table as t, table_rowcount
 
 
 # --------------------------------------------------------------------

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from filemapreduce_spark.queries import register
-from filemapreduce_spark.queries.relational import t
+from filemapreduce_spark.sources.tables import load_table as t
 
 # Temp dirs (stream-source symlink dirs, checkpoint dirs) live only as
 # long as the bounded query that uses them: _run_to_memory deletes them

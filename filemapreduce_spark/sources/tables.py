@@ -7,8 +7,6 @@ scan and the query plan.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,42 +33,25 @@ TABLE_NAMES = (
 _COMPUTE_HEAVY = {"documents", "embeddings"}
 
 
-def _input_layout(spark: SparkSession, path: str) -> tuple[int, int]:
-    """(file count, total bytes) under ``path`` via the Hadoop FS API
-    (metadata only — no job run)."""
+def _file_count(spark: SparkSession, path: str) -> int:
+    """Data files under ``path`` via the Hadoop FS API (metadata only —
+    no job run)."""
     try:
         jvm = spark.sparkContext._jvm
         jsc = spark.sparkContext._jsc
         conf = jsc.hadoopConfiguration()
         p = jvm.org.apache.hadoop.fs.Path(path)
         fs = p.getFileSystem(conf)
-        if not fs.exists(p):
-            return 1, 0
-        status = fs.getFileStatus(p)
-        if status.isFile():
-            return 1, status.getLen()
-        n = size = 0
-        for s in fs.listStatus(p):
-            if s.isFile() and not s.getPath().getName().startswith(("_", ".")):
-                n += 1
-                size += s.getLen()
-        return max(n, 1), size
+        if not fs.exists(p) or fs.getFileStatus(p).isFile():
+            return 1
+        n = sum(
+            1
+            for s in fs.listStatus(p)
+            if s.isFile() and not s.getPath().getName().startswith(("_", "."))
+        )
+        return max(n, 1)
     except Exception:
-        return 1, 0
-
-
-# Size-based splitting of RELATIONAL tables was measured and
-# rejected: an A/B at sf0.1 showed repartitioning lineitem (10.8 MB,
-# single row group) REGRESSED the heavy join/agg queries (q8 +0.77 s,
-# q9 +0.71 s, q17 +0.69 s, total 22.5 s → 28.5 s) — the single-task
-# scan is cheap at this size and the extra exchange breaks the
-# scan→partial-agg pipelining that whole-stage codegen gives for
-# free. Only the per-row compute-heavy tables (hashing/shingling/
-# vector folds) benefit from a pre-split; the knob stays for
-# experiments at other scales.
-_SPLIT_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SPLIT_MIN_BYTES", str(1 << 60))
-)
+        return 1
 
 
 # Analyzed-DataFrame cache. The test tables are immutable, but every
@@ -122,23 +103,25 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
         df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz})
     # Single-row-group test files give Spark ONE scan task no matter
     # what maxPartitionBytes says, serializing everything downstream.
-    # Split when the input is under-parallelized AND either the table's
-    # queries are per-row compute-heavy (hashing/shingling — worth it
-    # at any size) or the file is big enough that the serialized scan
-    # outweighs one cheap exchange. Decided from filesystem metadata
-    # (no .rdd probe — that forces physical planning in the timed
-    # path); real multi-file datasets already split fine and skip this.
-    target = max(8, spark.sparkContext.defaultParallelism // 2)
-    n_files, n_bytes = _input_layout(spark, f"{sf_dir}/{name}.parquet")
-    if n_files < target and (
-        name in _COMPUTE_HEAVY or n_bytes >= _SPLIT_MIN_BYTES
-    ):
-        # round-robin split so the downstream expressions use every
-        # core; the shuffled payload is just the raw rows. Half the
-        # core count, floor 8: measured sweet spot between per-task
-        # overhead and per-row cost (16-way beats both 1-way, 68s,
-        # and 32-way, 8.5s vs 6.0s, for the minhash pipeline).
-        df = df.repartition(target)
+    # Split the per-row compute-heavy tables (hashing/shingling — worth
+    # it at any size) when the input is under-parallelized. Decided
+    # from filesystem metadata (no .rdd probe — that forces physical
+    # planning in the timed path); real multi-file datasets already
+    # split fine and skip this. Relational tables are never split:
+    # an A/B at sf0.1 showed repartitioning lineitem (10.8 MB, single
+    # row group) REGRESSED the heavy join/agg queries (q8 +0.77 s,
+    # q9 +0.71 s, q17 +0.69 s, total 22.5 s → 28.5 s) — the single-
+    # task scan is cheap at this size and the extra exchange breaks
+    # the scan→partial-agg pipelining of whole-stage codegen.
+    if name in _COMPUTE_HEAVY:
+        target = max(8, spark.sparkContext.defaultParallelism // 2)
+        if _file_count(spark, f"{sf_dir}/{name}.parquet") < target:
+            # round-robin split so the downstream expressions use every
+            # core; the shuffled payload is just the raw rows. Half the
+            # core count, floor 8: measured sweet spot between per-task
+            # overhead and per-row cost (16-way beats both 1-way, 68s,
+            # and 32-way, 8.5s vs 6.0s, for the minhash pipeline).
+            df = df.repartition(target)
     return df
 
 

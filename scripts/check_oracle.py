@@ -3,31 +3,43 @@
 Spark AND its DuckDB oracle on the same parquet tables; compare row
 count, sorted column names, and canonicalized values.
 
+This module is also the one compare every oracle sweep uses
+(driver_sim, confrestricted_sweep, idempotence_sweep): the value canon
+(``canon``/``rows_to_canon``), the DuckDB views (``oracle_views``), the
+result diff (``compare``) and the per-query loop (``sweep``).
+
 Usage: python scripts/check_oracle.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import datetime
 import math
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
+import numpy as np
 
 from filemapreduce_spark.queries import load_all
 from filemapreduce_spark.session import get_spark
-
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
+from filemapreduce_spark.sources.tables import TABLE_NAMES
 
 
 def canon(v):
-    """Canonicalize a value for cross-engine comparison."""
+    """Canonicalize a value for cross-engine comparison.
+
+    Takes what ``collect()``, DuckDB's ``fetchall()`` and pandas frames
+    hold: numpy scalars and arrays become Python values, NULL and NaT
+    render as ``NULL`` (NaN stays distinct), floats at full precision,
+    datetimes to the microsecond (the fraction shown only when nonzero).
+    """
+    if isinstance(v, (np.generic, np.ndarray)):
+        v = v.tolist()
     if v is None:
         return "NULL"
     if isinstance(v, bool):
@@ -38,10 +50,11 @@ def canon(v):
         return repr(v)  # full precision — exact match required
     if isinstance(v, (list, tuple)):
         return "[" + ",".join(canon(x) for x in v) + "]"
-    import datetime
-
     if isinstance(v, datetime.datetime):
-        return v.strftime("%Y-%m-%d %H:%M:%S")
+        if v != v:  # pandas NaT
+            return "NULL"
+        s = v.strftime("%Y-%m-%d %H:%M:%S")
+        return f"{s}.{v.microsecond:06d}" if v.microsecond else s
     if isinstance(v, datetime.date):
         return v.isoformat()
     return str(v)
@@ -60,79 +73,107 @@ def main():
 
     registry = load_all()
     spark = get_spark(app_name="check_oracle")
+    con = oracle_views(sf_dir)
 
+    def run(name):
+        sdf = registry[name].fn(spark, sf_dir)
+        return Rows(sdf.columns, (tuple(r) for r in sdf.collect()))
+
+    def reference(name):
+        if registry[name].oracle is None:
+            return None
+        res = con.execute(registry[name].oracle)
+        return Rows([d[0] for d in res.description], res.fetchall())
+
+    return sweep(spark, sorted(registry), only, run, reference, compare)
+
+
+class Rows(list):
+    """A result's rows (tuples) with its column names."""
+
+    def __init__(self, cols, rows):
+        super().__init__(rows)
+        self.cols = list(cols)
+
+
+def compare(a: Rows, b: Rows, labels=("spark", "oracle")) -> list[str]:
+    """What differs between two results under the canon: column names,
+    then row count, then values (the first differing row's first
+    differing column is shown). Empty when they agree."""
+    (ac, av), (bc, bv) = rows_to_canon(a.cols, a), rows_to_canon(b.cols, b)
+    la, lb = labels
+    if ac != bc:
+        return [f"COLS {la}={ac} {lb}={bc}"]
+    if len(av) != len(bv):
+        return [f"ROWS {la}={len(av)} {lb}={len(bv)}"]
+    bad = [(x, y) for x, y in zip(av, bv) if x != y]
+    if not bad:
+        return []
+    x, y = bad[0]
+    j = next(j for j in range(len(x)) if x[j] != y[j])
+    return [
+        f"VALUE {len(bad)}/{len(av)} rows; first {ac[j]}: "
+        f"{la}={x[j]!r} {lb}={y[j]!r}"
+    ]
+
+
+def oracle_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per table of ``sf_dir``."""
     con = duckdb.connect()
-    for name in TABLES:
+    for name in TABLE_NAMES:
         con.execute(
             f"CREATE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'"
         )
+    return con
 
-    n_pass = n_fail = n_rows_only = 0
-    failures = []
-    for name, spec in sorted(registry.items()):
+
+def sweep(spark, names, only, run, reference, diff, ok="PASS", flag="FAIL"):
+    """Check each query of ``names`` (those in ``only``, if given) and
+    print one status line per query and a summary; return the exit
+    code, 1 if any query was flagged.
+
+    Per query: clear the cache (queries never unpersist what they
+    persist, so a registry-long session would pile it up), ``run`` it,
+    fetch its ``reference`` (None: no oracle, the rows are only
+    counted) and ``diff`` the two into a list of issues. An exception
+    on either side flags the query and prints its traceback.
+    """
+    flagged, n_ok, n_rows_only, t_all = [], 0, 0, time.time()
+    for name in names:
         if only and name not in only:
             continue
-        spark.catalog.clearCache()  # bound per-query persist residue
+        spark.catalog.clearCache()
         t0 = time.time()
         try:
-            sdf = spec.fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
+            got = run(name)
+            t_run = time.time() - t0
+            want = reference(name)
+            issues = None if want is None else diff(got, want)
         except Exception:
-            print(f"FAIL {name}: SPARK ERROR")
+            print(f"{flag:<9} {name}: ERROR")
             traceback.print_exc()
-            n_fail += 1
-            failures.append(name)
+            flagged.append(name)
             continue
-
-        if spec.oracle is None:
-            print(
-                f"rows-only {name}: {len(srows)} rows, "
-                f"{len(scols)} cols  [{time.time()-t0:.1f}s]"
-            )
+        if issues is None:
+            status = "rows-only"
             n_rows_only += 1
-            continue
-
-        try:
-            res = con.execute(spec.oracle)
-            ocols = [d[0] for d in res.description]
-            orows = res.fetchall()
-        except Exception:
-            print(f"FAIL {name}: ORACLE SQL ERROR")
-            traceback.print_exc()
-            n_fail += 1
-            failures.append(name)
-            continue
-
-        sc, sv = rows_to_canon(scols, srows)
-        oc, ov = rows_to_canon(ocols, orows)
-        msgs = []
-        if len(srows) != len(orows):
-            msgs.append(f"rowcount spark={len(srows)} oracle={len(orows)}")
-        if sc != oc:
-            msgs.append(f"cols spark={sc} oracle={oc}")
-        if not msgs and sv != ov:
-            ndiff = sum(1 for a, b in zip(sv, ov) if a != b)
-            msgs.append(f"values differ in {ndiff}/{len(sv)} rows")
-            for a, b in list(zip(sv, ov))[:2000]:
-                if a != b:
-                    msgs.append(f"  spark : {a}\n  oracle: {b}")
-                    break
-        if msgs:
-            print(f"FAIL {name}: " + "; ".join(msgs))
-            n_fail += 1
-            failures.append(name)
+        elif issues:
+            status = flag
+            flagged.append(name)
         else:
-            print(
-                f"PASS {name}: {len(srows)} rows  [{time.time()-t0:.1f}s]"
-            )
-            n_pass += 1
-
+            status = ok
+            n_ok += 1
+        print(
+            f"{status:<9} {name}: {len(got)} rows  [{t_run:.1f}s]"
+            + "".join("\n    " + m for m in issues or ())
+        )
     print(
-        f"\n{n_pass} pass, {n_rows_only} rows-only, {n_fail} fail"
-        + (f"  FAILURES: {failures}" if failures else "")
+        f"\n{n_ok} {ok}, {n_rows_only} rows-only, {len(flagged)} {flag}"
+        f"  [{time.time() - t_all:.0f}s]"
     )
-    return 1 if n_fail else 0
+    if flagged:
+        print(f"FLAGGED ({len(flagged)}): {flagged}")
+    return 1 if flagged else 0
 
 
 if __name__ == "__main__":

@@ -8,7 +8,7 @@ are applied (UTC timezone; nanos-as-long for events.parquet — without
 them the timestamp columns themselves read differently, which is a
 data-format matter, not tuning). Queries are taken straight from the
 registry (not the __spark_entry__ wrapper, whose _ensure_conf would
-re-apply the perf confs).
+re-apply the perf confs). The compare is driver_sim's.
 
 Usage: python scripts/confrestricted_sweep.py [sf_dir] [query ...]
 Exit 0 = all strict dtype+value compares pass.
@@ -18,15 +18,10 @@ from __future__ import annotations
 
 import os
 import sys
-import time
-import traceback
 
-sys.path.insert(0, "/root/repo")
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import duckdb  # noqa: E402
-
-from driver_sim import TABLES, has_lists, sort_frame  # noqa: E402
+from driver_sim import sweep_frames  # noqa: E402
 
 
 def main():
@@ -51,54 +46,11 @@ def main():
     )
 
     reg = load_all()
-    con = duckdb.connect()
-    for name in TABLES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'"
-        )
-
-    flagged = []
-    n = 0
-    t0_all = time.time()
-    for name, spec in sorted(reg.items()):
-        if only and name not in only:
-            continue
-        n += 1
-        spark.catalog.clearCache()  # bound per-query persist residue
-        try:
-            spdf = spec.fn(spark, sf_dir).toPandas()
-        except Exception:
-            print(f"SPARK-ERR {name}")
-            traceback.print_exc()
-            flagged.append(name)
-            continue
-        if spec.oracle is None:
-            print(f"rows-only  {name}: {len(spdf)} rows")
-            continue
-        opdf = con.execute(spec.oracle).df()
-        issues = []
-        if sorted(spdf.columns) != sorted(opdf.columns):
-            issues.append("COLS")
-        elif len(spdf) != len(opdf):
-            issues.append(f"ROWS {len(spdf)} vs {len(opdf)}")
-        else:
-            s, o = sort_frame(spdf), sort_frame(opdf)
-            if [str(s[c].dtype) for c in s.columns] != [
-                str(o[c].dtype) for c in o.columns
-            ]:
-                issues.append("DTYPE")
-            if not s.astype(str).equals(o.astype(str)):
-                issues.append("VALUE")
-        if issues or has_lists(spdf):
-            print(f"FLAG       {name}: {issues}")
-            flagged.append(name)
-        else:
-            print(f"OK         {name}: {len(spdf)} rows")
-
-    print(f"\ntotal {time.time() - t0_all:.0f}s over {n} queries")
-    if flagged:
-        print(f"FLAGGED ({len(flagged)}): {flagged}")
-    return 1 if flagged else 0
+    return sweep_frames(
+        spark, sf_dir, only,
+        {name: spec.fn for name, spec in reg.items()},
+        {name: spec.oracle for name, spec in reg.items()},
+    )
 
 
 if __name__ == "__main__":

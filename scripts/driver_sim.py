@@ -5,15 +5,17 @@ The driver converts both the Spark result and the DuckDB oracle result
 to pandas, canonicalizes (sort columns by name, sort rows), and hashes
 values. Its exact canon is unknown, so this simulator enforces the
 strongest condition that guarantees any sane canon agrees: the two
-pandas frames must match in BOTH dtype and exact value.
+pandas frames must match in BOTH dtype and exact value (the value
+canon is check_oracle's ``rows_to_canon``).
 
-Per query it reports:
-  OK            — dtypes equal and values exactly equal
+Per query it reports OK (dtypes equal and values exactly equal) or
+FLAG with what was found:
   DTYPE         — column dtype mismatch (e.g. int64 vs float64)
-  VALUE         — same dtypes, values differ (shows first diff)
+  COLS, ROWS, VALUE — column names, row count or values differ
+                  (VALUE shows the first diff)
   ARRAY-RISK    — an output column holds list values (driver canon
                   crashes with `unhashable type: 'list'`)
-  SPARK/ORACLE ERROR — query raised
+  ERROR         — the query or its oracle raised
 plus wall time for the Spark side (driver-budget profiling).
 
 Usage: python scripts/driver_sim.py [sf_dir] [query ...]
@@ -21,20 +23,16 @@ Usage: python scripts/driver_sim.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
-import time
-import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import duckdb
-import numpy as np
-import pandas as pd
+import numpy as np  # noqa: E402
+import pandas as pd  # noqa: E402
 
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
+from check_oracle import Rows, compare, oracle_views, sweep  # noqa: E402
 
 
 def build_driver_like_session():
@@ -44,8 +42,6 @@ def build_driver_like_session():
     under a different core count proves no output depends on
     partitioning (summation order, partition-local tie-breaks).
     """
-    import os
-
     from pyspark.sql import SparkSession
 
     return (
@@ -59,23 +55,21 @@ def build_driver_like_session():
     )
 
 
-def sort_frame(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)]
-    if df.empty:
-        return df.reset_index(drop=True)
-    # vectorized row sort, one key per column (lexsort, last key is
-    # primary). The previous canon concatenated the stringified
-    # columns with a '\x00' separator — pandas str.cat silently DROPS
-    # the NUL, so rows like (1, 414) and (14, 14) collided to the key
-    # '1414' and the stable sort fell back to INPUT order, false-
-    # flagging value-identical frames whenever the two engines emit
-    # rows in different orders (exposed in r12 when presentation
-    # sorts were removed from set-valued outputs). Per-column keys
-    # cannot collide across column boundaries.
-    s = df.astype(str)
-    cols = list(s.columns)
-    order = np.lexsort([s[c].to_numpy() for c in reversed(cols)])
-    return df.iloc[order].reset_index(drop=True)
+def strict_diff(a: pd.DataFrame, b: pd.DataFrame, labels=("spark", "oracle")):
+    """check_oracle's ``compare`` on two pandas frames, plus equal dtypes
+    column by column."""
+    issues = []
+    if sorted(a.columns) == sorted(b.columns):
+        la, lb = labels
+        mis = [
+            f"{c}: {la}={a[c].dtype} {lb}={b[c].dtype}"
+            for c in sorted(a.columns)
+            if str(a[c].dtype) != str(b[c].dtype)
+        ]
+        if mis:
+            issues.append("DTYPE " + "; ".join(mis))
+    rows = [Rows(f.columns, f.itertuples(index=False, name=None)) for f in (a, b)]
+    return issues + compare(*rows, labels)
 
 
 def has_lists(df: pd.DataFrame) -> list[str]:
@@ -90,118 +84,37 @@ def has_lists(df: pd.DataFrame) -> list[str]:
     return bad
 
 
+def sweep_frames(spark, sf_dir, only, queries, oracles):
+    """Each query's ``toPandas()`` against its oracle's DuckDB ``.df()``:
+    ``strict_diff`` plus the ARRAY-RISK flag."""
+    con = oracle_views(sf_dir)
+
+    def reference(name):
+        sql = oracles.get(name)
+        return None if sql is None else con.execute(sql).df()
+
+    def diff(s, o):
+        arr = sorted(set(has_lists(s)) | set(has_lists(o)))
+        risk = [f"ARRAY-RISK cols={arr}"] if arr else []
+        return risk + strict_diff(s, o)
+
+    return sweep(
+        spark, sorted(queries), only,
+        lambda name: queries[name](spark, sf_dir).toPandas(),
+        reference, diff, ok="OK", flag="FLAG",
+    )
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entrymod
 
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-
     spark = build_driver_like_session()
-
-    con = duckdb.connect()
-    for name in TABLES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'"
-        )
-
-    results = {}
-    t_total0 = time.time()
-    for name, fn in sorted(qs.items()):
-        if only and name not in only:
-            continue
-        # bound cache growth across a full-registry sweep: per-query
-        # persists are never unpersisted by the queries themselves, so
-        # a 375-query session would otherwise accumulate MEMORY_AND_
-        # DISK spill for hours (round-6 advice item)
-        spark.catalog.clearCache()
-        t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir)
-            spdf = sdf.toPandas()
-        except Exception:
-            dt = time.time() - t0
-            print(f"SPARK-ERR   {name}  [{dt:.1f}s]")
-            traceback.print_exc()
-            results[name] = ("SPARK-ERR", dt)
-            continue
-        t_spark = time.time() - t0
-
-        sql = oracles.get(name)
-        if sql is None:
-            print(f"rows-only   {name}: {len(spdf)} rows  [{t_spark:.1f}s]")
-            results[name] = ("rows-only", t_spark)
-            continue
-
-        try:
-            opdf = con.execute(sql).df()
-        except Exception:
-            print(f"ORACLE-ERR  {name}")
-            traceback.print_exc()
-            results[name] = ("ORACLE-ERR", t_spark)
-            continue
-
-        issues = []
-        arr_cols = sorted(set(has_lists(spdf)) | set(has_lists(opdf)))
-        if arr_cols:
-            issues.append(f"ARRAY-RISK cols={arr_cols}")
-
-        if sorted(spdf.columns) != sorted(opdf.columns):
-            issues.append(
-                f"COLS spark={sorted(spdf.columns)} "
-                f"oracle={sorted(opdf.columns)}"
-            )
-        elif len(spdf) != len(opdf):
-            issues.append(f"ROWS spark={len(spdf)} oracle={len(opdf)}")
-        else:
-            s = spdf[sorted(spdf.columns)]
-            o = opdf[sorted(opdf.columns)]
-            dt_mis = [
-                f"{c}: spark={s[c].dtype} oracle={o[c].dtype}"
-                for c in s.columns
-                if str(s[c].dtype) != str(o[c].dtype)
-            ]
-            if dt_mis:
-                issues.append("DTYPE " + "; ".join(dt_mis))
-            # value check on string canon (survives dtype gaps; flags
-            # anything whose rendering differs)
-            try:
-                sv = sort_frame(spdf).astype(str)
-                ov = sort_frame(opdf).astype(str)
-                if not sv.equals(ov):
-                    neq = (sv != ov).any(axis=1)
-                    i = int(np.argmax(neq.to_numpy()))
-                    cols_bad = [
-                        c for c in sv.columns if sv[c].iloc[i] != ov[c].iloc[i]
-                    ]
-                    c0 = cols_bad[0]
-                    issues.append(
-                        f"VALUE {int(neq.sum())}/{len(sv)} rows; first "
-                        f"{c0}: spark={sv[c0].iloc[i]!r} "
-                        f"oracle={ov[c0].iloc[i]!r}"
-                    )
-            except Exception as e:
-                issues.append(f"CANON-CRASH {type(e).__name__}: {e}")
-
-        status = "OK" if not issues else "FLAG"
-        print(
-            f"{status:<11} {name}: {len(spdf)} rows  [{t_spark:.1f}s]"
-            + ("".join("\n    " + m for m in issues) if issues else "")
-        )
-        results[name] = (status, t_spark, issues)
-
-    t_total = time.time() - t_total0
-    flagged = [n for n, r in results.items() if r[0] not in ("OK", "rows-only")]
-    slow = sorted(results.items(), key=lambda kv: -kv[1][1])[:15]
-    print(f"\ntotal {t_total:.0f}s over {len(results)} queries")
-    print("slowest:")
-    for n, r in slow:
-        print(f"  {r[1]:6.1f}s  {n}")
-    if flagged:
-        print(f"\nFLAGGED ({len(flagged)}): {flagged}")
-    return 1 if flagged else 0
+    return sweep_frames(
+        spark, sf_dir, only, entrymod.queries(), entrymod.oracle_sql()
+    )
 
 
 if __name__ == "__main__":

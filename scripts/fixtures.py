@@ -41,13 +41,12 @@ import sys
 
 import duckdb
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from filemapreduce_spark.sources.tables import TABLE_NAMES as TABLES  # noqa: E402
+
 TESTDATA = "/root/testdata"
 KNUTH = 2654435761
-
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
 
 DEFAULT_OUT = {
     "constval": "/tmp/sfconst",

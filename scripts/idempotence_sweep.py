@@ -1,16 +1,16 @@
 #!/usr/bin/env python
 """Idempotence sweep: build AND execute every registered query twice
 in one session; the second result must match the first exactly
-(strict dtype+value, same canon as driver_sim).
+(strict dtype+value, driver_sim's ``strict_diff``).
 
 This exercises paths a single sweep never touches — per-invocation
 scratch dirs (no collisions), analyzed-plan caches, the engineops VFS
 cache, and determinism of every sampling/hashing operator under
-repeated invocation. FMR_STREAM_FORCE_REEXEC=1 is set BEFORE the
-queries import so the streaming completed-result memoization is
-bypassed and the second invocation genuinely re-runs the micro-batch
-machinery (otherwise the check would re-hash the first run's memory
-sink table and prove nothing).
+repeated invocation. FMR_STREAM_FORCE_REEXEC=1 is set before any query
+runs so the streaming completed-result memoization is bypassed and the
+second invocation genuinely re-runs the micro-batch machinery
+(otherwise the check would re-hash the first run's memory sink table
+and prove nothing).
 
 Usage: python scripts/idempotence_sweep.py [sf_dir] [query ...]
 Exit 0 = every query's two executions identical.
@@ -20,67 +20,42 @@ from __future__ import annotations
 
 import os
 import sys
-import time
-import traceback
 
-os.environ["FMR_STREAM_FORCE_REEXEC"] = "1"
-
-sys.path.insert(0, "/root/repo")
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from driver_sim import build_driver_like_session, sort_frame  # noqa: E402
+from check_oracle import sweep  # noqa: E402
+from driver_sim import build_driver_like_session, strict_diff  # noqa: E402
 
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
+    os.environ["FMR_STREAM_FORCE_REEXEC"] = "1"
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
     spark = build_driver_like_session()
 
-    diffs = []
-    t0_all = time.time()
-    n = 0
-    for name, fn in sorted(qs.items()):
-        if only and name not in only:
-            continue
-        n += 1
-        spark.catalog.clearCache()  # bound per-query persist residue
-        try:
-            a = sort_frame(fn(spark, sf_dir).toPandas())
-            # clear BETWEEN the paired runs too: run A materializes
-            # any persisted subtrees, and Spark's canonical-plan cache
-            # matching would serve them to run B — B would neither
-            # recompute the persisted stages nor expose order-dependent
-            # nondeterminism downstream of them (the thing this sweep
-            # exists to catch), making the A/B vacuous for every query
-            # that persists a shared base
-            spark.catalog.clearCache()
-            b = sort_frame(fn(spark, sf_dir).toPandas())
-        except Exception:
-            print(f"ERR   {name}")
-            traceback.print_exc()
-            diffs.append(name)
-            continue
-        same_dtype = [str(a[c].dtype) for c in a.columns] == [
-            str(b[c].dtype) for c in b.columns
-        ]
-        same_vals = a.astype(str).equals(b.astype(str))
-        if list(a.columns) == list(b.columns) and same_dtype and same_vals:
-            print(f"OK    {name}: {len(a)} rows x2")
-        else:
-            print(
-                f"DIFF  {name}: run1 {a.shape} run2 {b.shape} "
-                f"dtype_same={same_dtype} vals_same={same_vals}"
-            )
-            diffs.append(name)
+    def run(name):
+        return qs[name](spark, sf_dir).toPandas()
 
-    print(f"\ntotal {time.time() - t0_all:.0f}s over {n} queries x2")
-    if diffs:
-        print(f"DIFFS ({len(diffs)}): {diffs}")
-    return 1 if diffs else 0
+    def rerun(name):
+        # clear BETWEEN the paired runs too: run A materializes
+        # any persisted subtrees, and Spark's canonical-plan cache
+        # matching would serve them to run B — B would neither
+        # recompute the persisted stages nor expose order-dependent
+        # nondeterminism downstream of them (the thing this sweep
+        # exists to catch), making the A/B vacuous for every query
+        # that persists a shared base
+        spark.catalog.clearCache()
+        return run(name)
+
+    return sweep(
+        spark, sorted(qs), only, run, rerun,
+        lambda a, b: strict_diff(a, b, ("run1", "run2")),
+        ok="OK", flag="DIFF",
+    )
 
 
 if __name__ == "__main__":

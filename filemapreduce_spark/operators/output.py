@@ -1,4 +1,9 @@
-"""Result-shaping helpers for query tails."""
+"""Sort methods for a query's final result.
+
+``queries.register`` calls these (``sort="tiny_sorted"`` or
+``sort="one_part_sorted"``) to put a bounded result in its declared
+order; query bodies do not call them.
+"""
 
 from __future__ import annotations
 
@@ -7,6 +12,8 @@ from pyspark.sql import Column, DataFrame
 
 def tiny_sorted(df: DataFrame, *cols: Column | str) -> DataFrame:
     """Total-order a PROVABLY SMALL result without a range exchange.
+    The registry calls it for queries registered with
+    ``sort="tiny_sorted"``.
 
     ``orderBy`` on a final result plans Exchange(rangepartitioning):
     a sampling pass over the child (which re-executes it — expensive
@@ -34,7 +41,8 @@ def tiny_sorted(df: DataFrame, *cols: Column | str) -> DataFrame:
 def one_part_sorted(df: DataFrame, *cols: Column | str) -> DataFrame:
     """Total-order a bounded result whose PRODUCING STAGE is
     data-sized, without a range exchange and without serializing the
-    producer.
+    producer. The registry calls it for queries registered with
+    ``sort="one_part_sorted"``.
 
     ``coalesce(1)`` (:func:`tiny_sorted`) merges the upstream stage
     into one task — wrong when that stage ranks/aggregates/maps a

@@ -187,3 +187,20 @@ def fingerprint(shingles: Column) -> Column:
     """Document fingerprint: lexical-min md5 over its shingle set
     (winnowing-style representative hash); null for tiny docs."""
     return F.array_min(F.transform(shingles, lambda s: F.md5(s)))
+
+
+# DuckDB twins of ``words(text)`` and ``word_shingles(ws, 3)``, for the
+# oracles.
+SQL_WORDS = "list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+'), w -> w != '')"
+SQL_SHINGLES3 = (
+    "list_distinct(list_transform(range(1, len(ws)-1),"
+    " i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))"
+)
+# DuckDB twin of the lang-id marker scores over ``ws``: one
+# ``s_<lang>`` column per language, counting its marker words.
+SQL_LANG_SCORES = ", ".join(
+    "len(list_filter(ws, w -> w IN ({}))) AS s_{}".format(
+        ", ".join(f"'{w}'" for w in LANG_MARKERS[lang]), lang
+    )
+    for lang in sorted(LANG_MARKERS)
+)

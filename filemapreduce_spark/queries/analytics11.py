@@ -28,7 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from filemapreduce_spark.operators.money import cents
-from filemapreduce_spark.operators.output import tiny_sorted
 from filemapreduce_spark.queries import register
 from filemapreduce_spark.sources.tables import load_table as t
 
@@ -77,6 +76,8 @@ from filemapreduce_spark.sources.tables import load_table as t
     ORDER BY w.event_type
     """,
     tags=("timeseries", "smoothing", "fold"),
+    # bounded by the event-type domain
+    sort="tiny_sorted",
 )
 def holt_linear_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt's linear trend method (Holt 1957; alpha = beta = 1/2,
@@ -144,7 +145,7 @@ def holt_linear_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(1000.0 * (F.col("s.l") + 7 * F.col("s.b")))
         .cast("long")
         .alias("forecast7_milli"),
-    ).transform(lambda d: tiny_sorted(d, "event_type"))
+    )
 
 
 # ------------------------------------------------------------------
@@ -185,6 +186,7 @@ def holt_linear_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM terms GROUP BY nk ORDER BY nk
     """,
     tags=("stats", "inequality"),
+    order=("nationkey",),
 )
 def theil_index_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil T inequality index (Theil 1967) of order values within
@@ -257,7 +259,6 @@ def theil_index_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "mean_milli",
             "theil_micro",
         )
-        .orderBy("nationkey")
     )
 
 
@@ -405,5 +406,4 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             var18.alias("var18"),
             F.round(z).cast("long").alias("z_micro"),
         )
-        .orderBy("event_type")
     )

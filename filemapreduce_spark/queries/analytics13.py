@@ -26,22 +26,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from filemapreduce_spark.operators.money import cents
-from filemapreduce_spark.operators.textops import LANG_MARKERS, words
+from filemapreduce_spark.operators.textops import (
+    LANG_MARKERS,
+    SQL_LANG_SCORES,
+    SQL_WORDS,
+    words,
+)
 from filemapreduce_spark.queries import register
 from filemapreduce_spark.sources.tables import load_table as t
 
-_SQL_WORDS = (
-    "list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+'), "
-    "w -> w != '')"
-)
-
-_LANG_CASES = []
-for _lang in sorted(LANG_MARKERS):
-    _markers = ", ".join(f"'{w}'" for w in LANG_MARKERS[_lang])
-    _LANG_CASES.append(
-        f"len(list_filter(ws, w -> w IN ({_markers}))) AS s_{_lang}"
-    )
-_LANG_SCORE_SQL = ", ".join(_LANG_CASES)
 
 _MCN_BASELINE = "en"  # the majority-class baseline prediction
 
@@ -53,9 +46,9 @@ _MCN_BASELINE = "en"  # the majority-class baseline prediction
     "mcnemar_langid_vs_baseline",
     f"""
     WITH d AS (
-      SELECT doc_id, lang, {_SQL_WORDS} AS ws FROM documents
+      SELECT doc_id, lang, {SQL_WORDS} AS ws FROM documents
     ), s AS (
-      SELECT doc_id, lang, {_LANG_SCORE_SQL} FROM d
+      SELECT doc_id, lang, {SQL_LANG_SCORES} FROM d
     ), p AS (
       SELECT lang,
              CASE WHEN greatest(s_de, s_en, s_es, s_fr) = 0 THEN 'und'

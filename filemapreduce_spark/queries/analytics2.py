@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from filemapreduce_spark.operators.money import cents
-from filemapreduce_spark.operators.output import one_part_sorted, tiny_sorted
 from filemapreduce_spark.queries import register
 from filemapreduce_spark.sources.tables import load_table as t
 
@@ -82,7 +81,7 @@ def markov_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "next_type",
         "n",
         (F.col("n").cast("double") / F.sum("n").over(total)).alias("prob"),
-    ).orderBy("prev_type", "next_type")
+    )
 
 
 # --------------------------------------------------------------------
@@ -115,6 +114,9 @@ def markov_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY channel
     """,
     tags=("sequence", "window"),
+    # channel-domain rows; the distinct agg is data-sized, so a real
+    # 1-partition exchange, not coalesce(1), gathers them
+    sort="one_part_sorted",
 )
 def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Attribute each purchase to the user's most recent view/click
@@ -156,10 +158,6 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / (60000000.0 * F.count(F.lit(1)))
             ).alias("avg_minutes_to_convert"),
         )
-        # result bounded by the channel domain; the distinct agg
-        # below is data-sized, so a real 1-partition exchange (not
-        # coalesce, not orderBy's sampling pass) gathers it
-        .transform(lambda d: one_part_sorted(d, "channel"))
     )
 
 
@@ -213,7 +211,6 @@ def time_bucket_weekly_monday(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "week_start", F.date_format("week_start", "yyyy-MM-dd")
         )
-        .orderBy("week_start")
     )
 
 
@@ -269,7 +266,6 @@ def timegrain_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             "sum_value_cents",
         )
-        .orderBy("month", "grain", "day")
     )
 
 
@@ -300,6 +296,8 @@ def timegrain_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY d.event_type, d.day
     """,
     tags=("timeseries", "join"),
+    # types x calendar days: bounded by the horizon
+    sort="tiny_sorted",
 )
 def ewma_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Half-life-1-day EWMA over daily value sums, truncated at 10
@@ -345,9 +343,6 @@ def ewma_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("ewma_cents"),
         )
         .withColumn("day", F.date_format("day", "yyyy-MM-dd"))
-        .transform(  # types x calendar days: bounded by the horizon
-            lambda d: tiny_sorted(d, "event_type", "day")
-        )
     )
 
 
@@ -396,7 +391,6 @@ def equidepth_histogram_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("cents").alias("lo_cents"),
             F.max("cents").alias("hi_cents"),
         )
-        .orderBy("o_orderstatus", "bucket")
     )
 
 
@@ -539,7 +533,7 @@ def spearman_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         # try_divide: a zero-variance side (constant column) has no
         # rank spread — the oracle's x/0 is NULL where ANSI raises
         F.try_divide(num, den).alias("spearman_rho"),
-    ).orderBy("l_returnflag")
+    )
 
 
 # --------------------------------------------------------------------
@@ -615,7 +609,6 @@ def winsorized_stats_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / (100.0 * F.count(F.lit(1)))
             ).alias("winsorized_avg"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -664,7 +657,7 @@ def mom_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round((F.col("rev_cents") - prev) * 100.0 / prev, 6).alias(
             "growth_pct"
         ),
-    ).orderBy("month")
+    )
 
 
 # --------------------------------------------------------------------
@@ -752,7 +745,7 @@ def anomaly_zscore_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cents",
         "n",
         F.when((F.col("n") >= 2) & (var_num > 0), z).alias("z_milli"),
-    ).orderBy("event_type", "day")
+    )
 
 
 # --------------------------------------------------------------------
@@ -857,7 +850,6 @@ def attribution_multi_touch_linear(spark: SparkSession, sf_dir: str) -> DataFram
             # conserved total can exceed int64 → DOUBLE (r10 extreme)
             F.sum("credit").cast("double").alias("credit_micro_cents"),
         )
-        .orderBy("channel")
     )
 
 
@@ -1010,7 +1002,7 @@ def rolling_correlation_series(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when((F.col("n") >= 2) & (vx > 0) & (vy > 0), corr).alias(
             "corr_milli"
         ),
-    ).orderBy("day")
+    )
 
 
 # --------------------------------------------------------------------
@@ -1063,7 +1055,6 @@ def interevent_gap_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("event_type", "log2_bucket")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("event_type", "log2_bucket")
     )
 
 
@@ -1165,5 +1156,4 @@ def session_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
             "type_a", "type_b", "n_both", "n_a", "n_b",
             pmi.alias("pmi_micro"),
         )
-        .orderBy("type_a", "type_b")
     )

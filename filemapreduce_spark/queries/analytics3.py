@@ -132,7 +132,6 @@ def max_drawdown_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cum_cents",
             "drawdown_cents",
         )
-        .orderBy("event_type")
     )
 
 
@@ -248,7 +247,7 @@ def welch_ttest_vs_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("mean_diff_milli"),
         F.round(t_stat * 1000).cast("long").alias("t_milli"),
         F.round(df * 1000).cast("long").alias("df_milli"),
-    ).orderBy("event_type")
+    )
 
 
 # --------------------------------------------------------------------

@@ -133,7 +133,6 @@ def interval_union_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("longest_us"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -196,7 +195,7 @@ def temperature_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("boost_milli"),
-    ).orderBy("lang")
+    )
 
 
 # --------------------------------------------------------------------
@@ -282,7 +281,6 @@ def seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "abs_err_milli"
             ),
         )
-        .orderBy("event_type", "day")
     )
 
 
@@ -359,7 +357,7 @@ def daily_active_new_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_returning"
         ),
         F.sum("n_new").over(wcum).cast("long").alias("cum_users"),
-    ).orderBy("day")
+    )
 
 
 # --------------------------------------------------------------------
@@ -442,5 +440,4 @@ def burst_busiest_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("hr_count").cast("long").alias("peak_events_per_hour"),
             F.col("ep").cast("long").alias("peak_window_end_us"),
         )
-        .orderBy("user_id")
     )

@@ -165,7 +165,6 @@ def ks_test_vs_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("d_milli"),
             F.col("c").alias("argmax_cents"),
         )
-        .orderBy("pair")
     )
 
 
@@ -248,6 +247,7 @@ def _coord_col(which: str, key) -> F.Column:
     ORDER BY id_a, id_b
     """,
     tags=("spatial", "join", "blocking"),
+    order=(),
 )
 def geo_radius_join_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spatial radius join: customers get deterministic md5-derived
@@ -427,7 +427,6 @@ def theil_sen_slope_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("percentile(slope, 0.5)"), 6
             ).alias("slope_cents_per_day"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -562,7 +561,6 @@ def seasonal_decomposition_daily(
             .cast("long")
             .alias("resid_milli"),
         )
-        .orderBy("event_type", "day")
     )
 
 
@@ -691,7 +689,6 @@ def covariance_matrix_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .select("cell.var_a", "cell.var_b", "cell.cov")
-        .orderBy("var_a", "var_b")
     )
 
 
@@ -772,7 +769,7 @@ def trailing_quantile_7day(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("day", "yyyy-MM-dd").alias("day"),
         "cents",
         p90.cast("long").alias("p90_trailing"),
-    ).orderBy("event_type", "day")
+    )
 
 
 # --------------------------------------------------------------------
@@ -852,7 +849,6 @@ def market_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("cr4_milli"),
         )
-        .orderBy("s_nationkey")
     )
 
 
@@ -938,7 +934,7 @@ def hysteresis_alert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("alert_state"),
-    ).orderBy("event_type", "day")
+    )
 
 
 # --------------------------------------------------------------------
@@ -1005,7 +1001,6 @@ def order_to_ship_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(MAX(days) AS BIGINT) AS max_days
         FROM _ots_lat
         GROUP BY o_orderpriority
-        ORDER BY o_orderpriority
         """
     )
 
@@ -1153,5 +1148,4 @@ def dispersion_index_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "dispersion_milli"
             ),
         )
-        .orderBy("event_type")
     )

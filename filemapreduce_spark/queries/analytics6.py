@@ -173,7 +173,6 @@ def psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("t1").alias("n_cur"),
             "psi_micro",
         )
-        .orderBy("event_type")
     )
 
 
@@ -286,16 +285,16 @@ def changepoint_sse_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("mean_right_milli"),
         F.round(1000000.0 * F.col("gain")).cast("long").alias("gain_micro"),
-    ).orderBy("event_type")
+    )
 
 
 # --------------------------------------------------------------------
 # Nelson–Aalen cumulative hazard (counting-process twin of KM).
 # --------------------------------------------------------------------
 # Import, not copy: the Spark side censors via the shared
-# _signup_purchase_subjects (survival._HORIZON), so the oracle string
-# below MUST use the same constant or the pair silently desyncs.
-from filemapreduce_spark.queries.survival import _HORIZON  # noqa: E402
+# _signup_purchase_subjects (operators.survival.HORIZON), so the oracle
+# string below MUST use the same constant or the pair silently desyncs.
+from filemapreduce_spark.operators.survival import HORIZON  # noqa: E402
 
 
 @register(
@@ -315,7 +314,7 @@ from filemapreduce_spark.queries.survival import _HORIZON  # noqa: E402
                   THEN date_diff('day', CAST(s.s_ts AS DATE),
                                  CAST(p.p_ts AS DATE))
                   ELSE date_diff('day', CAST(s.s_ts AS DATE),
-                                 DATE '{_HORIZON}')
+                                 DATE '{HORIZON}')
              END AS t_days,
              CASE WHEN p.p_ts IS NOT NULL THEN 1 ELSE 0 END AS event
       FROM s LEFT JOIN p ON p.user_id = s.user_id
@@ -416,7 +415,6 @@ def nelson_aalen_cumhaz(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("var_est"),
         )
-        .orderBy("t_days")
     )
 
 
@@ -589,7 +587,7 @@ def fellegi_sunter_entity_match(
             "CAST(CASE WHEN n_declared = 0 THEN NULL"
             " ELSE (1000 * tp) div n_declared END AS BIGINT)"
         ).alias("precision_milli"),
-    ).orderBy("segment")
+    )
 
 
 # --------------------------------------------------------------------
@@ -887,7 +885,7 @@ def cramer_von_mises_vs_view(
         "n_a",
         "n_b",
         F.round(1000000.0 * t_stat).cast("long").alias("t_micro"),
-    ).orderBy("pair")
+    )
 
 
 cramer_von_mises_vs_view.__doc__ = (
@@ -1086,5 +1084,4 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " AND CURRENT ROW) div n_users AS BIGINT)"
             ).alias("ltv_per_user_cents"),
         )
-        .orderBy("cohort", "age_day")
     )

@@ -151,7 +151,7 @@ def neyman_allocation_by_type(
         )
         .cast("long")
         .alias("n_alloc"),
-    ).orderBy("event_type")
+    )
 
 
 neyman_allocation_by_type.__doc__ = (
@@ -282,7 +282,6 @@ def walkforward_purged_folds(
             .cast("long")
             .alias("min_gap_check"),
         )
-        .orderBy("fold", "role")
     )
 
 
@@ -433,7 +432,7 @@ def conformal_interval_coverage(
         F.expr("CAST((1000 * n_covered) div n_test AS BIGINT)").alias(
             "coverage_milli"
         ),
-    ).orderBy("event_type")
+    )
 
 
 conformal_interval_coverage.__doc__ = (
@@ -558,7 +557,6 @@ def woe_iv_price_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("iv_term_micro"),
         )
-        .orderBy("bin")
     )
 
 
@@ -630,7 +628,7 @@ def dp_noisy_counts_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_noisy_milli"),
         F.lit(_DP_EPS_MILLI).cast("long").alias("eps_spent_milli"),
-    ).orderBy("event_type")
+    )
 
 
 dp_noisy_counts_ledger.__doc__ = dp_noisy_counts_ledger.__doc__.replace(

@@ -190,7 +190,7 @@ def cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("varred_bp"),
-    ).orderBy("arm")
+    )
 
 
 @register(
@@ -293,7 +293,7 @@ def did_two_period_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("did_milli"),
-    ).orderBy("arm")
+    )
 
 
 @register(
@@ -385,7 +385,6 @@ def abc_revenue_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("share_milli"),
         )
-        .orderBy("cls")
     )
 
 
@@ -485,5 +484,4 @@ def kendall_tau_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("tau_milli"),
         )
-        .orderBy("event_type")
     )

@@ -167,7 +167,6 @@ def attribution_position_based(
             # conserved total can exceed int64 → DOUBLE (r10 extreme)
             F.sum("credit").cast("double").alias("credit_micro_cents"),
         )
-        .orderBy("channel")
     )
 
 
@@ -297,7 +296,6 @@ def kruskal_wallis_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "h_milli"
             ),
         )
-        .orderBy("event_type")
     )
 
 
@@ -531,4 +529,4 @@ def generalized_means_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("harm_milli"),
-    ).orderBy("event_type")
+    )

@@ -111,7 +111,7 @@ def fk_integrity_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = checks[0]
     for c in checks[1:]:
         out = out.unionByName(c)
-    return out.orderBy("relationship")
+    return out
 
 
 # --------------------------------------------------------------------
@@ -204,7 +204,6 @@ def data_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         agg.select(F.explode(rows).alias("r"))
         .select("r.col", "r.metric", "r.value")
-        .orderBy("col", "metric")
     )
 
 
@@ -236,6 +235,7 @@ def data_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM px GROUP BY month ORDER BY month
     """,
     tags=("timeseries", "agg"),
+    sort="body",
 )
 def ohlc_monthly_order_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monthly OHLC bars over order prices: open/close are the
@@ -352,7 +352,6 @@ def twap_daily_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.try_divide(F.col("weighted_cents_us"), F.col("span_us")),
         )
         .withColumn("day", F.date_format("day", "yyyy-MM-dd"))
-        .orderBy("day", "event_type")
     )
 
 
@@ -385,6 +384,7 @@ def twap_daily_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM run GROUP BY day ORDER BY day
     """,
     tags=("timeseries", "interval", "window"),
+    sort="body",
 )
 def concurrent_sessions_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Peak number of simultaneously-active users per day via the
@@ -506,7 +506,7 @@ def merge_upsert_customer_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("s.custkey").isNull(), "keep")
         .otherwise("update")
         .alias("merge_action"),
-    ).orderBy("custkey")
+    )
 
 
 # --------------------------------------------------------------------
@@ -553,6 +553,5 @@ def daily_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
                     AS BIGINT) AS p90_cents
         FROM _bands_events
         GROUP BY day, event_type
-        ORDER BY day, event_type
         """
     )

@@ -12,13 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from filemapreduce_spark.operators.textops import words
+from filemapreduce_spark.operators.textops import SQL_WORDS, words
 from filemapreduce_spark.queries import register
 from filemapreduce_spark.sources.tables import load_table as t
-
-_SQL_WORDS = (
-    "list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+'), w -> w != '')"
-)
 
 
 # --------------------------------------------------------------------
@@ -89,7 +85,6 @@ def fuzzy_pairs_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.levenshtein("a.head", "b.head").cast("long").alias("edit_dist"),
         )
         .where(F.col("edit_dist") <= 24)
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -101,7 +96,7 @@ def fuzzy_pairs_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH toks AS (
       SELECT doc_id, lang, t.i AS i, ws[t.i+1] AS w, ws[t.i+2] AS nxt
-      FROM (SELECT doc_id, lang, {_SQL_WORDS} AS ws FROM documents),
+      FROM (SELECT doc_id, lang, {SQL_WORDS} AS ws FROM documents),
            unnest(range(len(ws))) AS t(i)
     ),
     uni AS (
@@ -191,7 +186,6 @@ def bigram_lm_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_bigrams"),
             F.round(F.sum("lp") / F.count(F.lit(1)), 6).alias("avg_logprob"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -202,7 +196,7 @@ def bigram_lm_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_topp_tokens_by_lang",
     f"""
     WITH d AS (
-      SELECT doc_id, lang, CAST(len({_SQL_WORDS}) AS BIGINT) AS n_tokens
+      SELECT doc_id, lang, CAST(len({SQL_WORDS}) AS BIGINT) AS n_tokens
       FROM documents
     ),
     ranked AS (
@@ -261,7 +255,7 @@ def corpus_topp_tokens_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(0)
         .alias("kept"),
-    ).orderBy("doc_id")
+    )
 
 
 # --------------------------------------------------------------------
@@ -305,7 +299,6 @@ def sample_fixed_k_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "lang", F.row_number().over(w).cast("long").alias("rn")
         )
         .where(F.col("rn") <= 20)
-        .orderBy("lang", "rn")
     )
 
 
@@ -371,7 +364,6 @@ def weighted_sample_by_length(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_chars") * 32
             )
         )
-        .orderBy("doc_id")
     )
 
 
@@ -405,7 +397,7 @@ def quality_tiers_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return d.select(
         "doc_id", "lang", F.ntile(10).over(w).cast("long").alias("tier")
-    ).orderBy("doc_id")
+    )
 
 
 # --------------------------------------------------------------------
@@ -476,5 +468,4 @@ def weighted_sample_without_replacement(
         .withColumn("rn", F.row_number().over(w).cast("long"))
         .where(F.col("rn") <= 10)
         .select("lang", "rn", "doc_id", "n_chars")
-        .orderBy("lang", "rn")
     )

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from filemapreduce_spark.operators.textops import ascii_fold
 
-from filemapreduce_spark.operators.output import tiny_sorted
 from filemapreduce_spark.queries import register
 from filemapreduce_spark.sources.tables import load_table as t
 
@@ -39,6 +38,8 @@ from filemapreduce_spark.sources.tables import load_table as t
     ORDER BY event_type
     """,
     tags=("agg", "sketch"),
+    # bounded by the event-type domain
+    sort="tiny_sorted",
 )
 def bitmap_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact COUNT DISTINCT computed as mergeable bitmap partials:
@@ -62,11 +63,10 @@ def bitmap_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.bitmap_bucket_number("user_id").alias("bucket"),
     ).agg(F.bitmap_construct_agg(F.bitmap_bit_position("user_id")).alias("bm"))
-    return tiny_sorted(
+    return (
         partials.groupBy("event_type").agg(
             F.sum(F.bitmap_count("bm")).alias("distinct_users")
-        ),
-        "event_type",  # result bounded by the event-type domain
+        )
     )
 
 
@@ -111,7 +111,6 @@ def percentile_disc_order_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
                COUNT(*) AS n
         FROM _pd_orders
         GROUP BY o_orderstatus
-        ORDER BY o_orderstatus
         """
     )
 
@@ -165,7 +164,6 @@ def entropy_tokens_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.log(n) - F.sum(F.col("c") * F.log("c")) / n, 6
             ).alias("entropy_nats"),
         )
-        .orderBy("source")
     )
 
 
@@ -325,7 +323,6 @@ def url_kv_parse_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("v_param").alias("sum_v_param"),
             F.count_distinct("path").alias("distinct_paths"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -382,7 +379,6 @@ def xml_parse_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("t").alias("sum_cents"),
             F.max("k").alias("max_key"),
         )
-        .orderBy("priority")
     )
 
 
@@ -437,7 +433,6 @@ def array_set_ops_order_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(F.array_except("brands", target)).cast("long").alias("n_other"),
             F.arrays_overlap("brands", target).alias("hits_target"),
         )
-        .orderBy("l_orderkey")
     )
 
 
@@ -485,7 +480,6 @@ def masked_rls_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("acctbal_bucket"),
             "c_mktsegment",
         )
-        .orderBy("c_custkey")
     )
 
 
@@ -565,7 +559,6 @@ def map_algebra_priority_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         combined.select("n_name", F.explode("m").alias("pri", "v"))
         .select("n_name", "pri", "v.n_old", "v.n_new", "v.delta")
         .filter((F.col("n_old") > 0) | (F.col("n_new") > 0))
-        .orderBy("n_name", "pri")
     )
 
 
@@ -653,7 +646,6 @@ def join_hint_shuffle_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sum_cents"
             ),
         )
-        .orderBy("s_nationkey")
     )
 
 
@@ -768,7 +760,6 @@ def merkle_partition_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "checksum",
             )
         )
-        .orderBy("l_returnflag", "level", "month")
     )
 
 
@@ -866,7 +857,6 @@ def fact_to_scd2_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("segment"), "n_purchases", "n_users", "sum_cents"
         )
-        .orderBy("segment")
     )
 
 
@@ -936,7 +926,6 @@ def gdpr_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("orders_erased", F.lit(0)).alias("orders_erased"),
             F.coalesce("lineitems_erased", F.lit(0)).alias("lineitems_erased"),
         )
-        .orderBy("n_name")
     )
 
 
@@ -992,7 +981,6 @@ def try_arithmetic_safety(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.get_json_object("props", "$.k").try_cast("long")
             ).alias("sum_k"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1036,7 +1024,6 @@ def regexp_family_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.regexp_count(ascii_fold("text"), F.lit(r"\bthe\b"))
             ).alias("n_the_mentions"),
         )
-        .orderBy("source")
     )
 
 
@@ -1160,5 +1147,4 @@ def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "overcount"
             ),
         )
-        .orderBy(F.desc("exact_n"), "user_id")
     )

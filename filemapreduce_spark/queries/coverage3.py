@@ -78,7 +78,6 @@ def gaps_islands_user_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_days"),
         )
         .select("user_id", "island_start", "island_end", "n_days")
-        .orderBy("user_id", "island_start")
     )
 
 
@@ -139,6 +138,7 @@ def gaps_islands_user_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY l_orderkey, line_seq
     """,
     tags=("window", "allocation"),
+    order=(),
 )
 def proration_largest_remainder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Largest-remainder proration: allocate each order's total price
@@ -373,7 +373,7 @@ def interp_linear_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(interp)
         .alias("v_cents"),
         F.col("v").isNull().alias("interpolated"),
-    ).orderBy("event_type", "day")
+    )
 
 
 # --------------------------------------------------------------------
@@ -480,7 +480,7 @@ def bfs_3hop_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = levels[0]
     for lv in levels[1:]:
         out = out.unionAll(lv)
-    return out.orderBy("lvl", "node")
+    return out
 
 
 # --------------------------------------------------------------------
@@ -566,7 +566,6 @@ def cusum_top_deviations(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cusum",
             "rk",
         )
-        .orderBy("event_type", "rk")
     )
 
 
@@ -648,7 +647,6 @@ def rrf_rank_fusion_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.row_number().over(w_f).cast("long").alias("rk"),
         )
         .filter(F.col("rk") <= 5)
-        .orderBy("lang", "rk")
     )
 
 
@@ -733,7 +731,6 @@ def orderkey_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("nxt") - 1).alias("gap_end"),
             (F.col("nxt") - F.col("key") - 1).alias("n_missing"),
         )
-        .orderBy("gap_start")
     )
 
 
@@ -917,7 +914,6 @@ def setsim_prefix_filter_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_match",
             "jaccard_milli",
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1022,7 +1018,6 @@ def incremental_rollup_late_data(
             .cast("long")
             .alias("n_late_added"),
         )
-        .orderBy("event_type", "day")
     )
 
 
@@ -1081,7 +1076,6 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "class_size",
             (F.col("class_size") < 5).alias("violates_k5"),
         )
-        .orderBy("nation", "segment", "bal_band")
     )
 
 
@@ -1168,7 +1162,6 @@ def benford_first_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 - F.expr(benford).cast("long")
             ).alias("deviation_micro_x10"),
         )
-        .orderBy("digit")
     )
 
 
@@ -1254,7 +1247,6 @@ def weighted_median_price_by_flag(
             F.min("price_cents").alias("weighted_median_cents"),
             F.min("tw").alias("total_weight"),
         )
-        .orderBy("flag")
     )
 
 
@@ -1371,7 +1363,7 @@ def mann_whitney_u_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             (F.col("r_a_2") - F.col("n_a") * (F.col("n_a") + 1)) / 2.0
         ).alias("u_a"),
-    ).orderBy("event_type")
+    )
 
 
 # --------------------------------------------------------------------
@@ -1460,4 +1452,4 @@ def gini_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST((CAST(1000000 AS DECIMAL(38,0))"
             " * (2 * six - (n + 1) * sx)) div (n * sx) AS BIGINT)"
         ).alias("gini_micro"),
-    ).orderBy("nation")
+    )

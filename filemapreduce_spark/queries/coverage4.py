@@ -93,7 +93,6 @@ def candidate_key_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             check("l_orderkey,l_linenumber", "l_orderkey", "l_linenumber")
         )
         .unionByName(check("l_partkey,l_suppkey", "l_partkey", "l_suppkey"))
-        .orderBy("combo")
     )
 
 
@@ -217,7 +216,7 @@ def acf_daily_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.try_divide(1000.0 * num, den)).cast("long").alias(
             "acf_milli"
         ),
-    ).orderBy("event_type", "lag_days")
+    )
 
 
 # --------------------------------------------------------------------
@@ -300,7 +299,6 @@ def column_fingerprint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.agg(*aggs)
         .select(F.explode(F.array(*cells)).alias("cell"))
         .select("cell.column_name", "cell.n_nonnull", "cell.fingerprint")
-        .orderBy("column_name")
     )
 
 
@@ -487,7 +485,6 @@ def histogram_sketch_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("abs_err_cents"),
             F.col("n").cast("long"),
         )
-        .orderBy("q_milli")
     )
 
 
@@ -681,7 +678,6 @@ def out_of_order_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("max_backward_us"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -758,7 +754,6 @@ def banded_dense_row_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_chars",
             (F.col("off") + F.col("rnk") - 1).cast("long").alias("global_id"),
         )
-        .orderBy("global_id")
     )
 
 
@@ -849,7 +844,6 @@ def sampled_aggregate_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("rel_err_milli"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -910,7 +904,6 @@ def argmax_struct_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("m.cents").cast("long").alias("top_cents"),
             (-F.col("m.neg_user")).cast("long").alias("top_user"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1078,7 +1071,6 @@ def scd2_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             "valid_from_us",
         )
-        .orderBy("user_id", "version")
     )
 
 
@@ -1193,7 +1185,6 @@ def fk_containment_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "c_custkey",
             )
         )
-        .orderBy("pair")
     )
 
 
@@ -1332,5 +1323,4 @@ def bitmap_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("bitmap_matches_exact"),
         )
-        .orderBy("type_a", "type_b")
     )

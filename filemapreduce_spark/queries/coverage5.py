@@ -125,7 +125,6 @@ def rendezvous_shard_move_audit(
                    " THEN 1 ELSE 0 END)) div count(1) AS BIGINT)")
             .alias("moved_milli"),
         )
-        .orderBy("old_shard")
     )
 
 
@@ -247,7 +246,7 @@ def kcore_peeling_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = rows[0]
     for r in rows[1:]:
         out = out.unionAll(r)
-    return out.orderBy("round")
+    return out
 
 
 kcore_peeling_rounds.__doc__ = kcore_peeling_rounds.__doc__.replace(
@@ -369,7 +368,6 @@ def quantile_normalize_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sum_raw"),
             F.round(F.sum("qv") / F.count(F.lit(1)), 6).alias("avg_norm"),
         )
-        .orderBy("source", "decile")
     )
 
 

@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from filemapreduce_spark.queries import register
-from filemapreduce_spark.operators.textops import words
+from filemapreduce_spark.operators.textops import SQL_WORDS, words
 from filemapreduce_spark.sources.tables import load_table as t
 
 # ------------------------------------------------------------------
@@ -141,7 +141,7 @@ def connected_components_minlabel(
         )
     return labels.select(
         "node", F.col("lbl").cast("long").alias("comp")
-    ).orderBy("node")
+    )
 
 
 connected_components_minlabel.__doc__ = (
@@ -246,7 +246,6 @@ def luhn_checksum_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("valid_permille"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -257,17 +256,12 @@ _MLM_SEL = 9830  # floor(0.15 * 65536): select 15% of tokens
 _MLM_MASK = 52429  # floor(0.80 * 65536) of selected → [MASK]
 _MLM_RAND = 58982  # floor(0.90 * 65536) of selected → random token
 
-_SQL_WORDS = (
-    "list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+'),"
-    " w -> w != '')"
-)
-
 
 @register(
     "mlm_masking_plan",
     f"""
     WITH doc AS (
-      SELECT doc_id, {_SQL_WORDS} AS ws FROM documents
+      SELECT doc_id, {SQL_WORDS} AS ws FROM documents
     ), tok AS (
       SELECT doc_id, i, ws[i] AS tok
       FROM doc, unnest(range(1, len(ws) + 1)) AS u(i)
@@ -341,5 +335,4 @@ def mlm_masking_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("is_rand").cast("long").alias("n_random"),
             F.sum("is_keep").cast("long").alias("n_keep"),
         )
-        .orderBy("doc_id")
     )

@@ -22,14 +22,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from filemapreduce_spark.operators.money import cents
-from filemapreduce_spark.operators.textops import words
+from filemapreduce_spark.operators.textops import SQL_WORDS, words
 from filemapreduce_spark.queries import register
 from filemapreduce_spark.sources.tables import load_table as t
 
-_SQL_WORDS = (
-    "list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+'), "
-    "w -> w != '')"
-)
 
 # ------------------------------------------------------------------
 # Rank-biased overlap between the revenue and quantity part rankings.
@@ -189,7 +185,6 @@ def rbo_rank_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("rbo_partial_micro"),
         )
-        .orderBy("d")
     )
 
 
@@ -210,7 +205,7 @@ _BP_TOP = 10
     "boilerplate_prefix_mass",
     f"""
     WITH doc AS (
-      SELECT {_SQL_WORDS} AS ws FROM documents
+      SELECT {SQL_WORDS} AS ws FROM documents
     ), p AS (
       SELECT array_to_string(ws[1:{_BP_TOKENS}], ' ') AS prefix
       FROM doc WHERE len(ws) >= {_BP_TOKENS}

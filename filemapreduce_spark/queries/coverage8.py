@@ -95,7 +95,6 @@ def l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"violates_l{_LDIV_L}"
             ),
         )
-        .orderBy("nation", "bal_band")
     )
 
 

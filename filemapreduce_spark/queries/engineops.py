@@ -27,8 +27,8 @@ from filemapreduce_spark.operators.textops import ascii_fold
 
 from filemapreduce_spark.core.engine import FileEngine, Job
 from filemapreduce_spark.operators.money import SQL_CENTS, cents
+from filemapreduce_spark.operators.scratch import scratch_dir
 from filemapreduce_spark.queries import register
-from filemapreduce_spark.queries.roundtrip import _scratch
 from filemapreduce_spark.sources.tables import load_table as t
 
 _DOC_CAP = 40  # documents with doc_id < 40 seed the VFS trees
@@ -151,7 +151,7 @@ def engine_vfs_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("n") >= 3),
         )
     )
-    return df.orderBy("w")
+    return df
 
 
 # --------------------------------------------------------------------
@@ -314,7 +314,7 @@ def engine_ranged_sort_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
             reducer=fold_runs,
         )
     )
-    return df.orderBy("grp")
+    return df
 
 
 # --------------------------------------------------------------------
@@ -370,6 +370,7 @@ def engine_single_value_finalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY job_name
     """,
     tags=("engine", "metrics"),
+    sort="body",
 )
 def engine_job_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-job row accounting via ``run(with_metrics=True)``: an
@@ -439,7 +440,7 @@ def engine_permissive_parse_dead_letters(
             ),
         )
     )
-    return df.orderBy("status")
+    return df
 
 
 # --------------------------------------------------------------------
@@ -471,7 +472,7 @@ def sink_codec_selection_roundtrip(
     base = t(spark, sf_dir, "part").select("p_partkey", "p_retailprice")
     frames = []
     for codec in ("gzip", "zstd"):
-        dest = _scratch(f"codec_{codec}")
+        dest = scratch_dir(f"codec_{codec}")
         base.write.mode("overwrite").option("compression", codec).parquet(
             dest
         )
@@ -482,7 +483,7 @@ def sink_codec_selection_roundtrip(
                 F.sum(cents("p_retailprice")).alias("retail_cents"),
             )
         )
-    return frames[0].unionAll(frames[1]).orderBy("codec")
+    return frames[0].unionAll(frames[1])
 
 
 # --------------------------------------------------------------------
@@ -516,8 +517,8 @@ def sink_partition_evolution_roundtrip(
     od = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice"
     )
-    gen1 = _scratch("evo_gen1")
-    gen2 = _scratch("evo_gen2")
+    gen1 = scratch_dir("evo_gen1")
+    gen2 = scratch_dir("evo_gen2")
     od.filter(F.col("o_orderkey") % 2 == 0).write.mode(
         "overwrite"
     ).partitionBy("o_orderstatus").parquet(gen1)
@@ -542,7 +543,6 @@ def sink_partition_evolution_roundtrip(
             F.count("*").alias("n_orders"),
             F.sum(cents("o_totalprice")).alias("total_cents"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -623,7 +623,7 @@ def engine_chunked_large_file(
         .collect()
     )
     blob = "".join(r["h"] + "\n" for r in rows).encode("ascii")
-    root = _scratch("chunked_file")
+    root = scratch_dir("chunked_file")
     with open(f"{root}/corpus_md5.txt", "wb") as f:
         f.write(blob)
     chunks = read_files_chunked(spark, root, chunk_bytes=_CHUNK_BYTES)
@@ -633,7 +633,6 @@ def engine_chunked_large_file(
             F.length("content").cast("long").alias("chunk_len"),
             F.md5("content").alias("chunk_md5"),
         )
-        .orderBy("chunk_idx")
     )
 
 
@@ -705,4 +704,4 @@ def engine_strict_abort_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(
         [("permissive", False, n_ok), ("strict", aborted, n_strict)],
         "mode STRING, aborted BOOLEAN, rows_parsed BIGINT",
-    ).orderBy("mode")
+    )

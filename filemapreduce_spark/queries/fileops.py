@@ -42,7 +42,6 @@ def glob_path_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         d.select(path.alias("path"), "n_chars")
         .filter(F.col("path").rlike(_REGEX))
-        .orderBy("path")
     )
 
 
@@ -72,7 +71,6 @@ def glob_multifilter_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.filter(path.rlike(_MREGEX))
         .groupBy("source")
         .agg(F.count("*").alias("n"))
-        .orderBy("source")
     )
 
 
@@ -112,7 +110,6 @@ def hierarchical_rollup_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_files"),
             F.sum(F.col("n_chars").cast("decimal(38,0)")).cast("double").alias("total_chars"),
         )
-        .orderBy("dir")
     )
 
 
@@ -208,4 +205,4 @@ def parents_prefix_inheritance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "path",
         F.size("parents").alias("n_parents"),
         weighted.alias("weighted"),
-    ).orderBy("path")
+    )

@@ -65,7 +65,6 @@ def embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("j").cast("long").alias("j"),
         )
         .agg(F.sum("gram_e12").alias("gram_e12"))
-        .orderBy("i", "j")
     )
 
 
@@ -117,7 +116,6 @@ def embedding_centroids_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
             "centroid",
             (F.col("sum_e6").cast("double") / F.col("n")) / float(_SCALE),
         )
-        .orderBy("label", "i")
     )
 
 
@@ -254,7 +252,6 @@ def embedding_power_iteration(
             .cast("long")
             .alias("rayleigh_e6"),
         )
-        .orderBy("rank")
     )
 
 

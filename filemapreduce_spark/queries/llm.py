@@ -13,11 +13,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from filemapreduce_spark.operators.lsh import (
+    MINHASH_ORACLE,
+    doc_shingles,
+    lsh_class_graph,
+)
 from filemapreduce_spark.operators.textops import (
     LANG_MARKERS,
-    ascii_fold,
+    SQL_LANG_SCORES,
+    SQL_SHINGLES3,
+    SQL_WORDS,
     STOPWORDS,
     TOKEN_REGEX,
+    ascii_fold,
     fingerprint,
     minhash_band_keys,
     minhash_signature,
@@ -34,16 +42,10 @@ from filemapreduce_spark.operators.vectors import (
     norm,
     to_double,
 )
-from filemapreduce_spark.operators.output import one_part_sorted, tiny_sorted
 from filemapreduce_spark.queries import register
 from filemapreduce_spark.sources.tables import load_table as t
 
 # DuckDB fragments mirroring operators.textops
-_SQL_WORDS = "list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+'), w -> w != '')"
-_SQL_SHINGLES3 = (
-    "list_distinct(list_transform(range(1, len(ws)-1),"
-    " i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))"
-)
 _SQL_SHINGLES2 = (
     "list_distinct(list_transform(range(1, len(ws)),"
     " i -> ws[i] || ' ' || ws[i+1]))"
@@ -62,24 +64,21 @@ _SQL_SHINGLES2 = (
     FROM documents GROUP BY source ORDER BY source
     """,
     tags=("dedup", "llm"),
+    # #sources rows; the countDistinct final agg is data-sized, so a
+    # real 1-partition exchange, not coalesce(1), gathers them
+    sort="one_part_sorted",
 )
 def dedup_exact_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact (hash) dedup accounting per source — the groupBy-on-digest
     pattern that scales to any corpus (shuffle on a 128-bit key)."""
     d = t(spark, sf_dir, "documents")
     h = F.md5(ascii_fold("text"))
-    return one_part_sorted(
-        # one_part_sorted, not tiny_sorted: countDistinct's final agg
-        # stage reads one row per distinct digest (data-sized) —
-        # coalesce(1) would serialize that stage; the repartition(1)
-        # exchange keeps it parallel and ships only #sources rows
-        # (0.22→0.14 s vs orderBy's sampling pass at sf0.1)
+    return (
         d.groupBy("source").agg(
             F.count("*").alias("n_docs"),
             F.countDistinct(h).alias("n_unique"),
             (F.count("*") - F.countDistinct(h)).alias("n_dups"),
-        ),
-        "source",
+        )
     )
 
 
@@ -105,65 +104,15 @@ def dedup_keep_first_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_id").alias("kept_doc_id"),
             F.count("*").alias("group_size"),
         )
-        .orderBy("lang", "size_bucket")
     )
 
 
 # --------------------------------------------------------------------
 # MinHash + LSH near-dedup.
 # --------------------------------------------------------------------
-_MINHASH_ORACLE = """
-    WITH d AS (
-      SELECT doc_id, {words} AS ws FROM documents
-    ), d2 AS (
-      SELECT doc_id, {shingles} AS shingles FROM d WHERE len(ws) >= 3
-    ), sh AS (
-      SELECT doc_id, unnest(shingles) AS s FROM d2
-    ), sig AS (
-      SELECT doc_id, j, MIN(md5(j::VARCHAR || ':' || s)) AS h
-      FROM sh CROSS JOIN (SELECT unnest(range(8)) AS j)
-      GROUP BY doc_id, j
-    ), bandkeys AS (
-      SELECT doc_id, j // 2 AS band, string_agg(h, '' ORDER BY j) AS key
-      FROM sig GROUP BY doc_id, j // 2
-    ), cand AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bandkeys a JOIN bandkeys b
-        ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ), sizes AS (
-      SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id
-    ), inter AS (
-      SELECT c.doc_a, c.doc_b, COUNT(*) AS n_common
-      FROM cand c
-      JOIN sh x ON x.doc_id = c.doc_a
-      JOIN sh y ON y.doc_id = c.doc_b AND y.s = x.s
-      GROUP BY 1, 2
-    )
-    SELECT i.doc_a, i.doc_b,
-           round(CAST(i.n_common AS DOUBLE) / (na.n + nb.n - i.n_common), 6) AS jaccard
-    FROM inter i
-    JOIN sizes na ON na.doc_id = i.doc_a
-    JOIN sizes nb ON nb.doc_id = i.doc_b
-    WHERE CAST(i.n_common AS DOUBLE) / (na.n + nb.n - i.n_common) >= 0.2
-    ORDER BY doc_a, doc_b
-""".format(words=_SQL_WORDS, shingles=_SQL_SHINGLES3)
-
-
-def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, shingles): distinct 3-word shingles of every document
-    with at least 3 words — the MinHash-LSH family's input."""
-    d = t(spark, sf_dir, "documents").select(
-        "doc_id", words("text").alias("ws")
-    )
-    return d.filter(F.size("ws") >= 3).select(
-        "doc_id", word_shingles(F.col("ws"), 3).alias("shingles")
-    )
-
-
 @register(
     "neardup_minhash_lsh",
-    _MINHASH_ORACLE,
+    MINHASH_ORACLE,
     tags=("dedup", "minhash", "lsh", "llm"),
 )
 def neardup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -182,7 +131,7 @@ def neardup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature is cached; the verify recomputes the arrays from the
     documents scan rather than pin O(corpus shingles) in memory.
     """
-    d2 = _doc_shingles(spark, sf_dir)
+    d2 = doc_shingles(spark, sf_dir)
     # per-row signature: sig[j] = min over shingles of md5(j ':' s).
     # The one cache: (doc_id, sig), 8 × 16 bytes per doc. Both band
     # self-join sides read it; without it the shingling + 8×md5 would
@@ -234,7 +183,6 @@ def neardup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         verified.filter(jac >= 0.2)
         .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -261,7 +209,7 @@ def neardup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN sizes nb ON nb.doc_id = i.doc_b
     WHERE i.n_common >= 3
     ORDER BY doc_a, doc_b
-    """.format(words=_SQL_WORDS, shingles=_SQL_SHINGLES3),
+    """.format(words=SQL_WORDS, shingles=SQL_SHINGLES3),
     tags=("dedup", "jaccard", "llm"),
 )
 def neardup_jaccard_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -298,7 +246,6 @@ def neardup_jaccard_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         inter.join(na, "doc_a")
         .join(nb, "doc_b")
         .select("doc_a", "doc_b", "n_common", F.round(jac, 6).alias("jaccard"))
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -315,7 +262,7 @@ _SIMHASH_SQL_BASE = f"""
       -- no fingerprint without text (r9 text-null probe: the
       -- oracle's unnest(NULL) dropped the doc while Spark emitted a
       -- signature row for it)
-      SELECT doc_id, {_SQL_WORDS} AS ws FROM documents
+      SELECT doc_id, {SQL_WORDS} AS ws FROM documents
       WHERE text IS NOT NULL
     ), w AS (
       SELECT DISTINCT doc_id, unnest(ws) AS w FROM d
@@ -357,7 +304,7 @@ def _spark_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """60-bit SimHash per document (integer-exact, oracle-matched)."""
-    return _spark_simhash(spark, sf_dir).orderBy("doc_id")
+    return _spark_simhash(spark, sf_dir)
 
 
 @register(
@@ -411,7 +358,6 @@ def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b", ham.cast("int").alias("hamming"))
         .distinct()
         .filter(F.col("hamming") <= 3)
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -455,7 +401,7 @@ def similarity_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") < 10)
     return cosine_topk(emb, q, k=5).select(
         "query_id", "neighbor_id", "cos", "rank"
-    ).orderBy("query_id", "rank")
+    )
 
 
 @register(
@@ -492,7 +438,7 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cell").cast("int").alias("cell"),
         "cos",
         "rank",
-    ).orderBy("query_id", "rank")
+    )
 
 
 # --------------------------------------------------------------------
@@ -502,7 +448,7 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_stats_by_source",
     f"""
     WITH d AS (
-      SELECT source, {_SQL_WORDS} AS ws, length(text) AS nc FROM documents
+      SELECT source, {SQL_WORDS} AS ws, length(text) AS nc FROM documents
     )
     SELECT source, COUNT(*) AS n_docs,
            CAST(SUM(len(ws)) AS BIGINT) AS total_tokens,
@@ -527,7 +473,6 @@ def text_stats_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum(ntok).cast("double") / F.count("*")).alias("avg_tokens"),
             F.max(ntok).alias("max_tokens"),
         )
-        .orderBy("source")
     )
 
 
@@ -538,7 +483,7 @@ _SW_LIST = ", ".join(f"'{w}'" for w in STOPWORDS)
     "quality_scores",
     f"""
     WITH d AS (
-      SELECT doc_id, {_SQL_WORDS} AS ws FROM documents
+      SELECT doc_id, {SQL_WORDS} AS ws FROM documents
     )
     SELECT doc_id,
            CAST(len(ws) AS BIGINT) AS n_tokens,
@@ -562,25 +507,16 @@ def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(uniq, 6).alias("uniq_ratio"),
         F.round(stop, 6).alias("stopword_ratio"),
         F.round(0.7 * uniq + 0.3 * stop, 6).alias("quality"),
-    ).orderBy("doc_id")
-
-
-_LANG_CASES = []
-for _lang in sorted(LANG_MARKERS):
-    _markers = ", ".join(f"'{w}'" for w in LANG_MARKERS[_lang])
-    _LANG_CASES.append(
-        f"len(list_filter(ws, w -> w IN ({_markers}))) AS s_{_lang}"
     )
-_LANG_SCORE_SQL = ", ".join(_LANG_CASES)
 
 
 @register(
     "lang_id_heuristic",
     f"""
     WITH d AS (
-      SELECT doc_id, lang, {_SQL_WORDS} AS ws FROM documents
+      SELECT doc_id, lang, {SQL_WORDS} AS ws FROM documents
     ), s AS (
-      SELECT doc_id, lang, {_LANG_SCORE_SQL} FROM d
+      SELECT doc_id, lang, {SQL_LANG_SCORES} FROM d
     ), p AS (
       SELECT doc_id, lang,
              greatest(s_de, s_en, s_es, s_fr) AS best,
@@ -622,7 +558,7 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
         pred.alias("predicted"),
         best.cast("long").alias("score"),
         F.when(pred == F.col("lang"), 1).otherwise(0).alias("is_match"),
-    ).orderBy("doc_id")
+    )
 
 
 @register(
@@ -630,7 +566,7 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     SELECT doc_id,
            CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '{TOKEN_REGEX}')) AS BIGINT) AS n_bpe_tokens,
-           CAST(len({_SQL_WORDS}) AS BIGINT) AS n_ws_tokens
+           CAST(len({SQL_WORDS}) AS BIGINT) AS n_ws_tokens
     FROM documents ORDER BY doc_id
     """,
     tags=("text", "tokens", "llm"),
@@ -642,14 +578,14 @@ def token_count_bpe_ish(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         token_count_regex("text").alias("n_bpe_tokens"),
         F.size(words("text")).cast("long").alias("n_ws_tokens"),
-    ).orderBy("doc_id")
+    )
 
 
 @register(
     "doc_fingerprints",
     f"""
     WITH d AS (
-      SELECT doc_id, {_SQL_WORDS} AS ws FROM documents
+      SELECT doc_id, {SQL_WORDS} AS ws FROM documents
     ), d2 AS (
       SELECT doc_id,
              CASE WHEN len(ws) >= 5 THEN
@@ -671,7 +607,7 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh5 = word_shingles(F.col("ws"), 5)
     return d.select(
         "doc_id", F.coalesce(fingerprint(sh5), F.lit("NONE")).alias("fp")
-    ).orderBy("doc_id")
+    )
 
 
 # --------------------------------------------------------------------
@@ -734,7 +670,6 @@ def neardup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos"),
         )
         .filter(F.col("cos") >= 0.3)
-        .orderBy("id_a", "id_b")
     )
 
 
@@ -752,6 +687,8 @@ def neardup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY event_type ORDER BY event_type
     """,
     tags=("agg", "quantile"),
+    # bounded by the event-type domain
+    sort="tiny_sorted",
 )
 def exact_quantiles_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distinct-count + interpolated percentiles per event type —
@@ -795,8 +732,7 @@ def exact_quantiles_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.element_at("ps", 3), 6).alias("p99"),
         )
     )
-    # result bounded by the event-type domain -> local tiny sort
-    return tiny_sorted(merged, "event_type")
+    return merged
 
 
 # Percentile-BAND assertion floor: below this many rows per group the
@@ -872,7 +808,6 @@ def approx_aggregates_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("p99_in_band"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -901,7 +836,7 @@ def multimodal_blob_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("n_chars") > 300, "large").otherwise("small").alias(
             "size_class"
         ),
-    ).orderBy("doc_id")
+    )
 
 
 # WAV synthesis parameters, shared by the Spark encoder and the DuckDB
@@ -1129,7 +1064,6 @@ def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda batches: decode_batches(synth_batches(batches)),
             schema=schema,
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1166,7 +1100,7 @@ def text_clean_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_redacted"),
         F.md5(F.regexp_replace(low, _NUM_PAT, "<NUM>")).alias("clean_md5"),
-    ).orderBy("doc_id")
+    )
 
 
 # --------------------------------------------------------------------
@@ -1203,131 +1137,7 @@ _SURVIVOR_ORACLE = """
     SELECT doc_id, source FROM documents
     WHERE doc_id NOT IN (SELECT doc_b FROM verified)
     ORDER BY doc_id
-""".format(words=_SQL_WORDS, shingles=_SQL_SHINGLES3)
-
-
-def _lsh_class_graph(
-    spark: SparkSession, sf_dir: str, dedup_cand: bool = True
-):
-    """Content-collapsed LSH near-dup machinery shared by the
-    survivors and clusters queries (round 11): collapse docs with
-    IDENTICAL shingle arrays into classes FIRST, then run the banded
-    bucket join over one representative per class.
-
-    Why: on a duplicate-saturated corpus (the regime a 100 TB crawl
-    lives in — the r11 dup_fixture makes 90% of docs one of 5
-    payloads) a duplicate class of n docs shares every band key, so a
-    doc-level candidate join materializes Θ(n²) intermediate pairs
-    even when the consumer's output is linear (survivors, clusters).
-    Collapsing first is the exact-dedup-before-near-dedup discipline
-    (Lee et al. 2022): the pair machinery then runs over DISTINCT
-    contents only — the class graph has ~5 nodes where the doc graph
-    had 450² /2 candidate edges. At a real SF the collapse keys on a
-    content digest; here it groups the exact shingle array, so the
-    equivalence is literal, not probabilistic.
-
-    Exactness (vs the per-doc oracle): shingles are DISTINCT
-    (word_shingles), so two docs in one class have Jaccard 1 ≥ any
-    threshold — every non-representative member is always dropped by
-    its own representative; and for distinct classes A != B with reps
-    r_A < r_B, a doc-level candidate (a, b), a < b, exists iff the
-    classes share a band key, with J(a, b) = J(r_A, r_B) — so the
-    doc-level verified relation is fully determined by the class
-    graph plus member ids.
-
-    The collapse (r12) is a window min over (xxhash64(sh), sh) — one
-    shuffle gives every member its class rep IN PLACE, with the raw
-    array in the partition key so class identity is EXACT content
-    equality (no digest exposure at all). This replaces the r11
-    md5(to_json(sh)) digest groupBy + doc-level join-back, which paid
-    a JSON serialization + md5 per document row, a second exchange
-    for the join-back, and a 32-char string class key; the window
-    form keys every downstream join/aggregate on the BIGINT rep.
-    Trade recorded: the window ships each member's shingle payload
-    through the one collapse exchange (no map-side collapse), where
-    the digest groupBy shipped ~1 payload per class per map partition
-    plus every member's digest through the join-back — comparable
-    bytes, one fewer corpus-sized exchange, and measured faster on
-    BOTH the clean bench (0.38→0.28 s warm at sf0.1) and the
-    dup-saturated fixture (0.35→0.18 s).
-
-    One cache: the collapsed frame (doc_id, rep, csize, sig), sig
-    set on representatives only. doc_cls and both band self-join
-    sides read it; without it each would re-run the words → shingles
-    → window pass over the corpus. It pins O(docs) narrow rows plus
-    one 128-byte signature per distinct content, and no shingle
-    arrays: the verify recomputes the reps' arrays row by row from
-    the documents scan and intersects them for candidate class pairs
-    only. Trade recorded: that recompute is one more words → shingles
-    pass over the corpus, measured at +0.3 to +0.6 s warm for
-    dedup_survivors_minhash at sf0.1 on 4 cores, against 15.5 → 1.1
-    MB cached.
-
-    Returns (doc_cls, verified):
-      doc_cls: (doc_id, rep, csize) for shingle-eligible docs;
-      verified: (rep_a, rep_b, jaccard) class pairs, rep_a < rep_b,
-                sharing >= 1 LSH band with exact Jaccard >= 0.2
-                (jaccard rounded to 6 dp, the pair query's output
-                precision — every member pair of the two classes has
-                exactly this value). With dedup_cand=False the same
-                pair may appear once per shared band (consumers whose
-                aggregation is duplicate-insensitive — min() — skip
-                the distinct exchange).
-    """
-    sh = _doc_shingles(spark, sf_dir)
-    # xxhash64 prefix so the collapse exchange hashes/sorts on a cheap
-    # scalar first and only equal-hash rows compare arrays
-    elig = sh.withColumn("h", F.xxhash64("shingles"))
-    w0 = Window.partitionBy("h", "shingles")
-    # the signature is computed in the collapse pass itself, once per
-    # class (members get NULL), so the shingle arrays never reach the
-    # cache
-    cls = (
-        elig.select(
-            "doc_id",
-            F.min("doc_id").over(w0).alias("rep"),
-            F.count(F.lit(1)).over(w0).alias("csize"),
-            "shingles",
-        )
-        .select(
-            "doc_id",
-            "rep",
-            "csize",
-            F.when(
-                F.col("doc_id") == F.col("rep"),
-                minhash_signature(F.col("shingles"), 8),
-            ).alias("sig"),
-        )
-        .persist()
-    )
-    doc_cls = cls.select("doc_id", "rep", "csize")
-    bands = minhash_band_keys(
-        cls.where(F.col("doc_id") == F.col("rep")).select("rep", "sig"), "rep"
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.key") == F.col("b.key"))
-        & (F.col("a.rep") < F.col("b.rep")),
-    ).select(F.col("a.rep").alias("rep_a"), F.col("b.rep").alias("rep_b"))
-    if dedup_cand:
-        cand = cand.distinct()
-    # a rep is a document: the verify recomputes its shingles from the
-    # documents scan
-    ca = sh.select(F.col("doc_id").alias("rep_a"), F.col("shingles").alias("sh_a"))
-    cb = sh.select(F.col("doc_id").alias("rep_b"), F.col("shingles").alias("sh_b"))
-    n_common = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = n_common.cast("double") / (
-        F.size("sh_a") + F.size("sh_b") - n_common
-    )
-    verified = (
-        cand.join(ca, "rep_a")
-        .join(cb, "rep_b")
-        .filter(jac >= 0.2)
-        .select("rep_a", "rep_b", F.round(jac, 6).alias("jaccard"))
-    )
-    return doc_cls, verified
+""".format(words=SQL_WORDS, shingles=SQL_SHINGLES3)
 
 
 @register(
@@ -1337,6 +1147,7 @@ def _lsh_class_graph(
     # compares order-insensitively.
     _SURVIVOR_ORACLE,
     tags=("dedup", "minhash", "llm"),
+    order=(),
 )
 def dedup_survivors_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The actual dedup OUTPUT: the corpus after removing every doc
@@ -1357,7 +1168,7 @@ def dedup_survivors_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: dedup_cand=False — the only aggregation below is min(),
     # which is duplicate-insensitive, so the candidate-distinct
     # exchange is skipped
-    doc_cls, verified = _lsh_class_graph(
+    doc_cls, verified = lsh_class_graph(
         spark, sf_dir, dedup_cand=False
     )
     # min adjacent rep per class, adjacency made symmetric: doc b in
@@ -1535,7 +1346,6 @@ def similarity_ivf_probe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cand.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= 5)
-        .orderBy("query_id", "rank")
     )
 
 
@@ -1571,6 +1381,7 @@ _CLUSTER_ORACLE = _SURVIVOR_ORACLE.replace(
     "dedup_clusters_minhash",
     _CLUSTER_ORACLE,
     tags=("dedup", "minhash", "iterative", "llm"),
+    order=(),
 )
 def dedup_clusters_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive near-dup clusters: connected components over the
@@ -1593,7 +1404,7 @@ def dedup_clusters_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy-min over the bounded class graph, localCheckpoint()ed so
     plan depth stays constant (large-star/small-star pattern).
     """
-    doc_cls, verified = _lsh_class_graph(spark, sf_dir)
+    doc_cls, verified = lsh_class_graph(spark, sf_dir)
     vp = verified.select("rep_a", "rep_b")
     edges = vp.union(
         vp.select(
@@ -1662,7 +1473,7 @@ def dedup_clusters_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "word_frequencies_top100",
     f"""
     WITH w AS (
-      SELECT doc_id, unnest({_SQL_WORDS}) AS word FROM documents
+      SELECT doc_id, unnest({SQL_WORDS}) AS word FROM documents
     )
     SELECT word, COUNT(*) AS tf,
            COUNT(DISTINCT doc_id) AS df
@@ -1701,7 +1512,7 @@ def word_frequencies_top100(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tfidf_top_term_per_doc",
     f"""
     WITH w AS (
-      SELECT doc_id, unnest({_SQL_WORDS}) AS word FROM documents
+      SELECT doc_id, unnest({SQL_WORDS}) AS word FROM documents
     ), tf AS (
       SELECT doc_id, word, COUNT(*) AS tf FROM w GROUP BY doc_id, word
     ), df AS (
@@ -1765,7 +1576,6 @@ def tfidf_top_term_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") == 1)
         .select("doc_id", "word", "tfidf")
-        .orderBy("doc_id")
     )
 
 
@@ -1810,7 +1620,7 @@ def dataset_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return d.select(
         "doc_id", split.alias("split"), "source"
-    ).orderBy("doc_id")
+    )
 
 
 # --------------------------------------------------------------------
@@ -1860,7 +1670,6 @@ def stratified_sample_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_sampled"),
             F.min("doc_id").alias("first_doc"),
         )
-        .orderBy("lang")
     )
 
 
@@ -1871,7 +1680,7 @@ def stratified_sample_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     "repetition_quality_scores",
     f"""
     WITH d AS (
-      SELECT doc_id, {_SQL_WORDS} AS ws FROM documents
+      SELECT doc_id, {SQL_WORDS} AS ws FROM documents
     ), w AS (
       SELECT doc_id, unnest(ws) AS word FROM d
     ), wc AS (
@@ -1971,7 +1780,6 @@ def repetition_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("dup_bigram_frac"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1982,7 +1790,7 @@ def repetition_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     "contamination_8gram_overlap",
     f"""
     WITH d AS (
-      SELECT doc_id, source, {_SQL_WORDS} AS ws FROM documents
+      SELECT doc_id, source, {SQL_WORDS} AS ws FROM documents
     ), g AS (
       SELECT doc_id, source,
              unnest(list_distinct(list_transform(range(1, len(ws)-6),
@@ -2037,7 +1845,6 @@ def contamination_8gram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("ng").alias("n_shared_ngrams"),
             F.countDistinct("t_doc").alias("n_test_docs"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -2048,7 +1855,7 @@ def contamination_8gram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "quality_filter_pipeline",
     f"""
     WITH d AS (
-      SELECT doc_id, source, {_SQL_WORDS} AS ws FROM documents
+      SELECT doc_id, source, {SQL_WORDS} AS ws FROM documents
     ), sig AS (
       -- a textless doc has 0 tokens and a CRISP keep=false (a
       -- filter must decide, not emit NULL; r9 text-null probe)
@@ -2107,7 +1914,6 @@ def quality_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_tokens").alias("n_tokens"),
         )
-        .orderBy("source", "keep")
     )
 
 
@@ -2118,7 +1924,7 @@ def quality_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dup_ngram_mass_by_source",
     f"""
     WITH d AS (
-      SELECT doc_id, source, {_SQL_WORDS} AS ws FROM documents
+      SELECT doc_id, source, {SQL_WORDS} AS ws FROM documents
     ), g AS (
       SELECT doc_id, source,
              unnest(list_distinct(list_transform(range(1, len(ws)-3),
@@ -2185,7 +1991,6 @@ def dup_ngram_mass_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("shared_frac"),
         )
-        .orderBy("source")
     )
 
 
@@ -2310,15 +2115,10 @@ def kmeans_lloyd_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
         # plan depth constant however many Lloyd rounds run
         centroids = update(assign(centroids)).localCheckpoint()
     final = assign(centroids)
-    out = (
-        final.groupBy("cid")
-        .agg(
-            F.count(F.lit(1)).alias("n_members"),
-            F.min("vec_id").alias("min_member"),
-        )
-        .orderBy("cid")
+    return final.groupBy("cid").agg(
+        F.count(F.lit(1)).alias("n_members"),
+        F.min("vec_id").alias("min_member"),
     )
-    return out
 
 
 # --------------------------------------------------------------------
@@ -2390,7 +2190,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return d.mapInPandas(
         sample_frames, schema="doc_id long, frame_idx long, frame_md5 string"
-    ).orderBy("doc_id", "frame_idx")
+    )
 
 
 # --------------------------------------------------------------------
@@ -2416,7 +2216,7 @@ _EXACT_JACCARD_ORACLE = """
     JOIN sizes na ON na.doc_id = i.doc_a
     JOIN sizes nb ON nb.doc_id = i.doc_b
     WHERE i.n_common >= 3
-""".format(words=_SQL_WORDS, shingles=_SQL_SHINGLES3)
+""".format(words=SQL_WORDS, shingles=SQL_SHINGLES3)
 
 
 @register(
@@ -2427,7 +2227,7 @@ _EXACT_JACCARD_ORACLE = """
       WHERE jaccard >= 0.5
     ),
     cand AS (
-      SELECT doc_a, doc_b FROM ({_MINHASH_ORACLE})
+      SELECT doc_a, doc_b FROM ({MINHASH_ORACLE})
     ),
     found AS (
       SELECT t.doc_a, t.doc_b FROM truth t
@@ -2487,7 +2287,7 @@ def minhash_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     "crossdoc_span_dedup",
     f"""
     WITH d AS (
-      SELECT doc_id, {_SQL_WORDS} AS ws FROM documents
+      SELECT doc_id, {SQL_WORDS} AS ws FROM documents
     ), g AS (
       SELECT doc_id, u.pos AS pos, u.ng AS ng
       FROM (

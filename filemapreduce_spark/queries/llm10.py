@@ -30,21 +30,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from filemapreduce_spark.queries import register
-from filemapreduce_spark.operators.textops import LANG_MARKERS, words
-from filemapreduce_spark.sources.tables import load_table as t
-
-_SQL_WORDS = (
-    "list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+'), "
-    "w -> w != '')"
+from filemapreduce_spark.operators.textops import (
+    LANG_MARKERS,
+    SQL_LANG_SCORES,
+    SQL_WORDS,
+    words,
 )
-
-_LANG_CASES = []
-for _lang in sorted(LANG_MARKERS):
-    _markers = ", ".join(f"'{w}'" for w in LANG_MARKERS[_lang])
-    _LANG_CASES.append(
-        f"len(list_filter(ws, w -> w IN ({_markers}))) AS s_{_lang}"
-    )
-_LANG_SCORE_SQL = ", ".join(_LANG_CASES)
+from filemapreduce_spark.sources.tables import load_table as t
 
 
 # ------------------------------------------------------------------
@@ -54,9 +46,9 @@ _LANG_SCORE_SQL = ", ".join(_LANG_CASES)
     "cohens_kappa_langid",
     f"""
     WITH d AS (
-      SELECT doc_id, lang, {_SQL_WORDS} AS ws FROM documents
+      SELECT doc_id, lang, {SQL_WORDS} AS ws FROM documents
     ), s AS (
-      SELECT doc_id, lang, {_LANG_SCORE_SQL} FROM d
+      SELECT doc_id, lang, {SQL_LANG_SCORES} FROM d
     ), p AS (
       SELECT lang AS actual,
              CASE WHEN greatest(s_de, s_en, s_es, s_fr) = 0 THEN 'und'
@@ -200,7 +192,7 @@ def cohens_kappa_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bigram_mutual_information",
     f"""
     WITH doc AS (
-      SELECT {_SQL_WORDS} AS ws FROM documents
+      SELECT {SQL_WORDS} AS ws FROM documents
     ), bg AS (
       SELECT ws[i] AS v, ws[i+1] AS w
       FROM doc, unnest(range(1, len(ws))) AS u(i)
@@ -497,5 +489,4 @@ def hll_intersection_overlap(
                 <= F.greatest(F.col("exact_union"), F.lit(1))
             ).alias("inter_within_5pct_of_union"),
         )
-        .orderBy("pair")
     )

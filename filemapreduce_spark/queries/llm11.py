@@ -21,13 +21,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from filemapreduce_spark.queries import register
-from filemapreduce_spark.operators.textops import words
+from filemapreduce_spark.operators.textops import SQL_WORDS, words
 from filemapreduce_spark.sources.tables import load_table as t
 
-_SQL_WORDS = (
-    "list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+'), "
-    "w -> w != '')"
-)
 
 # Same fixed query set as the ndcg row (llm6.py) — the two metrics
 # are meant to be read side by side over the same ranking.
@@ -48,7 +44,7 @@ def _map_oracle() -> str:
     return f"""
     WITH q AS ({qrows}),
     tok AS (
-      SELECT doc_id, unnest({_SQL_WORDS}) AS w FROM documents
+      SELECT doc_id, unnest({SQL_WORDS}) AS w FROM documents
     ), hits AS (
       SELECT q.qid, tok.doc_id, q.term,
              CAST(COUNT(*) AS BIGINT) AS tf
@@ -159,7 +155,6 @@ def map_retrieval_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("ap_micro"),
         )
-        .orderBy("qid")
     )
 
 
@@ -176,7 +171,7 @@ map_retrieval_audit.__doc__ = map_retrieval_audit.__doc__.replace(
     f"""
     WITH d AS (
       SELECT source,
-             CAST(len({_SQL_WORDS}) AS BIGINT) AS w
+             CAST(len({SQL_WORDS}) AS BIGINT) AS w
       FROM documents
     ), g AS (
       SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -233,4 +228,4 @@ def ess_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(1000.0 * ess / F.col("n_docs"))
         .cast("long")
         .alias("ess_ratio_milli"),
-    ).orderBy("source")
+    )

@@ -22,21 +22,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from filemapreduce_spark.queries import register
-from filemapreduce_spark.operators.textops import LANG_MARKERS, words
-from filemapreduce_spark.sources.tables import load_table as t
-
-_SQL_WORDS = (
-    "list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+'), "
-    "w -> w != '')"
+from filemapreduce_spark.operators.textops import (
+    LANG_MARKERS,
+    SQL_LANG_SCORES,
+    SQL_WORDS,
+    words,
 )
-
-_LANG_CASES = []
-for _lang in sorted(LANG_MARKERS):
-    _markers = ", ".join(f"'{w}'" for w in LANG_MARKERS[_lang])
-    _LANG_CASES.append(
-        f"len(list_filter(ws, w -> w IN ({_markers}))) AS s_{_lang}"
-    )
-_LANG_SCORE_SQL = ", ".join(_LANG_CASES)
+from filemapreduce_spark.sources.tables import load_table as t
 
 
 # ------------------------------------------------------------------
@@ -46,9 +38,9 @@ _LANG_SCORE_SQL = ", ".join(_LANG_CASES)
     "langid_precision_recall_f1",
     f"""
     WITH d AS (
-      SELECT doc_id, lang, {_SQL_WORDS} AS ws FROM documents
+      SELECT doc_id, lang, {SQL_WORDS} AS ws FROM documents
     ), s AS (
-      SELECT doc_id, lang, {_LANG_SCORE_SQL} FROM d
+      SELECT doc_id, lang, {SQL_LANG_SCORES} FROM d
     ), p AS (
       SELECT lang AS actual,
              CASE WHEN greatest(s_de, s_en, s_es, s_fr) = 0 THEN 'und'
@@ -193,7 +185,7 @@ def langid_precision_recall_f1(
         )
         .otherwise(F.lit(0).cast("long"))
         .alias("f1_milli"),
-    ).orderBy("class")
+    )
 
 
 # ------------------------------------------------------------------
@@ -206,7 +198,7 @@ _BURST_TOP = 20
     "term_burstiness_top20",
     f"""
     WITH doc AS (
-      SELECT doc_id, {_SQL_WORDS} AS ws FROM documents
+      SELECT doc_id, {SQL_WORDS} AS ws FROM documents
     ), nn AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM doc
     ), tok AS (
@@ -231,6 +223,7 @@ _BURST_TOP = 20
     LIMIT {_BURST_TOP}
     """,
     tags=("llm", "corpus", "weighting"),
+    order=("total_c DESC", "term"),
 )
 def term_burstiness_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Term burstiness (Church & Gale 1995; Katz 1996) for the

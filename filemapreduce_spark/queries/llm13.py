@@ -26,13 +26,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from filemapreduce_spark.queries import register
-from filemapreduce_spark.operators.textops import words, ascii_fold
+from filemapreduce_spark.operators.textops import SQL_WORDS, ascii_fold, words
 from filemapreduce_spark.sources.tables import load_table as t
 
-_SQL_WORDS = (
-    "list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+'), "
-    "w -> w != '')"
-)
 
 # ------------------------------------------------------------------
 # Sorted-neighborhood near-duplicate candidates.
@@ -139,7 +135,6 @@ def sorted_neighborhood_pairs(
             "lang",
             F.col("edit_dist").cast("long").alias("edit_dist"),
         )
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -157,7 +152,7 @@ sorted_neighborhood_pairs.__doc__ = (
     "simpson_diversity_by_source",
     f"""
     WITH doc AS (
-      SELECT source, {_SQL_WORDS} AS ws FROM documents
+      SELECT source, {SQL_WORDS} AS ws FROM documents
     ), tok AS (
       SELECT source, unnest(ws) AS w FROM doc
     ), tc AS (
@@ -230,5 +225,4 @@ def simpson_diversity_by_source(
             .cast("long")
             .alias("diversity_micro"),
         )
-        .orderBy("source")
     )

@@ -18,8 +18,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from filemapreduce_spark.operators.lsh import doc_shingles
 from filemapreduce_spark.operators.textops import (
     LANG_MARKERS,
+    SQL_LANG_SCORES,
+    SQL_SHINGLES3,
+    SQL_WORDS,
     TOKEN_REGEX,
     minhash_band_keys,
     minhash_signature,
@@ -27,12 +31,6 @@ from filemapreduce_spark.operators.textops import (
     words,
 )
 from filemapreduce_spark.queries import register
-from filemapreduce_spark.queries.llm import (
-    _LANG_SCORE_SQL,
-    _SQL_SHINGLES3,
-    _SQL_WORDS,
-    _doc_shingles,
-)
 from filemapreduce_spark.sources.tables import load_table as t, table_rowcount
 
 
@@ -43,9 +41,9 @@ from filemapreduce_spark.sources.tables import load_table as t, table_rowcount
     "neardup_incremental_vs_corpus",
     f"""
     WITH d AS (
-      SELECT doc_id, {_SQL_WORDS} AS ws FROM documents
+      SELECT doc_id, {SQL_WORDS} AS ws FROM documents
     ), d2 AS (
-      SELECT doc_id, {_SQL_SHINGLES3} AS shingles
+      SELECT doc_id, {SQL_SHINGLES3} AS shingles
       FROM d WHERE len(ws) >= 3
     ), sh AS (
       SELECT doc_id, unnest(shingles) AS s FROM d2
@@ -91,7 +89,7 @@ def neardup_incremental_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame
     included), and count_distinct collapses to an exact sum because
     classes partition the docs — one class-level bucket join plus a
     linear member join-back."""
-    elig = _doc_shingles(spark, sf_dir).withColumn(
+    elig = doc_shingles(spark, sf_dir).withColumn(
         "ckey", F.md5(F.to_json(F.col("shingles")))
     )
     # compact doc -> content-class map, persisted for the delta-side
@@ -142,7 +140,6 @@ def neardup_incremental_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame
         delta_docs.join(matches, "ckey")
         .filter(F.col("n_base_matches") > 0)
         .select("doc_id", "n_base_matches")
-        .orderBy("doc_id")
     )
 
 
@@ -211,7 +208,6 @@ def embedding_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "mean_err_nano"
             ),
         )
-        .orderBy("label")
     )
 
 
@@ -222,7 +218,7 @@ def embedding_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     "unigram_surprisal_filter",
     f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_SQL_WORDS}) AS w FROM documents
+      SELECT doc_id, unnest({SQL_WORDS}) AS w FROM documents
     ),
     counts AS (SELECT w, COUNT(*) AS c FROM tok GROUP BY w),
     total AS (SELECT SUM(c) AS n FROM counts),
@@ -277,7 +273,7 @@ def unigram_surprisal_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sum_surprisal_micro",
         mean.alias("mean_surprisal_micro"),
         (mean < 9_000_000.0).alias("keep"),
-    ).orderBy("doc_id")
+    )
 
 
 # --------------------------------------------------------------------
@@ -287,7 +283,7 @@ def unigram_surprisal_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tfidf_cosine_pairs",
     f"""
     WITH w AS (
-      SELECT doc_id, unnest({_SQL_WORDS}) AS word FROM documents
+      SELECT doc_id, unnest({SQL_WORDS}) AS word FROM documents
     ),
     tf AS (
       SELECT doc_id, word, COUNT(*) AS tf FROM w GROUP BY doc_id, word
@@ -391,7 +387,6 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(nb, "doc_b")
         .filter(cos >= 0.35)
         .select("doc_a", "doc_b", F.round(cos, 6).alias("cosine"))
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -465,7 +460,6 @@ def ivf_recall_measure(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("recall_at_5"),
         )
-        .orderBy("query_id")
     )
 
 
@@ -521,6 +515,7 @@ def ivf_recall_measure(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY m.vec_id
     """,
     tags=("llm", "dedup", "embedding", "clustering"),
+    order=(),
 )
 def semdedup_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
@@ -753,7 +748,7 @@ def semdedup_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dsir_importance_weights",
     f"""
     WITH d AS (
-      SELECT doc_id, lang, {_SQL_WORDS} AS ws FROM documents
+      SELECT doc_id, lang, {SQL_WORDS} AS ws FROM documents
     ), bg AS (
       SELECT doc_id, lang,
              unnest(list_transform(range(1, len(ws)),
@@ -868,7 +863,6 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             w.alias("weight_micro"),
             (w > 0).alias("selected"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -879,7 +873,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ccnet_perplexity_buckets",
     f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_SQL_WORDS}) AS w FROM documents
+      SELECT doc_id, unnest({SQL_WORDS}) AS w FROM documents
     ),
     counts AS (SELECT w, COUNT(*) AS c FROM tok GROUP BY w),
     total AS (SELECT SUM(c) AS n FROM counts),
@@ -993,7 +987,6 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_tokens",
             "avg_surprisal_micro",
         )
-        .orderBy("lang", "bucket")
     )
 
 
@@ -1006,7 +999,7 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT lang,
            COUNT(*) AS n_docs,
            CAST(CAST(SUM(n_chars) AS VARCHAR) AS DOUBLE) AS sum_chars,
-           CAST(SUM(len({_SQL_WORDS})) AS BIGINT) AS sum_ws_tokens,
+           CAST(SUM(len({SQL_WORDS})) AS BIGINT) AS sum_ws_tokens,
            CAST(SUM(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '{TOKEN_REGEX}')))
              AS BIGINT) AS sum_bpe_tokens,
            -- DOUBLE ratio: char totals (and hence the milli ratio)
@@ -1050,7 +1043,6 @@ def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sum_chars") * 1000
             / F.col("sum_bpe_tokens").cast("double"),
         )
-        .orderBy("lang")
     )
 
 
@@ -1061,9 +1053,9 @@ def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     "langid_confusion_matrix",
     f"""
     WITH d AS (
-      SELECT doc_id, lang, {_SQL_WORDS} AS ws FROM documents
+      SELECT doc_id, lang, {SQL_WORDS} AS ws FROM documents
     ), s AS (
-      SELECT doc_id, lang, {_LANG_SCORE_SQL} FROM d
+      SELECT doc_id, lang, {SQL_LANG_SCORES} FROM d
     ), p AS (
       SELECT doc_id, lang,
              CASE WHEN greatest(s_de, s_en, s_es, s_fr) = 0 THEN 'und'
@@ -1122,5 +1114,4 @@ def langid_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pct_of_actual_milli", F.expr("(n * 1000) div _total")
         )
         .drop("_total")
-        .orderBy("actual", "predicted")
     )

@@ -23,6 +23,8 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from filemapreduce_spark.operators.lsh import MINHASH_ORACLE, lsh_class_graph
+from filemapreduce_spark.operators.textops import SQL_WORDS
 from filemapreduce_spark.operators.vectors import dot, norm, to_double
 from filemapreduce_spark.queries import register
 from filemapreduce_spark.sources.tables import load_table as t
@@ -199,16 +201,12 @@ def srp_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos"),
         )
         .where(F.col("cos") >= 0.3)
-        .orderBy("id_a", "id_b")
     )
 
 
 # --------------------------------------------------------------------
 # Vocabulary coverage / OOV-rate diagnostic.
 # --------------------------------------------------------------------
-_SQL_WORDS = (
-    "list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+'), w -> w != '')"
-)
 _VOCAB_K = 200
 
 
@@ -216,7 +214,7 @@ _VOCAB_K = 200
     "vocab_coverage_oov",
     f"""
     WITH toks AS (
-      SELECT lang, unnest({_SQL_WORDS}) AS tok FROM documents
+      SELECT lang, unnest({SQL_WORDS}) AS tok FROM documents
     ), vocab AS (
       SELECT tok FROM (
         SELECT tok, COUNT(*) AS n FROM toks GROUP BY tok
@@ -302,7 +300,6 @@ def vocab_coverage_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("oov_rate_milli"),
         )
-        .orderBy("lang")
     )
 
 
@@ -313,7 +310,7 @@ def vocab_coverage_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
     "distinct_n_diversity",
     f"""
     WITH toks AS (
-      SELECT source, {_SQL_WORDS} AS ws FROM documents
+      SELECT source, {SQL_WORDS} AS ws FROM documents
     ), grams AS (
       SELECT source, n.n,
              unnest(CASE n.n
@@ -405,7 +402,6 @@ def distinct_n_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "distinct_ngrams",
             "distinct_milli",
         )
-        .orderBy("source", "n")
     )
 
 
@@ -419,7 +415,7 @@ _ZIPF_K = 100
     "zipf_exponent_fit",
     f"""
     WITH toks AS (
-      SELECT unnest({_SQL_WORDS}) AS tok FROM documents
+      SELECT unnest({SQL_WORDS}) AS tok FROM documents
     ), freq AS (
       SELECT tok, COUNT(*) AS f FROM toks GROUP BY tok
       ORDER BY f DESC, tok LIMIT {_ZIPF_K}
@@ -487,9 +483,7 @@ def zipf_exponent_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cross-source near-duplication matrix (who copies whom).
 # --------------------------------------------------------------------
 def _minhash_pairs_sql() -> str:
-    from filemapreduce_spark.queries.llm import _MINHASH_ORACLE
-
-    sql = _MINHASH_ORACLE.strip()
+    sql = MINHASH_ORACLE.strip()
     assert sql.endswith("ORDER BY doc_a, doc_b")
     return sql[: -len("ORDER BY doc_a, doc_b")]
 
@@ -498,7 +492,7 @@ def _minhash_pairs_sql() -> str:
     "cross_source_dup_matrix",
     f"""
     WITH pairs AS (
-      {{pairs}}
+      {_minhash_pairs_sql()}
     )
     SELECT least(da.source, db.source) AS source_a,
            greatest(da.source, db.source) AS source_b,
@@ -545,9 +539,7 @@ def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
       least/greatest semantics by flowing through the same
       expressions a doc pair would).
     """
-    from filemapreduce_spark.queries.llm import _lsh_class_graph
-
-    doc_cls, verified = _lsh_class_graph(spark, sf_dir)
+    doc_cls, verified = lsh_class_graph(spark, sf_dir)
     docs = t(spark, sf_dir, "documents").select("doc_id", "source")
     # per-(class, source) member counts — the whole doc-level input
     # compressed to |classes|×|sources| rows
@@ -641,19 +633,7 @@ def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n").cast("long").alias("n_pairs"),
             F.sum("jm_sum").cast("long").alias("sum_jaccard_milli"),
         )
-        .orderBy("source_a", "source_b")
     )
-
-
-# patch the oracle with the shared pairs SQL (registered above with a
-# placeholder; QuerySpec is frozen, so re-register the final text)
-from filemapreduce_spark.queries import REGISTRY as _REG  # noqa: E402
-from dataclasses import replace as _dc_replace  # noqa: E402
-
-_spec = _REG["cross_source_dup_matrix"]
-_REG["cross_source_dup_matrix"] = _dc_replace(
-    _spec, oracle=_spec.oracle.format(pairs=_minhash_pairs_sql())
-)
 
 
 # --------------------------------------------------------------------
@@ -746,5 +726,4 @@ def heaps_law_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("vocab_cum"),
         )
-        .orderBy("checkpoint")
     )

@@ -27,13 +27,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from filemapreduce_spark.operators.textops import word_shingles, words
+from filemapreduce_spark.operators.textops import SQL_WORDS, word_shingles, words
 from filemapreduce_spark.queries import register
 from filemapreduce_spark.sources.tables import load_table as t
 
-_SQL_WORDS = (
-    "list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+'), w -> w != '')"
-)
 _MG_K = 500  # Misra–Gries counter budget per partition
 _TOP = 10
 
@@ -45,7 +42,7 @@ _TOP = 10
     "heavy_hitters_exact_mg",
     f"""
     WITH toks AS (
-      SELECT unnest({_SQL_WORDS}) AS tok FROM documents
+      SELECT unnest({SQL_WORDS}) AS tok FROM documents
     ), cnt AS (
       SELECT tok, COUNT(*) AS n FROM toks GROUP BY tok
     ), total AS (
@@ -205,7 +202,6 @@ def heavy_hitters_exact_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .alias("rank_certified"),
         )
-        .orderBy("rank")
     )
 
 
@@ -221,7 +217,7 @@ heavy_hitters_exact_mg.__doc__ = heavy_hitters_exact_mg.__doc__.replace(
     "containment_contamination_screen",
     f"""
     WITH d AS (
-      SELECT doc_id, source, {_SQL_WORDS} AS ws FROM documents
+      SELECT doc_id, source, {SQL_WORDS} AS ws FROM documents
     ), g AS (
       SELECT doc_id, source,
              unnest(list_distinct(list_transform(range(1, len(ws)-3),
@@ -308,5 +304,4 @@ def containment_contamination_screen(
             F.col("n_test_grams").cast("long"),
             "containment_milli",
         )
-        .orderBy("test_doc")
     )

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from filemapreduce_spark.operators.textops import words, ascii_fold
+from filemapreduce_spark.operators.textops import SQL_WORDS, ascii_fold, words
 from filemapreduce_spark.operators.vectors import dot, norm, to_double
 from filemapreduce_spark.queries import register
 from filemapreduce_spark.sources.tables import load_table as t
@@ -219,7 +219,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = out.unionAll(p)
     return out.select(
         "step", F.col("cid").alias("vec_id"), "rel", "mmr_score"
-    ).orderBy("step")
+    )
 
 
 mmr_diversified_topk.__doc__ = mmr_diversified_topk.__doc__.format(
@@ -366,7 +366,6 @@ def winnowing_shared_fingerprints(
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("n_shared"))
         .filter(F.col("n_shared") >= _WIN_MIN_SHARED)
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -385,16 +384,12 @@ winnowing_shared_fingerprints.__doc__ = (
 # --------------------------------------------------------------------
 _KL_V = 100  # vocabulary: top-V global tokens; everything else = OOV
 
-_SQL_WORDS = (
-    "list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+'), w -> w != '')"
-)
-
 
 @register(
     "kl_divergence_by_source",
     f"""
     WITH tok AS (
-      SELECT source, unnest({_SQL_WORDS}) AS w FROM documents
+      SELECT source, unnest({SQL_WORDS}) AS w FROM documents
     ), vocab AS (
       SELECT w, COUNT(*) AS cg,
              row_number() OVER (ORDER BY COUNT(*) DESC, w) AS rk
@@ -529,7 +524,6 @@ def kl_divergence_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_s").alias("n_tokens"),
             F.round(1000000.0 * F.col("kl")).cast("long").alias("kl_micro"),
         )
-        .orderBy("source")
     )
 
 

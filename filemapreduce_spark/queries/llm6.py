@@ -25,14 +25,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from filemapreduce_spark.operators.textops import words, ascii_fold
+from filemapreduce_spark.operators.textops import SQL_WORDS, ascii_fold, words
 from filemapreduce_spark.operators.vectors import to_double
 from filemapreduce_spark.queries import register
 from filemapreduce_spark.sources.tables import load_table as t
 
-_SQL_WORDS = (
-    "list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+'), w -> w != '')"
-)
 _SB_ALPHA = 0.4  # Brants et al. backoff penalty
 _TRAIN_GATE = 58982  # first 16 md5 bits < 0.9·65536 → train split
 
@@ -44,7 +41,7 @@ _TRAIN_GATE = 58982  # first 16 md5 bits < 0.9·65536 → train split
     "stupid_backoff_trigram_score",
     f"""
     WITH doc AS (
-      SELECT doc_id, source, {_SQL_WORDS} AS ws,
+      SELECT doc_id, source, {SQL_WORDS} AS ws,
              ('0x' || substring(md5(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz')), 1, 4))::INT < {_TRAIN_GATE}
                AS is_train
       FROM documents
@@ -236,7 +233,6 @@ def stupid_backoff_trigram_score(
             .cast("long")
             .alias("avg_logscore_micro"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -257,7 +253,7 @@ def _jsd_term(p: str, q: str) -> str:
     "jsd_pairwise_sources",
     f"""
     WITH tok AS (
-      SELECT source, unnest({_SQL_WORDS}) AS w FROM documents
+      SELECT source, unnest({SQL_WORDS}) AS w FROM documents
     ), vocab AS (
       SELECT w FROM (
         SELECT w, COUNT(*) AS cg FROM tok GROUP BY w
@@ -411,7 +407,6 @@ def jsd_pairwise_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("jsd_micro")
         )
-        .orderBy("source_a", "source_b")
     )
 
 
@@ -544,7 +539,7 @@ def kcenter_coreset_selection(
     out = picks[0]
     for p in picks[1:]:
         out = out.unionAll(p)
-    return out.select("step", "vec_id", "radius").orderBy("step")
+    return out.select("step", "vec_id", "radius")
 
 
 # --------------------------------------------------------------------
@@ -701,7 +696,6 @@ def canonical_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " div count(url) AS BIGINT)"
             ).alias("collapse_milli"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -838,7 +832,6 @@ def matryoshka_truncation_recall(
                 "recall_milli"
             ),
         )
-        .orderBy("query_id")
     )
 
 
@@ -940,7 +933,6 @@ def curriculum_interleave_order(
             pos.alias("position"), "doc_id", "source", "n_chars"
         )
         .where(F.col("position") <= _CUR_TOP)
-        .orderBy("position")
     )
 
 
@@ -1040,7 +1032,6 @@ def feature_hashing_classifier_score(
             margin.cast("long").alias("margin_micro"),
             F.when(margin > 0, 1).otherwise(0).cast("long").alias("pred"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1063,7 +1054,7 @@ _SG_TOP = 50
     "skipgram_pmi_pairs",
     f"""
     WITH doc AS (
-      SELECT doc_id, {_SQL_WORDS} AS ws FROM documents
+      SELECT doc_id, {SQL_WORDS} AS ws FROM documents
     ), uni AS (
       SELECT unnest(ws) AS w FROM doc
     ), n_tok AS (
@@ -1235,7 +1226,7 @@ def _ndcg_oracle() -> str:
     return f"""
     WITH q AS ({qrows}),
     tok AS (
-      SELECT doc_id, unnest({_SQL_WORDS}) AS w FROM documents
+      SELECT doc_id, unnest({SQL_WORDS}) AS w FROM documents
     ), hits AS (
       SELECT q.qid, tok.doc_id, q.term,
              CAST(COUNT(*) AS BIGINT) AS tf
@@ -1349,7 +1340,7 @@ def ndcg_retrieval_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(1000.0 * F.col("dcg") / F.col("idcg"))
         .cast("long")
         .alias("ndcg_milli"),
-    ).orderBy("qid")
+    )
 
 
 ndcg_retrieval_audit.__doc__ = ndcg_retrieval_audit.__doc__.replace(

@@ -20,14 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from filemapreduce_spark.operators.textops import words, ascii_fold
+from filemapreduce_spark.operators.textops import SQL_WORDS, ascii_fold, words
 from filemapreduce_spark.queries import register
 from filemapreduce_spark.sources.tables import load_table as t
-
-_SQL_WORDS = (
-    "list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+'),"
-    " w -> w != '')"
-)
 
 
 @register(
@@ -35,7 +30,7 @@ _SQL_WORDS = (
     f"""
     WITH d AS (
       SELECT source,
-             CAST(len({_SQL_WORDS}) AS BIGINT) AS n_words,
+             CAST(len({SQL_WORDS}) AS BIGINT) AS n_words,
              CAST(greatest(1, len(regexp_extract_all(text, '[.!?]+')))
                   AS BIGINT) AS n_sents,
              CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[aeiouy]+'))
@@ -108,7 +103,7 @@ def flesch_reading_ease_by_source(
         )
         .cast("long")
         .alias("fre_milli"),
-    ).orderBy("source")
+    )
 
 
 _FW_A = "src0"
@@ -122,7 +117,7 @@ _FW_TOP = 10
     "fightin_words_terms",
     f"""
     WITH tok AS (
-      SELECT source, unnest({_SQL_WORDS}) AS w
+      SELECT source, unnest({SQL_WORDS}) AS w
       FROM documents WHERE source IN ('{_FW_A}', '{_FW_B}')
     ), c AS (
       SELECT w,
@@ -162,6 +157,8 @@ _FW_TOP = 10
     LIMIT {_FW_TOP}
     """,
     tags=("llm", "text", "contrastive"),
+    order=("z_micro DESC", "w"),
+    sort="body",
 )
 def fightin_words_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """"Fightin' words" (Monroe, Colaresi & Quinn 2008): log-odds

@@ -31,13 +31,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from filemapreduce_spark.queries import register
-from filemapreduce_spark.operators.textops import words
+from filemapreduce_spark.operators.textops import SQL_WORDS, words
 from filemapreduce_spark.sources.tables import load_table as t
 
-_SQL_WORDS = (
-    "list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+'), "
-    "w -> w != '')"
-)
 
 # Non-distinct word trigrams (every OCCURRENCE, unlike the dedup
 # family's per-doc-distinct shingles): the type unit for the richness
@@ -75,7 +71,7 @@ def _trigrams(ws):
     "chao1_vocab_richness",
     f"""
     WITH doc AS (
-      SELECT source, {_SQL_WORDS} AS ws FROM documents
+      SELECT source, {SQL_WORDS} AS ws FROM documents
     ), tok AS (
       SELECT source, unnest({_SQL_TRIGRAMS}) AS w FROM doc
     ), tc AS (
@@ -143,7 +139,6 @@ def chao1_vocab_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("chao1_milli"),
         )
-        .orderBy("source")
     )
 
 
@@ -157,7 +152,7 @@ _GT_MAX_R = 10  # smooth the low-count region only (the GT regime)
     "good_turing_smoothed_counts",
     f"""
     WITH doc AS (
-      SELECT {_SQL_WORDS} AS ws FROM documents
+      SELECT {SQL_WORDS} AS ws FROM documents
     ), tok AS (
       SELECT unnest({_SQL_TRIGRAMS}) AS w FROM doc
     ), tc AS (
@@ -222,7 +217,6 @@ def good_turing_smoothed_counts(
             .cast("long")
             .alias("r_star_micro"),
         )
-        .orderBy("r")
     )
 
 
@@ -243,7 +237,7 @@ _KEY_TOP = 25
     "keyness_loglik_terms",
     f"""
     WITH tok AS (
-      SELECT lang, unnest({_SQL_WORDS}) AS w FROM documents
+      SELECT lang, unnest({SQL_WORDS}) AS w FROM documents
     ), c AS (
       SELECT w,
              CAST(SUM(CASE WHEN lang = '{_KEY_LANG}' THEN 1 ELSE 0 END)
@@ -273,6 +267,8 @@ _KEY_TOP = 25
     FROM scored ORDER BY g2 DESC, w LIMIT {_KEY_TOP}
     """,
     tags=("llm", "text", "contrastive"),
+    order=("g2_micro DESC", "w"),
+    sort="body",
 )
 def keyness_loglik_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log-likelihood keyness (Dunning 1993): for each term, the G²
@@ -361,7 +357,7 @@ _T5_OFF_MOD = 16  # start offset 0..15 (max span 4 fits the block)
     "t5_span_corruption_plan",
     f"""
     WITH doc AS (
-      SELECT doc_id, {_SQL_WORDS} AS ws FROM documents
+      SELECT doc_id, {SQL_WORDS} AS ws FROM documents
     ), tok AS (
       SELECT doc_id, i, (i - 1) // {_T5_BLOCK} AS blk
       FROM doc, unnest(range(1, len(ws) + 1)) AS u(i)
@@ -448,7 +444,6 @@ def t5_span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("pct_masked_milli"),
         )
-        .orderBy("doc_id")
     )
 
 

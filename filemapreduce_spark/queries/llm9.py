@@ -19,13 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from filemapreduce_spark.queries import register
-from filemapreduce_spark.operators.textops import words
+from filemapreduce_spark.operators.textops import SQL_WORDS, words
 from filemapreduce_spark.sources.tables import load_table as t
 
-_SQL_WORDS = (
-    "list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+'), "
-    "w -> w != '')"
-)
 
 _KN_D = 0.75  # the standard absolute discount
 _KN_TOP = 20
@@ -35,7 +31,7 @@ _KN_TOP = 20
     "kneser_ney_bigram_probs",
     f"""
     WITH doc AS (
-      SELECT {_SQL_WORDS} AS ws FROM documents
+      SELECT {SQL_WORDS} AS ws FROM documents
     ), bg AS (
       SELECT ws[i] AS v, ws[i+1] AS w
       FROM doc, unnest(range(1, len(ws))) AS u(i)

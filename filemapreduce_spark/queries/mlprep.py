@@ -126,7 +126,6 @@ def rfm_quintile_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_users"),
             F.sum("m_cents").cast("long").alias("segment_cents"),
         )
-        .orderBy("r_score", "f_score", "m_score")
     )
 
 
@@ -189,7 +188,6 @@ def loo_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).cast("long"),
             ).alias("loo_milli"),
         )
-        .orderBy("o_orderkey")
     )
 
 
@@ -280,7 +278,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.where(F.col("rank") <= _HN_K)
         .select("query_id", "neg_id", "cos", F.col("rank").cast("long"))
-        .orderBy("query_id", "rank")
     )
 
 
@@ -369,7 +366,6 @@ def class_balance_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_kept",
             "kept_set_checksum",
         )
-        .orderBy("label")
     )
 
 
@@ -457,7 +453,6 @@ def group_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "fold", "n_users", "n_rows", "max_folds_per_user"
         )
-        .orderBy("fold")
     )
 
 
@@ -678,7 +673,6 @@ def mutual_information_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("long").alias("n_cells"),
             F.round(F.sum(term), 6).alias("mi_nats"),
         )
-        .orderBy("feature")
     )
 
 
@@ -750,7 +744,7 @@ def empirical_bayes_rate_shrinkage(
         F.round(1000.0 * (F.col("x") + _EB_M * p0) / (F.col("n") + _EB_M))
         .cast("long")
         .alias("shrunk_milli"),
-    ).orderBy("user_id")
+    )
 
 
 # --------------------------------------------------------------------
@@ -869,5 +863,4 @@ def stratified_adjusted_difference(
             .alias("rate_diff_milli"),
         )
         .where((F.col("n_treated") > 0) & (F.col("n_control") > 0))
-        .orderBy("stratum")
     )

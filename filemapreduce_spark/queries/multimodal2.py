@@ -78,6 +78,7 @@ def _python_stage_partitions(spark: SparkSession) -> int:
     ORDER BY doc_id, rk
     """,
     tags=("multimodal", "audio", "llm"),
+    order=(),
 )
 def audio_frame_energy_top2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio feature extraction on DECODED samples: synthesize real
@@ -324,6 +325,7 @@ def parse_ppm(doc_id, b):
     ORDER BY p.doc_id
     """,
     tags=("multimodal", "image", "llm"),
+    order=(),
 )
 def image_decode_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image decode + resize, end to end and REAL: binary PPM (P6)
@@ -538,7 +540,6 @@ def image_pixel_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("channel", "bin")
         .agg(F.sum("n_pixels").cast("long").alias("n_pixels"))
-        .orderBy("channel", "bin")
     )
 
 
@@ -572,6 +573,7 @@ def image_pixel_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY doc_id
     """,
     tags=("multimodal", "audio", "dsp", "llm"),
+    order=(),
 )
 def audio_decimate_2to1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio decimation on decoded PCM: synthesize the WAV corpus,
@@ -918,7 +920,6 @@ def image_neardup_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(xb, "doc_b")
         .select("doc_a", "doc_b", ham.cast("long").alias("hamming"))
         .where(F.col("hamming") <= _DH_MAX_HAM)
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -1150,7 +1151,6 @@ def audio_neardup_energyprint(
         .join(xb, "doc_b")
         .select("doc_a", "doc_b", ham.cast("long").alias("hamming"))
         .where(F.col("hamming") <= _AF_MAX_HAM)
-        .orderBy("doc_a", "doc_b")
     )
 
 

@@ -20,13 +20,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from filemapreduce_spark.operators.money import cents
-from filemapreduce_spark.operators.textops import words
+from filemapreduce_spark.operators.textops import SQL_WORDS, words
 from filemapreduce_spark.queries import register
 from filemapreduce_spark.sources.tables import load_table as t
 
-# DuckDB twin of operators.textops.words (see llm.py's _SQL_WORDS).
-_SQL_WORDS = "list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+'), w -> w != '')"
-_SQL_TOK = f"len({_SQL_WORDS})"
+_SQL_TOK = f"len({SQL_WORDS})"
 
 
 # --------------------------------------------------------------------
@@ -88,7 +86,6 @@ def sequence_pack_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.floor((F.sum("tok") - 1) / 256) + 1).alias("n_seqs"),
             F.sum(F.when(start_seq != end_seq, 1).otherwise(0)).alias("n_crossing"),
         )
-        .orderBy("source")
     )
 
 
@@ -137,7 +134,6 @@ def chunk_overlap_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "tok",
             "n_chunks",
         )
-        .orderBy("doc_id", "chunk_idx")
     )
 
 
@@ -149,7 +145,7 @@ def chunk_overlap_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     "segment_dedup_corpus",
     f"""
     WITH d AS (
-      SELECT source, doc_id, {_SQL_WORDS} AS ws FROM documents
+      SELECT source, doc_id, {SQL_WORDS} AS ws FROM documents
     ), s AS (
       SELECT source, doc_id,
              CAST(unnest(range((len(ws) + 7) // 8)) AS BIGINT) AS seg_idx,
@@ -237,7 +233,6 @@ def segment_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).otherwise(0)
             ).alias("words_removed"),
         )
-        .orderBy("source")
     )
 
 
@@ -324,7 +319,6 @@ def mixture_resample_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("rows_out"),
             F.sum("tok").alias("tokens_out"),
         )
-        .orderBy("lang")
     )
 
 
@@ -335,7 +329,7 @@ def mixture_resample_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "classifier_score_quality",
     f"""
     WITH d AS (
-      SELECT doc_id, {_SQL_WORDS} AS ws, CAST(n_chars AS BIGINT) AS n_chars
+      SELECT doc_id, {SQL_WORDS} AS ws, CAST(n_chars AS BIGINT) AS n_chars
       FROM documents
     ), f AS (
       SELECT doc_id,
@@ -403,7 +397,7 @@ def classifier_score_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             "quality_prob"
         ),
         F.coalesce(margin >= 2.0, F.lit(False)).alias("keep"),
-    ).orderBy("doc_id")
+    )
 
 
 # --------------------------------------------------------------------
@@ -413,7 +407,7 @@ def classifier_score_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bpe_pair_counts_top50",
     f"""
     WITH d AS (
-      SELECT doc_id, {_SQL_WORDS} AS ws FROM documents
+      SELECT doc_id, {SQL_WORDS} AS ws FROM documents
     ), w AS (
       SELECT unnest(ws) AS word FROM d
     ), pairs AS (
@@ -560,7 +554,7 @@ def skyline_parts_price_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = p.groupBy("price_cents", F.col("p_size").alias("size")).agg(
         F.count(F.lit(1)).alias("n_parts")
     )
-    return front.join(counts, ["price_cents", "size"]).orderBy("price_cents")
+    return front.join(counts, ["price_cents", "size"])
 
 
 # --------------------------------------------------------------------
@@ -609,7 +603,6 @@ def robust_stats_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("mad"),
             F.count(F.lit(1)).alias("n"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -693,7 +686,7 @@ def contingency_chi2_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             ((F.col("n") - expected) * (F.col("n") - expected)) / expected, 6
         ).alias("chi2_term"),
-    ).orderBy("lang", "source")
+    )
 
 
 # --------------------------------------------------------------------
@@ -778,7 +771,6 @@ def sequence_pack_cu_seqlens(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ",",
             ).alias("cu_seqlens"),
         )
-        .orderBy("source", "seq_idx")
     )
 
 
@@ -930,5 +922,4 @@ def binary_header_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("w").alias("sum_width"),
             F.sum("h").alias("sum_height"),
         )
-        .orderBy("source")
     )

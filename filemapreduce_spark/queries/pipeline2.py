@@ -86,7 +86,6 @@ def domain_cap_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("dropped_chars"),
         )
-        .orderBy("source")
     )
 
 
@@ -166,7 +165,7 @@ def shard_stripe_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("imbalance_milli"),
-    ).orderBy("shard")
+    )
 
 
 # --------------------------------------------------------------------
@@ -240,5 +239,4 @@ def length_bucket_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("padding_chars"),
         )
-        .orderBy("bucket")
     )

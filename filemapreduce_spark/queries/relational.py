@@ -20,7 +20,6 @@ from filemapreduce_spark.operators.money import (
     charge_e6,
     disc_price_e4,
 )
-from filemapreduce_spark.operators.output import one_part_sorted, tiny_sorted
 from filemapreduce_spark.queries import register
 
 
@@ -81,7 +80,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.count("*").alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
     )
 
 
@@ -202,7 +200,6 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("o_orderpriority")
         .agg(F.count("*").alias("order_count"))
-        .orderBy("o_orderpriority")
     )
 
 
@@ -254,7 +251,6 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("revenue")
         )
-        .orderBy(F.col("revenue").desc(), F.col("n_name"))
     )
 
 
@@ -368,7 +364,6 @@ def join_left_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "total_spend"
             ),
         )
-        .orderBy("c_custkey")
     )
 
 
@@ -407,7 +402,6 @@ def join_semi_anti_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n_with_orders", F.lit(0)).alias("n_with_orders"),
             F.coalesce("n_without_orders", F.lit(0)).alias("n_without_orders"),
         )
-        .orderBy("c_mktsegment")
     )
 
 
@@ -442,7 +436,6 @@ def join_full_outer_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n_cust", F.lit(0)).alias("n_cust"),
             F.coalesce("n_supp", F.lit(0)).alias("n_supp"),
         )
-        .orderBy("nationkey")
     )
 
 
@@ -461,6 +454,9 @@ def join_full_outer_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY p_brand, rn
     """,
     tags=("window", "topk"),
+    # brands x 3 rows; repartition(1) keeps the ranking window parallel
+    # (coalesce(1) would serialize it) and skips orderBy's sampling job
+    sort="one_part_sorted",
 )
 def window_topk_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 per group via ranking window (the scalable top-k-per-key
@@ -469,17 +465,10 @@ def window_topk_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("p_brand").orderBy(
         F.col("p_retailprice").desc(), F.col("p_partkey")
     )
-    # one_part_sorted, not tiny_sorted: coalesce(1) would merge into
-    # the window stage and serialize the (data-sized) ranking itself;
-    # the repartition(1) exchange keeps the ranking parallel and only
-    # the bounded brands×3 result crosses the wire (0.24→0.13 s vs
-    # orderBy's sampling pass at sf0.1)
-    return one_part_sorted(
+    return (
         p.withColumn("rn", F.row_number().over(w).cast("long"))
         .filter(F.col("rn") <= 3)
-        .select("p_brand", "p_partkey", "p_retailprice", "rn"),
-        "p_brand",
-        "rn",
+        .select("p_brand", "p_partkey", "p_retailprice", "rn")
     )
 
 
@@ -498,6 +487,7 @@ def window_topk_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
              l_linenumber
     """,
     tags=("window",),
+    order=("l_suppkey", "l_orderkey", "l_linenumber"),
 )
 def window_running_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running total per key — frame-based window aggregation.
@@ -519,7 +509,6 @@ def window_running_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "running_qty", F.sum(F.col("l_quantity").cast("long")).over(w)
         )
         .select("l_suppkey", "l_orderkey", "l_linenumber", "running_qty")
-        .orderBy("l_suppkey", "l_orderkey", "l_linenumber")
     )
 
 
@@ -533,6 +522,7 @@ def window_running_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY user_id, ts, event_id
     """,
     tags=("window", "lag"),
+    order=("user_id", "event_id"),
 )
 def window_lag_event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag() analytic — inter-event gap per user (null for first)."""
@@ -542,7 +532,6 @@ def window_lag_event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         e.withColumn("gap_us", epoch - F.lag(epoch).over(w))
         .select("event_id", "user_id", "gap_us")
-        .orderBy("user_id", "event_id")
     )
 
 
@@ -601,7 +590,6 @@ def window_rank_supplier_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rnk", F.dense_rank().over(w).cast("long"))
         .withColumn("quartile", quartile.cast("long"))
         .select("s_nationkey", "s_suppkey", "s_acctbal", "rnk", "quartile")
-        .orderBy("s_nationkey", "rnk")
     )
 
 
@@ -640,7 +628,6 @@ def rollup_lineitem_status(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_qty",
             "n",
         )
-        .orderBy("returnflag", "linestatus")
     )
 
 
@@ -672,7 +659,6 @@ def cube_events_type_year(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             "sum_value",
         )
-        .orderBy("etype", "yr")
     )
 
 
@@ -699,7 +685,6 @@ def grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
                COUNT(*) AS n
         FROM orders_gs
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        ORDER BY status, priority
         """
     )
 
@@ -728,7 +713,6 @@ def distinct_counts_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("l_suppkey").alias("n_supps"),
             F.count("*").alias("n_rows"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -760,9 +744,7 @@ def setop_union_rich_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("s_acctbal") > 9000)
         .select(F.col("s_nationkey").alias("nk"))
     )
-    return (
-        c.union(s).distinct().groupBy("nk").agg(F.count("*").alias("n")).orderBy("nk")
-    )
+    return c.union(s).distinct().groupBy("nk").agg(F.count("*").alias("n"))
 
 
 @register(
@@ -781,7 +763,7 @@ def setop_intersect_rich_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("s_acctbal") > 9000)
         .select(F.col("s_nationkey").alias("nk"))
     )
-    return c.intersect(s).groupBy("nk").agg(F.count("*").alias("n")).orderBy("nk")
+    return c.intersect(s).groupBy("nk").agg(F.count("*").alias("n"))
 
 
 @register(
@@ -801,7 +783,7 @@ def setop_except_rich_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("s_nationkey").alias("nk"))
     )
     # subtract == EXCEPT DISTINCT (exceptAll would keep multiplicity)
-    return c.subtract(s).groupBy("nk").agg(F.count("*").alias("n")).orderBy("nk")
+    return c.subtract(s).groupBy("nk").agg(F.count("*").alias("n"))
 
 
 # --------------------------------------------------------------------
@@ -844,7 +826,7 @@ def scalar_string_part(spark: SparkSession, sf_dir: str) -> DataFrame:
         # unknown
         F.concat("p_brand", F.lit(":"), "p_type").alias("brand_type"),
         F.substring("p_name", 1, 8).alias("name_prefix"),
-    ).orderBy("p_partkey")
+    )
 
 
 @register(
@@ -875,7 +857,7 @@ def scalar_datetime_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             "days_since"
         ),
         F.quarter("o_orderdate").alias("qtr"),
-    ).orderBy("o_orderkey")
+    )
 
 
 @register(
@@ -910,7 +892,7 @@ def scalar_math_case_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("small")
         .alias("qty_class"),
         F.greatest("l_discount", "l_tax").alias("max_rate"),
-    ).orderBy("l_orderkey", "l_linenumber")
+    )
 
 
 @register(
@@ -934,7 +916,6 @@ def json_extract_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.get_json_object("props", "$.k").try_cast("long")).alias("sum_k"),
             F.count("*").alias("n"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -950,6 +931,9 @@ def json_extract_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 10
     """,
     tags=("sort", "topk"),
+    # the top-k is the whole plan (no exchange): a sort on top of it
+    # would only wrap the same plan in an AdaptiveSparkPlan
+    sort="body",
 )
 def topk_orders_by_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-k — Spark plans TakeOrderedAndProject, not a full
@@ -986,7 +970,6 @@ def pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .pivot("o_orderstatus", ["F", "O", "P"])
         .count()
         .na.fill(0, ["F", "O", "P"])
-        .orderBy("o_orderpriority")
     )
 
 
@@ -1007,6 +990,7 @@ def pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY s.event_id
     """,
     tags=("join", "range"),
+    order=("signup_id",),
 )
 def range_join_signup_follows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval join expressed as a time-RANGE window frame: events in
@@ -1041,7 +1025,6 @@ def range_join_signup_follows(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("event_type") == "signup")
         .select(F.col("event_id").alias("signup_id"), "n_follow")
-        .orderBy("signup_id")
     )
 
 
@@ -1087,7 +1070,7 @@ def asof_join_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.col("asof_event_id").alias("asof_click_id"),
         F.col("asof_value").alias("asof_click_value"),
-    ).orderBy("purchase_id")
+    )
 
 
 @register(
@@ -1137,7 +1120,7 @@ def asof_join_tolerance_30min(spark: SparkSession, sf_dir: str) -> DataFrame:
         "purchase_id",
         "user_id",
         F.col("asof_event_id").alias("asof_click_id"),
-    ).orderBy("purchase_id")
+    )
 
 
 @register(
@@ -1175,7 +1158,6 @@ def topk_with_ties_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("rnk", F.rank().over(w).cast("long"))
         .where(F.col("rnk") <= 10)
-        .orderBy("rnk", "o_orderkey")
     )
 
 
@@ -1223,7 +1205,6 @@ def systematic_sample_user_events(spark: SparkSession, sf_dir: str) -> DataFrame
             "event_id",
             F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
         )
-        .orderBy("user_id", "event_id")
     )
 
 
@@ -1274,7 +1255,6 @@ def join_salted_user_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_events"),
             as_money(F.sum("spend_cents")).alias("total_spend"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1333,7 +1313,6 @@ def stats_moments_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / (n - F.lit(1))
             ).alias("var_q"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -1387,7 +1366,6 @@ def unpivot_order_money(spark: SparkSession, sf_dir: str) -> DataFrame:
             "kind",
             as_money(F.col("amount_cents")).alias("amount"),
         )
-        .orderBy("o_orderkey", "kind")
     )
 
 
@@ -1429,7 +1407,6 @@ def window_range_30day_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
             as_money(F.sum(cents("o_totalprice")).over(w)).alias("revenue_30d"),
         )
-        .orderBy("o_custkey", "orderdate")
     )
 
 
@@ -1476,7 +1453,6 @@ def array_agg_order_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(F.collect_list("l_partkey")).alias("n_parts"),
             F.try_element_at(parts, F.lit(1)).alias("first_part"),
         )
-        .orderBy("l_orderkey")
     )
 
 
@@ -1519,7 +1495,6 @@ def variant_props_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("k").alias("min_k"),
             F.max("k").alias("max_k"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1585,7 +1560,7 @@ def incremental_reduce_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_shipdate") >= "1997-01-01"), keys, qty
     )
     merged = merge_states([history, delta], keys)
-    return finalize_state(merged, keys).orderBy(*keys)
+    return finalize_state(merged, keys)
 
 
 # --------------------------------------------------------------------
@@ -1621,7 +1596,6 @@ def string_agg_nation_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "supplier_csv"
             ),
         )
-        .orderBy("n_name")
     )
 
 
@@ -1663,7 +1637,6 @@ def window_percentile_position(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
             F.round(F.cume_dist().over(w), 6).alias("cume"),
         )
-        .orderBy("c_mktsegment", "c_custkey")
     )
 
 
@@ -1703,7 +1676,6 @@ def lateral_topk_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
           WHERE c_nationkey = n_nationkey
           ORDER BY c_acctbal DESC, c_name LIMIT 2
         ) c
-        ORDER BY n_name, c.c_acctbal DESC, c.c_name
         """
     )
 
@@ -1753,7 +1725,6 @@ def join_null_safe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.join(F.broadcast(d), c["seg"].eqNullSafe(d["seg"]))
         .groupBy("label")
         .agg(F.count(F.lit(1)).alias("n_customers"))
-        .orderBy("label")
     )
 
 
@@ -1837,7 +1808,6 @@ def hll_sketch_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.abs(F.col("est_merged") - exact) * 20 <= exact
             ).alias("est_within_5pct"),
         )
-        .orderBy("day")
     )
 
 
@@ -1901,7 +1871,6 @@ def scd2_user_type_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"),
             F.min(F.unix_micros("ts")).alias("valid_from_us"),
         )
-        .orderBy("user_id", "version")
     )
 
 
@@ -1965,7 +1934,6 @@ def map_ops_type_values(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("cents") / 100.0).cast("double").alias("type_value"),
             F.col("n_types").cast("int").alias("n_types"),
         )
-        .orderBy("user_id", "event_type")
     )
 
 
@@ -2036,7 +2004,7 @@ def gapfill_daily_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("day", "yyyy-MM-dd").alias("day"),
         F.coalesce("cnt", F.lit(0)).alias("cnt"),
         F.last("cnt", ignorenulls=True).over(w).alias("last_observed"),
-    ).orderBy("event_type", "day")
+    )
 
 
 # --------------------------------------------------------------------
@@ -2128,7 +2096,7 @@ def stats_corr_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.try_divide(cov_n, var_x_n), 6).alias(
             "slope_cents_per_qty"
         ),
-    ).orderBy("l_returnflag")
+    )
 
 
 # --------------------------------------------------------------------
@@ -2176,7 +2144,6 @@ def setop_all_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
         ea.unionByName(ia)
         .groupBy("op", F.col("p").alias("o_orderpriority"))
         .agg(F.count("*").alias("n"))
-        .orderBy("op", "o_orderpriority")
     )
 
 
@@ -2216,7 +2183,6 @@ def histogram_price_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("c").alias("min_cents"),
             F.max("c").alias("max_cents"),
         )
-        .orderBy("bin")
     )
 
 
@@ -2257,7 +2223,7 @@ def mode_priority_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
         F.col("b.o_orderpriority").alias("mode_priority"),
         F.col("b.cnt").alias("mode_count"),
-    ).orderBy("o_orderstatus")
+    )
 
 
 # --------------------------------------------------------------------
@@ -2295,7 +2261,7 @@ def sql_text_monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                     AS DOUBLE) AS gross
         FROM orders
         WHERE o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1998-01-01'
-        GROUP BY y, m ORDER BY y, m
+        GROUP BY y, m
         """
     )
 
@@ -2357,7 +2323,7 @@ def higher_order_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_max(F.transform("ws", lambda w: F.length(w))).alias(
             "longest_word"
         ),
-    ).orderBy("doc_id")
+    )
 
 
 # --------------------------------------------------------------------
@@ -2547,7 +2513,6 @@ def pagerank_trade_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation"),
             F.col("r").alias("rank_e12"),
         )
-        .orderBy("nationkey")
     )
 
 
@@ -2591,10 +2556,7 @@ def posexplode_leading_words(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("text").isNotNull())
         .select("doc_id", F.slice(words(F.col("text")), 1, 3).alias("ws"))
     )
-    return (
-        d.select("doc_id", F.posexplode("ws").alias("pos", "word"))
-        .orderBy("doc_id", "pos")
-    )
+    return d.select("doc_id", F.posexplode("ws").alias("pos", "word"))
 
 
 # --------------------------------------------------------------------
@@ -2636,10 +2598,7 @@ def explode_outer_long_words(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rare"
         ),
     )
-    return (
-        d.select("doc_id", F.explode_outer("rare").alias("word"))
-        .orderBy("doc_id", F.col("word").asc_nulls_first())
-    )
+    return d.select("doc_id", F.explode_outer("rare").alias("word"))
 
 
 # --------------------------------------------------------------------
@@ -2683,7 +2642,7 @@ def window_nav_supplier_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.first("s_suppkey").over(w).alias("richest"),
         F.nth_value("s_suppkey", 2).over(w).alias("second_richest"),
         F.last("s_suppkey").over(w).alias("poorest"),
-    ).orderBy("s_nationkey", "s_suppkey")
+    )
 
 
 # --------------------------------------------------------------------
@@ -2731,7 +2690,6 @@ def table_checksum_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"),
             F.bit_xor(row_hash).alias("checksum"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -2802,7 +2760,6 @@ def snapshot_diff_order_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_orders"),
             F.sum(F.col("bn") - F.col("an")).alias("line_delta"),
         )
-        .orderBy("change")
     )
 
 
@@ -2847,7 +2804,6 @@ def rolling_7day_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         j.groupBy(F.col("d.day").alias("day"))
         .agg(F.countDistinct("u.user_id").alias("active_7d"))
         .withColumn("day", F.date_format("day", "yyyy-MM-dd"))
-        .orderBy("day")
     )
 
 
@@ -2894,7 +2850,6 @@ def retention_cohorts_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "cohort_day", F.date_format("cohort_day", "yyyy-MM-dd")
         )
-        .orderBy("cohort_day", "week_offset")
     )
 
 
@@ -3009,7 +2964,6 @@ def revenue_share_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("rev_cents").cast("double") / F.col("total_cents"), 9
             ).alias("share"),
         )
-        .orderBy("nation")
     )
 
 
@@ -3208,4 +3162,4 @@ def asof_join_forward_fulfillment(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .cast("long")
         .alias("wait_us"),
-    ).orderBy("click_id")
+    )

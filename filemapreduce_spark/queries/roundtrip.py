@@ -27,12 +27,12 @@ from __future__ import annotations
 
 import atexit
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from filemapreduce_spark.operators.money import SQL_CENTS, cents
+from filemapreduce_spark.operators.scratch import scratch_dir
 from filemapreduce_spark.queries import register
 from filemapreduce_spark.sinks import (
     compact_files,
@@ -41,18 +41,14 @@ from filemapreduce_spark.sinks import (
 )
 from filemapreduce_spark.sources.tables import load_table as t
 
-# Scratch dirs and uuid-suffixed bucketed tables created per
-# invocation are reaped at interpreter exit so repeated runs (bench
-# reps, sweeps, long sessions) don't permanently accumulate /tmp
-# directories and spark-warehouse tables.
-_SCRATCH_DIRS: list[str] = []
+# uuid-suffixed bucketed tables created per invocation are dropped at
+# interpreter exit so repeated runs (bench reps, sweeps, long
+# sessions) don't accumulate spark-warehouse tables.
 _SCRATCH_TABLES: list[str] = []
 
 
 @atexit.register
 def _reap_scratch() -> None:
-    for d in _SCRATCH_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
     if _SCRATCH_TABLES:
         try:
             spark = SparkSession.getActiveSession()
@@ -63,12 +59,6 @@ def _reap_scratch() -> None:
             pass  # JVM already gone — warehouse dirs swept below
         for name in _SCRATCH_TABLES:
             shutil.rmtree(f"spark-warehouse/{name}", ignore_errors=True)
-
-
-def _scratch(label: str) -> str:
-    d = tempfile.mkdtemp(prefix=f"fmr_{label}_")
-    _SCRATCH_DIRS.append(d)
-    return d
 
 
 # --------------------------------------------------------------------
@@ -106,7 +96,7 @@ def sink_partitioned_prune_roundtrip(
     base = t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_returnflag", "l_linestatus"
     )
-    dest = _scratch("part_prune")
+    dest = scratch_dir("part_prune")
     write_partitioned(
         base.repartition("l_returnflag"), dest, ["l_returnflag"]
     )
@@ -126,7 +116,6 @@ def sink_partitioned_prune_roundtrip(
             F.count("*").alias("n_rows"),
             F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"),
         )
-        .orderBy("l_linestatus")
     )
 
 
@@ -166,7 +155,7 @@ def sink_clustered_timerange_roundtrip(
     base = t(spark, sf_dir, "lineitem").select(
         "l_shipdate", "l_returnflag", "l_extendedprice"
     )
-    dest = _scratch("clustered")
+    dest = scratch_dir("clustered")
     write_clustered(base, dest, ["l_shipdate"], n_files=8)
     lo = F.lit("1996-01-01").cast("timestamp")
     hi = F.lit("1997-01-01").cast("timestamp")
@@ -179,7 +168,6 @@ def sink_clustered_timerange_roundtrip(
             F.count("*").alias("n_rows"),
             F.sum(cents("l_extendedprice")).alias("revenue_cents"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -215,8 +203,8 @@ def sink_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = t(spark, sf_dir, "part").select(
         "p_partkey", "p_brand", "p_retailprice"
     )
-    frag = _scratch("fragmented")
-    dest = _scratch("compacted")
+    frag = scratch_dir("fragmented")
+    dest = scratch_dir("compacted")
     base.repartition(64).write.mode("overwrite").parquet(frag)
     compact_files(spark, frag, dest, target_file_bytes=1 << 30)
     back = spark.read.parquet(dest)
@@ -226,7 +214,6 @@ def sink_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_parts"),
             F.sum(cents("p_retailprice")).alias("retail_cents"),
         )
-        .orderBy("p_brand")
     )
 
 
@@ -262,7 +249,7 @@ def sink_csv_schema_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = t(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
-    dest = _scratch("csv")
+    dest = scratch_dir("csv")
     base.write.mode("overwrite").option("header", "true").csv(dest)
     back = spark.read.schema(
         "doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT"
@@ -274,7 +261,6 @@ def sink_csv_schema_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("n_chars").cast("decimal(38,0)")).cast("double").alias("total_chars"),
             F.min("doc_id").alias("first_doc"),
         )
-        .orderBy("lang", "source")
     )
 
 
@@ -329,7 +315,6 @@ def sink_bucketed_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_lines"),
             F.sum(cents("l_extendedprice")).alias("revenue_cents"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -370,7 +355,7 @@ def sink_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = t(spark, sf_dir, "part").select(
         "p_brand", "p_size", "p_retailprice"
     )
-    dest = _scratch("zorder")
+    dest = scratch_dir("zorder")
     write_zordered(base, dest, ("p_size", "p_retailprice"), n_files=8)
     back = spark.read.parquet(dest).where(
         F.col("p_size").between(10, 20)
@@ -382,7 +367,6 @@ def sink_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_parts"),
             F.sum("p_size").cast("long").alias("size_sum"),
         )
-        .orderBy("p_brand")
     )
 
 
@@ -424,7 +408,7 @@ def sink_hilbert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = t(spark, sf_dir, "part").select(
         "p_brand", "p_size", "p_retailprice"
     )
-    dest = _scratch("hilbert")
+    dest = scratch_dir("hilbert")
     write_hilbert(base, dest, ("p_size", "p_retailprice"), n_files=8)
     back = spark.read.parquet(dest).where(
         F.col("p_size").between(25, 40)
@@ -439,7 +423,6 @@ def sink_hilbert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("price_cents"),
         )
-        .orderBy("p_brand")
     )
 
 
@@ -485,7 +468,7 @@ def sink_manifest_exactly_once(
     )
     b1 = base.where(F.col("o_orderkey") % 2 == 0)
     b2 = base.where(F.col("o_orderkey") % 2 != 0)
-    root = _scratch("manifest")
+    root = scratch_dir("manifest")
     manifest = os.path.join(root, "_manifest.json")
 
     def write_batch(df, commit: bool) -> str:
@@ -524,5 +507,4 @@ def sink_manifest_exactly_once(
             F.count(F.lit(1)).alias("n_orders"),
             F.sum(cents("o_totalprice")).cast("long").alias("sum_cents"),
         )
-        .orderBy("priority")
     )

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from filemapreduce_spark.operators.textops import SQL_WORDS
 from filemapreduce_spark.queries import register
 from filemapreduce_spark.sources.tables import load_table as t
 
@@ -153,7 +154,6 @@ def trigram_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("precision_milli"),
         )
-        .orderBy("term")
     )
 
 
@@ -164,16 +164,13 @@ _BM25_TERMS = ("spark", "window", "hash")
 _BM25_K1 = 1.2
 _BM25_B = 0.75
 _BM25_TOPK = 10
-_SQL_WORDS = (
-    "list_filter(regexp_split_to_array(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+'), w -> w != '')"
-)
 
 
 @register(
     "bm25_search_topk",
     f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_SQL_WORDS}) AS tok FROM documents
+      SELECT doc_id, unnest({SQL_WORDS}) AS tok FROM documents
     ), dl AS (
       SELECT doc_id, COUNT(*) AS dlen FROM toks GROUP BY doc_id
     ), stats AS (
@@ -297,5 +294,4 @@ def bm25_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ranked.where(F.col("rn") <= _BM25_TOPK)
         .select("doc_id", "bm25")
-        .orderBy(F.col("bm25").desc(), F.col("doc_id"))
     )

@@ -202,7 +202,6 @@ def point_in_polygon_assignment(
             .cast("long")
             .alias("share_milli"),
         )
-        .orderBy("zone")
     )
 
 
@@ -297,7 +296,6 @@ def quadkey_spatial_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "quadkey",
             "n_points",
         )
-        .orderBy("level", "quadkey")
     )
 
 

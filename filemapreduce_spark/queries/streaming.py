@@ -63,6 +63,8 @@ atexit.register(_cleanup_pending)
     ORDER BY day, event_type
     """,
     tags=("streaming", "window"),
+    # days x types: bounded by the calendar
+    sort="tiny_sorted",
 )
 def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-day tumbling-window counts computed by an actual Structured
@@ -87,19 +89,11 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = _run_to_memory(agg.writeStream, name, "complete", (sf_dir, "tumbling"))
-    # result is the windowed AGGREGATE (#days × #types rows — bounded
-    # by the calendar, not data volume): one partition + local sort
-    # replaces orderBy's range-sampling exchange on a tiny table
-    return (
-        spark.table(name)
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd").alias("day"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-        .coalesce(1)
-        .sortWithinPartitions("day", "event_type")
+    return spark.table(name).select(
+        F.date_format(F.col("w.start"), "yyyy-MM-dd").alias("day"),
+        "event_type",
+        "n",
+        "sum_value",
     )
 
 
@@ -161,7 +155,6 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("ep").alias("start_epoch_us"),
             (F.max("ep") - F.min("ep")).alias("duration_us"),
         )
-        .orderBy("user_id", "session_id")
     )
 
 
@@ -327,7 +320,6 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             "sum_value",
         )
-        .orderBy("window_start", "event_type")
     )
 
 
@@ -395,7 +387,7 @@ def streaming_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     name = _run_to_memory(out.writeStream, name, "update", (sf_dir, "stateful"))
-    return spark.table(name).orderBy("user_id")
+    return spark.table(name)
 
 
 @register(
@@ -420,7 +412,7 @@ def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["user_id", "event_type"]
     )
     name = _run_to_memory(dedup.writeStream, name, "append", (sf_dir, "dedup"))
-    return spark.table(name).orderBy("user_id", "event_type")
+    return spark.table(name)
 
 
 @register(
@@ -472,7 +464,6 @@ def streaming_static_join_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n").alias("n_events"),
             F.count(F.lit(1)).alias("n_users"),
         )
-        .orderBy("c_mktsegment", "day")
     )
 
 
@@ -534,7 +525,6 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.unix_micros("p_ts") - F.unix_micros("c_ts")
             ).alias("min_lag_us"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -605,7 +595,6 @@ def streaming_session_window_native(
             "n_events",
             F.unix_micros(F.col("w.start")).alias("start_epoch_us"),
         )
-        .orderBy("user_id", "start_epoch_us")
     )
 
 
@@ -667,7 +656,6 @@ def session_window_batch_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("last_event_us"),
             "n_events",
         )
-        .orderBy("user_id", "session_start_us")
     )
 
 
@@ -805,7 +793,6 @@ def streaming_foreachbatch_upsert(
             F.col("n_events").cast("long"),
             "total_cents",
         )
-        .orderBy("user_id")
     )
 
 
@@ -824,6 +811,8 @@ def streaming_foreachbatch_upsert(
     ORDER BY event_type
     """,
     tags=("streaming", "incremental", "source"),
+    # bounded by the event-type domain
+    sort="tiny_sorted",
 )
 def streaming_incremental_file_arrival(
     spark: SparkSession, sf_dir: str
@@ -847,11 +836,7 @@ def streaming_incremental_file_arrival(
     _purge_stale_results(spark)
     hit = _RESULT_TABLES.get(key)
     if hit is not None and spark.catalog.tableExists(hit):
-        return (
-            spark.table(hit)
-            .coalesce(1)
-            .sortWithinPartitions("event_type")
-        )
+        return spark.table(hit)
 
     base = "/dev/shm" if os.path.isdir("/dev/shm") else None
     src = tempfile.mkdtemp(prefix="fmr_incr_src_", dir=base)
@@ -909,6 +894,4 @@ def streaming_incremental_file_arrival(
         # src + ckpt must outlive the query only within this session;
         # atexit-style sweep via the module's pending-dir list
         _PENDING_DIRS.extend([src, ckpt])
-    return (
-        spark.table(name).coalesce(1).sortWithinPartitions("event_type")
-    )
+    return spark.table(name)

@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from filemapreduce_spark.operators.money import as_money, cents, disc_price_e4, dsum
-from filemapreduce_spark.operators.output import tiny_sorted
 from filemapreduce_spark.queries import register
 from filemapreduce_spark.sources.tables import load_table as t
 
@@ -97,7 +96,6 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("revenue")
         )
-        .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
 
@@ -123,6 +121,8 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 20
     """,
     tags=("tpch", "join", "topk"),
+    order=("revenue DESC", "c_custkey"),
+    sort="body",
 )
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: top-20 customers by returned-item revenue in a
@@ -174,6 +174,8 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY custdist DESC, c_count DESC
     """,
     tags=("tpch", "join", "agg"),
+    # a histogram over the count domain
+    sort="tiny_sorted",
 )
 def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: histogram of per-customer order counts
@@ -191,11 +193,7 @@ def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_custkey")
         .agg(F.count("o_orderkey").alias("c_count"))
     )
-    return tiny_sorted(
-        per_cust.groupBy("c_count").agg(F.count("*").alias("custdist")),
-        F.col("custdist").desc(),
-        F.col("c_count").desc(),  # histogram over the count domain
-    )
+    return per_cust.groupBy("c_count").agg(F.count("*").alias("custdist"))
 
 
 # --------------------------------------------------------------------
@@ -244,7 +242,6 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s_name",
             (F.col("total_e4") / 10000.0).cast("double").alias("total_revenue"),
         )
-        .orderBy("s_suppkey")
     )
 
 
@@ -378,6 +375,8 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY c_mktsegment
     """,
     tags=("tpch", "subquery", "anti"),
+    # bounded by the market-segment domain
+    sort="tiny_sorted",
 )
 def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: customers richer than the positive-balance
@@ -406,7 +405,6 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("numcust"),
             as_money(F.sum(cents("c_acctbal"))).alias("totacctbal"),
         )
-        .transform(lambda d: tiny_sorted(d, "c_mktsegment"))
     )
 
 
@@ -427,6 +425,8 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY v_e4 DESC, p_partkey
     """,
     tags=("tpch", "subquery", "agg"),
+    order=("part_value DESC", "p_partkey"),
+    sort="body",
 )
 def q11_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape (adapted: no partsupp table): parts whose
@@ -514,7 +514,6 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s_name",
             (F.col("c_e4") / 10000.0).cast("double").alias("supply_value"),
         )
-        .orderBy("p_partkey", "s_name")
     )
 
 
@@ -597,7 +596,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(nat_vol).cast("double") / F.sum(vol).cast("double")
             ).alias("mkt_share")
         )
-        .orderBy("o_year")
     )
 
 
@@ -668,7 +666,6 @@ def q9_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             (F.sum(profit_e4) / 10000.0).cast("double").alias("profit")
         )
-        .orderBy("nation", F.col("o_year").desc())
     )
 
 
@@ -719,7 +716,6 @@ def q12_shipping_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(is_high, 1).otherwise(0)).alias("high_line_count"),
             F.sum(F.when(~is_high, 1).otherwise(0)).alias("low_line_count"),
         )
-        .orderBy("delay_class")
     )
 
 
@@ -757,7 +753,6 @@ def q16_supplier_count_by_part(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(pa, F.col("p_partkey") == F.col("l_partkey"))
         .groupBy("p_type", F.expr("p_size div 10").alias("size_decade"))
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.col("supplier_cnt").desc(), "p_type", "size_decade")
     )
 
 
@@ -837,7 +832,6 @@ def q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             "left_semi",
         )
         .select("s_suppkey", "s_name")
-        .orderBy("s_suppkey")
     )
 
 

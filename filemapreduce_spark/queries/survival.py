@@ -17,10 +17,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from filemapreduce_spark.operators.money import cents
+from filemapreduce_spark.operators.survival import HORIZON
 from filemapreduce_spark.queries import register
 from filemapreduce_spark.sources.tables import load_table as t
-
-_HORIZON = "2024-01-31"
 
 
 # Per-user (user_id, t_days, event) subject table — the shared base of
@@ -104,7 +103,7 @@ def _signup_purchase_subjects_locked(
         .groupBy("user_id")
         .agg(F.min("ts").alias("p_ts"))
     )
-    horizon = F.lit(_HORIZON).cast("date")
+    horizon = F.lit(HORIZON).cast("date")
     subjects = (
         s.join(p, "user_id", "left")
         .select(
@@ -148,7 +147,7 @@ def _signup_purchase_subjects_locked(
                   THEN date_diff('day', CAST(s.s_ts AS DATE),
                                  CAST(p.p_ts AS DATE))
                   ELSE date_diff('day', CAST(s.s_ts AS DATE),
-                                 DATE '{_HORIZON}')
+                                 DATE '{HORIZON}')
              END AS t_days,
              CASE WHEN p.p_ts IS NOT NULL THEN 1 ELSE 0 END AS event
       FROM s LEFT JOIN p ON p.user_id = s.user_id
@@ -239,7 +238,6 @@ def kaplan_meier_signup_purchase(
             .otherwise(F.round(F.exp(F.sum(term).over(wcum)), 6))
             .alias("survival"),
         )
-        .orderBy("t_days")
     )
 
 
@@ -324,7 +322,6 @@ def calibration_curve_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("pos_rate_milli"),
         )
-        .orderBy("decile")
     )
 
 
@@ -348,7 +345,7 @@ def calibration_curve_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
                   THEN date_diff('day', CAST(s.s_ts AS DATE),
                                  CAST(p.p_ts AS DATE))
                   ELSE date_diff('day', CAST(s.s_ts AS DATE),
-                                 DATE '{_HORIZON}')
+                                 DATE '{HORIZON}')
              END AS t_days,
              CASE WHEN p.p_ts IS NOT NULL THEN 1 ELSE 0 END AS event
       FROM s LEFT JOIN p ON p.user_id = s.user_id
@@ -524,7 +521,6 @@ def logrank_test_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit(0).cast("long"))
             .alias("chi2_milli"),
         )
-        .orderBy("grp")
     )
 
 
@@ -595,7 +591,7 @@ _RMST_TAU = 90  # days: the fixed restriction horizon
                     * (seg_end - seg_start)) FROM seg
                     WHERE seg_end > seg_start), 0) AS BIGINT)
              AS rmst_micro_days
-    """.replace("{H}", _HORIZON),
+    """.replace("{H}", HORIZON),
     tags=("survival", "stats"),
 )
 def rmst_signup_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,7 +23,6 @@ from pyspark.sql.functions import pandas_udf
 
 from filemapreduce_spark.queries import register
 from filemapreduce_spark.operators.money import cents
-from filemapreduce_spark.operators.output import one_part_sorted
 from filemapreduce_spark.sources.tables import load_table as t
 
 
@@ -37,6 +36,7 @@ from filemapreduce_spark.sources.tables import load_table as t
     FROM documents ORDER BY doc_id
     """,
     tags=("udx", "pandas_udf", "llm"),
+    sort="body",
 )
 def pandas_udf_char_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vectorized scalar `pandas_udf`: per-document character-class
@@ -100,6 +100,9 @@ def pandas_udf_char_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY event_type, rnk
     """,
     tags=("udx", "applyInPandas", "llm"),
+    # types x 3 rows; orderBy's sampling job would run both Python
+    # stages a second time (0.88 -> 0.60 s at sf0.1)
+    sort="one_part_sorted",
 )
 def apply_in_pandas_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped `applyInPandas`: per-event-type top-3 by value computed
@@ -147,18 +150,12 @@ def apply_in_pandas_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
         pdf["rnk"] = pdf.index + 1
         return pdf[["event_type", "event_id", "rnk"]]
 
-    # one_part_sorted, not orderBy: the range-partitioner's sampling
-    # job re-executes the child — i.e. runs BOTH Python stages a
-    # second time just to sample 15 result rows (0.88→0.60 s at
-    # sf0.1); the single-partition exchange ships only types×3 rows
-    return one_part_sorted(
+    return (
         e.mapInPandas(
             local_top3, schema="event_type string, event_id long, cents long"
         )
         .groupBy("event_type")
-        .applyInPandas(top3, schema="event_type string, event_id long, rnk long"),
-        "event_type",
-        "rnk",
+        .applyInPandas(top3, schema="event_type string, event_id long, rnk long")
     )
 
 
@@ -215,7 +212,6 @@ def udtf_shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT s.shingle, COUNT(*) AS n_docs
         FROM documents_udtf d, LATERAL fmr_distinct_shingles(d.text) s
         GROUP BY s.shingle HAVING COUNT(*) >= 3
-        ORDER BY n_docs DESC, shingle
         """
     )
 
@@ -278,7 +274,7 @@ def map_in_arrow_vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     return e.mapInArrow(
         norms, "vec_id long, dim int, l2_norm double"
-    ).orderBy("vec_id")
+    )
 
 
 # --------------------------------------------------------------------
@@ -351,7 +347,6 @@ def pandas_udaf_weighted_price(spark: SparkSession, sf_dir: str) -> DataFrame:
             wavg("price_cents", "qty").alias("wavg_price_cents"),
             qty_sum("qty").alias("total_qty"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -452,7 +447,6 @@ def clamped_running_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "unclamped_cents bigint, balance_cents bigint"
             ),
         )
-        .orderBy("user_id")
     )
 
 
@@ -599,4 +593,4 @@ def clamped_balance_parallel_scan(
             F.col("fn.lo"),
             F.least(F.col("fn.hi"), F.col("fn.s")),
         ).alias("balance_cents"),
-    ).orderBy("user_id")
+    )

@@ -14,6 +14,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """The driver heap: ``SPARK_GRAFT_DRIVER_MEM`` if set, else a quarter
+    of the machine's memory, at most 16 GB."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(16 * 1024, total_mb // 4)}m"
+
+
 def get_spark(
     app_name: str = "filemapreduce_spark",
     master: str | None = None,
@@ -23,7 +32,8 @@ def get_spark(
     """Build (or reuse) a SparkSession with engine defaults.
 
     Env overrides: SPARK_GRAFT_CPUS (local parallelism),
-    SPARK_GRAFT_SHUFFLE_PARTITIONS.
+    SPARK_GRAFT_SHUFFLE_PARTITIONS, SPARK_GRAFT_DRIVER_MEM (see
+    ``driver_memory``).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None:
@@ -46,7 +56,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         # the synthetic events table stores TIMESTAMP(NANOS); read the

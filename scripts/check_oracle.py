@@ -6,7 +6,10 @@ count, sorted column names, and canonicalized values.
 This module is also the one compare every oracle sweep uses
 (driver_sim, confrestricted_sweep, idempotence_sweep): the value canon
 (``canon``/``rows_to_canon``), the DuckDB views (``oracle_views``), the
-result diff (``compare``) and the per-query loop (``sweep``).
+result diff (``compare``), the result-order check (``order_breaks``)
+and the per-query loop (``sweep``). The canon ignores row order; the
+order each query declares (``QuerySpec.order``) is checked on its own
+and flagged ``ORDER``.
 
 Usage: python scripts/check_oracle.py [sf_dir] [query ...]
 """
@@ -20,10 +23,17 @@ import sys
 import time
 import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# the Spark Python workers import the library too (the UDF queries),
+# so a sweep started outside the checkout still finds it
+_paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+if ROOT not in _paths:
+    os.environ["PYTHONPATH"] = os.pathsep.join([ROOT] + _paths)
 
 import duckdb
 import numpy as np
+import pandas as pd
 
 from filemapreduce_spark.queries import load_all
 from filemapreduce_spark.session import get_spark
@@ -85,7 +95,12 @@ def main():
         res = con.execute(registry[name].oracle)
         return Rows([d[0] for d in res.description], res.fetchall())
 
-    return sweep(spark, sorted(registry), only, run, reference, compare)
+    def check_order(name, got):
+        return order_breaks(got.cols, got, registry[name].order)
+
+    return sweep(
+        spark, sorted(registry), only, run, reference, compare, check_order
+    )
 
 
 class Rows(list):
@@ -117,6 +132,75 @@ def compare(a: Rows, b: Rows, labels=("spark", "oracle")) -> list[str]:
     ]
 
 
+def _is_null(v) -> bool:
+    return v is None or v is pd.NaT or v is pd.NA
+
+
+def _value_key(v):
+    """A sort key for one non-null value under Spark's ordering: NaN
+    above every other number (and equal to NaN), -0.0 equal to 0.0,
+    strings by code point (UTF-8 byte order), arrays and structs
+    element by element with NULL elements first."""
+    if isinstance(v, (np.generic, np.ndarray)):
+        v = v.tolist()
+    if isinstance(v, float) and math.isnan(v):
+        return (1,)
+    if isinstance(v, (list, tuple)):
+        return (0, tuple((-1,) if _is_null(x) else _value_key(x) for x in v))
+    return (0, v)
+
+
+def _term_cmp(a, b, term, nan_is_null: bool) -> int:
+    """-1, 0 or 1: where ``a`` must sit relative to ``b`` under ``term``."""
+    if nan_is_null:
+        a, b = (None if isinstance(x, float) and x != x else x for x in (a, b))
+    na, nb = _is_null(a), _is_null(b)
+    if na or nb:
+        if na and nb:
+            return 0
+        return (-1 if na else 1) * (1 if term.nulls_first else -1)
+    ka, kb = _value_key(a), _value_key(b)
+    c = (ka > kb) - (ka < kb)
+    return -c if term.desc else c
+
+
+def order_breaks(cols, rows, order, nan_is_null=False) -> str | None:
+    """The first adjacent pair of ``rows`` out of ``order`` (a tuple of
+    ``queries.OrderTerm``), as an ``ORDER`` message; None if the rows
+    follow it. Ties on every term may come in any order.
+
+    ``nan_is_null=None`` is for pandas frames, where a float NaN may be
+    a NULL or a NaN: a pair passes if it is in order under either
+    reading.
+    """
+    if not order:
+        return None
+    lower = [c.lower() for c in cols]
+    idx = [
+        t.key - 1 if isinstance(t.key, int) else lower.index(t.key.lower())
+        for t in order
+    ]
+    modes = (False, True) if nan_is_null is None else (nan_is_null,)
+
+    def in_order(a, b, mode):
+        for i, t in zip(idx, order):
+            c = _term_cmp(a[i], b[i], t, mode)
+            if c:
+                return c < 0
+        return True
+
+    prev = None
+    for n, row in enumerate(rows):
+        if prev is not None and not any(in_order(prev, row, m) for m in modes):
+            keys = [cols[i] for i in idx]
+            return (
+                f"ORDER rows {n - 1},{n} break {keys}: "
+                f"{[prev[i] for i in idx]!r} then {[row[i] for i in idx]!r}"
+            )
+        prev = row
+    return None
+
+
 def oracle_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
     """A DuckDB connection with one view per table of ``sf_dir``."""
     con = duckdb.connect()
@@ -127,7 +211,10 @@ def oracle_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
-def sweep(spark, names, only, run, reference, diff, ok="PASS", flag="FAIL"):
+def sweep(
+    spark, names, only, run, reference, diff, check_order=None,
+    ok="PASS", flag="FAIL",
+):
     """Check each query of ``names`` (those in ``only``, if given) and
     print one status line per query and a summary; return the exit
     code, 1 if any query was flagged.
@@ -135,8 +222,10 @@ def sweep(spark, names, only, run, reference, diff, ok="PASS", flag="FAIL"):
     Per query: clear the cache (queries never unpersist what they
     persist, so a registry-long session would pile it up), ``run`` it,
     fetch its ``reference`` (None: no oracle, the rows are only
-    counted) and ``diff`` the two into a list of issues. An exception
-    on either side flags the query and prints its traceback.
+    counted) and ``diff`` the two into a list of issues, to which
+    ``check_order(name, result)`` adds its ``ORDER`` message, if any.
+    An exception on either side flags the query and prints its
+    traceback.
     """
     flagged, n_ok, n_rows_only, t_all = [], 0, 0, time.time()
     for name in names:
@@ -149,6 +238,9 @@ def sweep(spark, names, only, run, reference, diff, ok="PASS", flag="FAIL"):
             t_run = time.time() - t0
             want = reference(name)
             issues = None if want is None else diff(got, want)
+            broke = check_order and check_order(name, got)
+            if broke:
+                issues = (issues or []) + [broke]
         except Exception:
             print(f"{flag:<9} {name}: ERROR")
             traceback.print_exc()

@@ -31,13 +31,14 @@ def main():
     from pyspark.sql import SparkSession
 
     from filemapreduce_spark.queries import load_all
+    from filemapreduce_spark.session import driver_memory
 
     spark = (
         SparkSession.builder.master(
             os.environ.get("SPARK_SIM_MASTER", "local[32]")
         )
         .appName("confrestricted_sweep")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

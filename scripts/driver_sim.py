@@ -15,6 +15,7 @@ FLAG with what was found:
                   (VALUE shows the first diff)
   ARRAY-RISK    — an output column holds list values (driver canon
                   crashes with `unhashable type: 'list'`)
+  ORDER         — the rows break the query's declared order
   ERROR         — the query or its oracle raised
 plus wall time for the Spark side (driver-budget profiling).
 
@@ -32,7 +33,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import numpy as np  # noqa: E402
 import pandas as pd  # noqa: E402
 
-from check_oracle import Rows, compare, oracle_views, sweep  # noqa: E402
+from check_oracle import (  # noqa: E402
+    Rows,
+    compare,
+    oracle_views,
+    order_breaks,
+    sweep,
+)
 
 
 def build_driver_like_session():
@@ -44,12 +51,14 @@ def build_driver_like_session():
     """
     from pyspark.sql import SparkSession
 
+    from filemapreduce_spark.session import driver_memory
+
     return (
         SparkSession.builder.master(
             os.environ.get("SPARK_SIM_MASTER", "local[32]")
         )
         .appName("driver_sim")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
@@ -86,8 +95,18 @@ def has_lists(df: pd.DataFrame) -> list[str]:
 
 def sweep_frames(spark, sf_dir, only, queries, oracles):
     """Each query's ``toPandas()`` against its oracle's DuckDB ``.df()``:
-    ``strict_diff`` plus the ARRAY-RISK flag."""
+    ``strict_diff`` plus the ARRAY-RISK flag, and the frame's row order
+    against the query's declared order."""
+    from filemapreduce_spark.queries import load_all
+
     con = oracle_views(sf_dir)
+    registry = load_all()
+
+    def check_order(name, f):
+        rows = f.itertuples(index=False, name=None)
+        return order_breaks(
+            list(f.columns), rows, registry[name].order, nan_is_null=None
+        )
 
     def reference(name):
         sql = oracles.get(name)
@@ -101,7 +120,7 @@ def sweep_frames(spark, sf_dir, only, queries, oracles):
     return sweep(
         spark, sorted(queries), only,
         lambda name: queries[name](spark, sf_dir).toPandas(),
-        reference, diff, ok="OK", flag="FLAG",
+        reference, diff, check_order, ok="OK", flag="FLAG",
     )
 
 

@@ -9,10 +9,12 @@ Writes PLAN_AUDIT.md. Usage: python scripts/plan_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from filemapreduce_spark.queries import load_all
 from filemapreduce_spark.session import get_spark
@@ -224,7 +226,7 @@ def main():
         "",
     ]
 
-    out = "/root/repo/PLAN_AUDIT.md"
+    out = os.path.join(ROOT, "PLAN_AUDIT.md")
     with open(out, "w") as f:
         f.write("\n".join(lines))
     print(f"wrote {out}: {n} audited, {len(skipped)} skipped,"

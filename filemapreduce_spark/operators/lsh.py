@@ -1,6 +1,6 @@
 """MinHash-LSH near-duplicate machinery shared by the dedup queries
-(``queries.llm``, ``queries.llm2``, ``queries.llm3``), and the DuckDB
-twin of the doc-level pair query that several oracles embed."""
+(``queries.dedup``), and the DuckDB twin of the doc-level pair query
+that several oracles embed."""
 
 from __future__ import annotations
 

@@ -26,6 +26,29 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "de": ("der", "die", "das", "und", "ein"),
 }
 
+
+def lang_id(ws: Column) -> tuple[Column, Column]:
+    """Marker-word language ID over a words array: ``(pred, best)``,
+    where ``best`` is the top marker-hit count and ``pred`` its
+    language (tie-break de<en<es<fr, ``'und'`` when no marker hits).
+    ``SQL_LANG_SCORES`` is the DuckDB side's per-language count."""
+    scores = {
+        # single-arg lambda (a 2-arg lambda would receive the element
+        # index as its second argument)
+        lang: F.size(F.filter(ws, lambda w: w.isin(*markers)))
+        for lang, markers in LANG_MARKERS.items()
+    }
+    best = F.greatest(*scores.values())
+    pred = (
+        F.when(best == 0, "und")
+        .when(scores["de"] == best, "de")
+        .when(scores["en"] == best, "en")
+        .when(scores["es"] == best, "es")
+        .otherwise("fr")
+    )
+    return pred, best
+
+
 STOPWORDS = ("the", "a", "an", "of", "and", "to", "in", "is", "on", "for")
 
 # Declared corpus-text semantics (round-10 unicode axis): case folding

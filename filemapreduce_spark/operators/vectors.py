@@ -22,6 +22,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# DuckDB twin of the 64-wide cosine between list columns ``qe`` and
+# ``ce``, rounded to 6 places like the Spark side.
+SQL_COSINE = """
+    round(
+      list_sum(list_transform(range(1, 65), i -> qe[i]::DOUBLE * ce[i]::DOUBLE))
+      / (sqrt(list_sum(list_transform(range(1, 65), i -> qe[i]::DOUBLE * qe[i]::DOUBLE)))
+       * sqrt(list_sum(list_transform(range(1, 65), i -> ce[i]::DOUBLE * ce[i]::DOUBLE)))),
+      6)
+"""
+
 
 def to_double(vec: Column) -> Column:
     """float vector → double vector (do all math in float64)."""

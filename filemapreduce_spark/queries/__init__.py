@@ -42,7 +42,6 @@ evicts MEMORY_AND_DISK blocks safely).
 
 from __future__ import annotations
 
-import dataclasses
 import functools
 import re
 from dataclasses import dataclass
@@ -95,15 +94,22 @@ class QuerySpec:
     exchange), ``one_part_sorted`` or ``tiny_sorted`` (the
     ``operators.output`` helpers for bounded results), or ``body``,
     where the query body already yields it and nothing is added.
+
+    ``doc`` is the function's live docstring, so it includes the
+    constants some modules substitute into ``fn.__doc__`` after
+    registration.
     """
 
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
     tags: tuple[str, ...] = ()
-    doc: str = ""
     order: tuple[OrderTerm, ...] = ()
     sort: str = "orderBy"
+
+    @property
+    def doc(self) -> str:
+        return self.fn.__doc__ or ""
 
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -164,7 +170,6 @@ def register(
     name: str,
     oracle: str | None,
     tags: tuple[str, ...] = (),
-    doc: str = "",
     order: tuple[str, ...] | None = None,
     sort: str = "orderBy",
 ):
@@ -194,9 +199,7 @@ def register(
         def ordered(spark, sf_dir, *args, **kwargs):
             return _sort_result(fn(spark, sf_dir, *args, **kwargs), terms, sort)
 
-        REGISTRY[name] = QuerySpec(
-            name, ordered, oracle, tags, doc or (fn.__doc__ or ""), terms, sort
-        )
+        REGISTRY[name] = QuerySpec(name, ordered, oracle, tags, terms, sort)
         return ordered
 
     return deco
@@ -205,63 +208,21 @@ def register(
 def load_all() -> dict[str, QuerySpec]:
     """Import all query modules (side effect: fills REGISTRY)."""
     from filemapreduce_spark.queries import (  # noqa: F401
-        analytics2,
-        analytics3,
-        analytics4,
-        analytics5,
-        analytics6,
-        analytics7,
-        analytics8,
-        analytics9,
-        analytics10,
-        analytics11,
-        analytics12,
-        analytics13,
         audit,
-        coverage2,
-        coverage3,
-        coverage4,
-        coverage5,
-        coverage6,
-        coverage7,
-        coverage8,
-        corpus,
-        engineops,
-        fileops,
-        linalg,
-        llm,
-        llm2,
-        llm3,
-        llm4,
-        llm5,
-        llm6,
-        llm7,
-        llm8,
-        llm9,
-        llm10,
-        llm11,
-        llm12,
-        llm13,
+        curation,
+        dedup,
+        engine,
+        graph,
         mlprep,
-        multimodal2,
-        pipeline,
-        spatial,
-        pipeline2,
+        multimodal,
         relational,
-        roundtrip,
         search,
+        similarity,
+        stats,
         streaming,
-        subqueries,
-        survival,
-        udx,
+        text,
+        timeseries,
+        tpch,
     )
-
-    # Some modules substitute config constants into fn.__doc__ AFTER
-    # registration (e.g. "{K}" → "5"); re-sync so spec.doc always
-    # matches the live docstring the substitutions produced.
-    for name, spec in list(REGISTRY.items()):
-        live = spec.fn.__doc__ or ""
-        if live != spec.doc:
-            REGISTRY[name] = dataclasses.replace(spec, doc=live)
 
     return REGISTRY

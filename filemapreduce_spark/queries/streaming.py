@@ -1,12 +1,6 @@
-"""Structured Streaming surface.
-
-The reference has no streaming (verified — no watermark/window/state
-anywhere in /root/reference), so this is north-star extension surface:
-file-source streams with tumbling-window aggregation and gap-based
-sessionization. The tumbling aggregation has an exact batch oracle (a
-bounded file stream processed to completion computes the same answer
-as the batch query); sessionization is implemented as the batch
-window-function formulation with the same oracle.
+"""Structured Streaming: windowed and stateful aggregations,
+watermarks, stream-static and stream-stream joins, sessions,
+deduplication, foreachBatch upserts and incremental file arrival.
 """
 
 from __future__ import annotations
@@ -22,6 +16,7 @@ from pyspark.sql import functions as F
 
 from filemapreduce_spark.queries import register
 from filemapreduce_spark.sources.tables import load_table as t
+
 
 # Temp dirs (stream-source symlink dirs, checkpoint dirs) live only as
 # long as the bounded query that uses them: _run_to_memory deletes them

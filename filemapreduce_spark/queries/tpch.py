@@ -1,18 +1,8 @@
-"""Subquery-pattern suite (SURVEY.md §2 Part B, joins/aggregation):
-TPC-H-shaped queries adapted to the test schema (no partsupp table,
-reduced columns) that exercise the decorrelation patterns Catalyst
-must plan well at scale:
+"""TPC-H: the 22 benchmark queries over the sf tables.
 
-- uncorrelated scalar subquery as a filter bound (q22, q11 shapes)
-- correlated scalar subquery → groupBy + join-back (q17, q2, q15)
-- left-outer + re-aggregation distribution (q13)
-- multi-role dimension join (nation twice — q7)
-- disjunctive pushdown predicates (q19)
-- returned-items top-k over a 4-table join (q10)
-
-All money comparisons use exact integer cents (operators.money) so the
-DuckDB oracle hash-matches bit-for-bit; threshold comparisons are done
-in scaled integers (value_e4 * K > total_e4) — exact, never float.
+Each query keeps the TPC-H number in its name (``q1_pricing_summary``
+.. ``q22_idle_customers``); money columns use the exact integer-cents
+arithmetic of ``operators.money`` so both engines agree bit for bit.
 """
 
 from __future__ import annotations
@@ -20,9 +10,327 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from filemapreduce_spark.operators.money import as_money, cents, disc_price_e4, dsum
+from filemapreduce_spark.operators.money import (
+    as_money,
+    cents,
+    charge_e6,
+    disc_price_e4,
+    dsum,
+)
 from filemapreduce_spark.queries import register
 from filemapreduce_spark.sources.tables import load_table as t
+
+
+# --------------------------------------------------------------------
+# Grouped aggregation (TPC-H Q1 shape): 8 aggregates over 2 keys.
+# --------------------------------------------------------------------
+@register(
+    "q1_pricing_summary",
+    """
+    SELECT l_returnflag, l_linestatus,
+           CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
+           CAST(SUM(CAST(round(l_extendedprice*100) AS BIGINT)) / 100.0 AS DOUBLE) AS sum_base_price,
+           CAST(SUM(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT))) / 10000.0 AS DOUBLE) AS sum_disc_price,
+           CAST(SUM(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT)) * (100 + CAST(round(l_tax*100) AS BIGINT))) / 1000000.0 AS DOUBLE) AS sum_charge,
+           CAST(SUM(CAST(l_quantity AS BIGINT)) AS DOUBLE) / COUNT(*) AS avg_qty,
+           CAST(SUM(CAST(round(l_extendedprice*100) AS BIGINT)) AS DOUBLE) / (100.0 * COUNT(*)) AS avg_price,
+           CAST(SUM(CAST(round(l_discount*100) AS BIGINT)) AS DOUBLE) / (100.0 * COUNT(*)) AS avg_disc,
+           COUNT(*) AS count_order
+    FROM lineitem
+    WHERE l_shipdate <= TIMESTAMP '2000-09-02'
+    GROUP BY l_returnflag, l_linestatus
+    ORDER BY l_returnflag, l_linestatus
+    """,
+    tags=("agg", "tpch"),
+)
+def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pricing summary: multi-aggregate groupBy with partial (map-side)
+    aggregation; filter pushed to the parquet scan."""
+    l = t(spark, sf_dir, "lineitem").filter(
+        F.col("l_shipdate") <= F.lit("2000-09-02").cast("timestamp")
+    )
+    n = F.count(F.lit(1))
+    return (
+        l.groupBy("l_returnflag", "l_linestatus")
+        .agg(
+            F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"),
+            as_money(F.sum(cents("l_extendedprice"))).alias("sum_base_price"),
+            (F.sum(disc_price_e4("l_extendedprice", "l_discount")) / 10000.0)
+            .cast("double")
+            .alias("sum_disc_price"),
+            (
+                F.sum(charge_e6("l_extendedprice", "l_discount", "l_tax"))
+                / 1000000.0
+            )
+            .cast("double")
+            .alias("sum_charge"),
+            (F.sum(F.col("l_quantity").cast("long")).cast("double") / n).alias(
+                "avg_qty"
+            ),
+            (F.sum(cents("l_extendedprice")).cast("double") / (100.0 * n)).alias(
+                "avg_price"
+            ),
+            (F.sum(cents("l_discount")).cast("double") / (100.0 * n)).alias(
+                "avg_disc"
+            ),
+            F.count("*").alias("count_order"),
+        )
+    )
+
+
+# --------------------------------------------------------------------
+# Selective scan + single aggregate (TPC-H Q6): pushdown showcase.
+# --------------------------------------------------------------------
+@register(
+    "q6_revenue_delta",
+    """
+    SELECT CAST(SUM(CAST(round(l_extendedprice*100) AS BIGINT) * CAST(round(l_discount*100) AS BIGINT)) / 10000.0 AS DOUBLE) AS revenue,
+           COUNT(*) AS n_items
+    FROM lineitem
+    WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+      AND l_shipdate < TIMESTAMP '1998-01-01'
+      AND l_discount >= 0.05 AND l_discount <= 0.07
+      AND l_quantity < 24
+    """,
+    tags=("agg", "tpch", "pushdown"),
+)
+def q6_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Highly-selective filters — all pushed to the parquet reader —
+    then one exact sum."""
+    l = t(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
+        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
+        & (F.col("l_discount") >= 0.05)
+        & (F.col("l_discount") <= 0.07)
+        & (F.col("l_quantity") < 24)
+    )
+    return l.agg(
+        (F.sum(cents("l_extendedprice") * cents("l_discount")) / 10000.0)
+        .cast("double")
+        .alias("revenue"),
+        F.count("*").alias("n_items"),
+    )
+
+
+# --------------------------------------------------------------------
+# 3-way join + agg + top-k (TPC-H Q3 shape).
+# --------------------------------------------------------------------
+@register(
+    "q3_shipping_priority",
+    """
+    SELECT l_orderkey,
+           CAST(SUM(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT))) / 10000.0 AS DOUBLE) AS revenue,
+           strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
+           o_orderpriority
+    FROM customer JOIN orders ON c_custkey = o_custkey
+                  JOIN lineitem ON l_orderkey = o_orderkey
+    WHERE c_mktsegment = 'BUILDING'
+      AND o_orderdate < TIMESTAMP '1998-06-01'
+      AND l_shipdate > TIMESTAMP '1998-06-01'
+    GROUP BY l_orderkey, o_orderdate, o_orderpriority
+    ORDER BY revenue DESC, l_orderkey
+    LIMIT 10
+    """,
+    tags=("join", "agg", "topk", "tpch"),
+)
+def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Broadcast the small dimension (customer), shuffle-join the fact,
+    aggregate, TakeOrdered top-10."""
+    c = t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    o = t(spark, sf_dir, "orders").filter(
+        F.col("o_orderdate") < F.lit("1998-06-01").cast("timestamp")
+    )
+    l = t(spark, sf_dir, "lineitem").filter(
+        F.col("l_shipdate") > F.lit("1998-06-01").cast("timestamp")
+    )
+    return (
+        l.join(o, l.l_orderkey == o.o_orderkey)
+        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
+        .agg(
+            (F.sum(disc_price_e4("l_extendedprice", "l_discount")) / 10000.0)
+            .cast("double")
+            .alias("revenue")
+        )
+        .select(
+            "l_orderkey",
+            "revenue",
+            F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
+            "o_orderpriority",
+        )
+        .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
+        .limit(10)
+    )
+
+
+# --------------------------------------------------------------------
+# EXISTS semi-join + agg (TPC-H Q4 shape).
+# --------------------------------------------------------------------
+@register(
+    "q4_order_priority",
+    """
+    SELECT o_orderpriority, COUNT(*) AS order_count
+    FROM orders
+    WHERE o_orderdate >= TIMESTAMP '1996-01-01'
+      AND o_orderdate < TIMESTAMP '1996-07-01'
+      AND EXISTS (SELECT 1 FROM lineitem
+                  WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
+    GROUP BY o_orderpriority
+    ORDER BY o_orderpriority
+    """,
+    tags=("join", "semi", "agg", "tpch"),
+)
+def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXISTS as a left-semi join with a non-equi residual condition."""
+    o = t(spark, sf_dir, "orders").filter(
+        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
+        & (F.col("o_orderdate") < F.lit("1996-07-01").cast("timestamp"))
+    )
+    l = t(spark, sf_dir, "lineitem")
+    return (
+        o.join(
+            l,
+            (o.o_orderkey == l.l_orderkey) & (l.l_shipdate > o.o_orderdate),
+            "left_semi",
+        )
+        .groupBy("o_orderpriority")
+        .agg(F.count("*").alias("order_count"))
+    )
+
+
+# --------------------------------------------------------------------
+# 6-way join (TPC-H Q5 shape).
+# --------------------------------------------------------------------
+@register(
+    "q5_local_supplier_volume",
+    """
+    SELECT n_name,
+           CAST(SUM(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT))) / 10000.0 AS DOUBLE) AS revenue
+    FROM customer JOIN orders ON c_custkey = o_custkey
+                  JOIN lineitem ON l_orderkey = o_orderkey
+                  JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+                  JOIN nation ON s_nationkey = n_nationkey
+                  JOIN region ON n_regionkey = r_regionkey
+    WHERE r_name = 'ASIA'
+      AND o_orderdate >= TIMESTAMP '1997-01-01'
+      AND o_orderdate < TIMESTAMP '1998-01-01'
+    GROUP BY n_name
+    ORDER BY revenue DESC, n_name
+    """,
+    tags=("join", "agg", "tpch"),
+)
+def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Star join: every dimension broadcast, single shuffle for the
+    final groupBy."""
+    c = t(spark, sf_dir, "customer")
+    o = t(spark, sf_dir, "orders").filter(
+        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
+        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
+    )
+    l = t(spark, sf_dir, "lineitem")
+    s = t(spark, sf_dir, "supplier")
+    n = t(spark, sf_dir, "nation")
+    r = t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    return (
+        l.join(o, l.l_orderkey == o.o_orderkey)
+        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .join(
+            F.broadcast(s),
+            (l.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey),
+        )
+        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .groupBy("n_name")
+        .agg(
+            (F.sum(disc_price_e4("l_extendedprice", "l_discount")) / 10000.0)
+            .cast("double")
+            .alias("revenue")
+        )
+    )
+
+
+# --------------------------------------------------------------------
+# Join + conditional aggregation (TPC-H Q14 shape).
+# --------------------------------------------------------------------
+@register(
+    "q14_promo_revenue",
+    """
+    -- VARCHAR->DOUBLE on the wide sums: DuckDB's HUGEINT->DOUBLE
+    -- conversion truncates instead of rounding (r10 extreme axis)
+    SELECT 100.0 * CAST(CAST(SUM(CASE WHEN p_type = 'PROMO'
+                 THEN CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT))
+                 ELSE 0 END) AS VARCHAR) AS DOUBLE)
+           / CAST(CAST(SUM(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT))) AS VARCHAR) AS DOUBLE) AS promo_pct,
+           CAST(CAST(SUM(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT))) AS VARCHAR) AS DOUBLE) / 10000.0 AS total_revenue
+    FROM lineitem JOIN part ON l_partkey = p_partkey
+    WHERE l_shipdate >= TIMESTAMP '1997-09-01'
+      AND l_shipdate < TIMESTAMP '1997-10-01'
+    """,
+    tags=("join", "agg", "tpch"),
+)
+def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    l = t(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= F.lit("1997-09-01").cast("timestamp"))
+        & (F.col("l_shipdate") < F.lit("1997-10-01").cast("timestamp"))
+    )
+    p = t(spark, sf_dir, "part")
+    rev = disc_price_e4("l_extendedprice", "l_discount")
+    return (
+        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
+        .agg(
+            (
+                100.0
+                * F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0))).cast(
+                    "double"
+                )
+                / F.sum(rev)
+            ).alias("promo_pct"),
+            (F.sum(rev) / 10000.0).cast("double").alias("total_revenue"),
+        )
+    )
+
+
+# --------------------------------------------------------------------
+# Group-having-join + top-k (TPC-H Q18 shape).
+# --------------------------------------------------------------------
+@register(
+    "q18_large_orders",
+    """
+    SELECT c_name, o_orderkey, o_totalprice,
+           CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
+    FROM orders JOIN customer ON o_custkey = c_custkey
+                JOIN lineitem ON l_orderkey = o_orderkey
+    GROUP BY c_name, o_orderkey, o_totalprice
+    HAVING SUM(CAST(l_quantity AS BIGINT)) > 120
+    ORDER BY o_totalprice DESC, o_orderkey
+    LIMIT 20
+    """,
+    tags=("join", "agg", "having", "topk", "tpch"),
+)
+def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q18: aggregate-below-join formulation. l_orderkey
+    functionally determines (c_name, o_totalprice), so the per-order
+    quantity sum is computed FIRST — one narrow map-side-combinable
+    shuffle on the fact table — and only the HAVING survivors (a tiny
+    set at any scale: orders with >120 units) join orders/customer,
+    both as broadcasts. The textbook join-then-group plan shuffles
+    every joined fact row with a 3-column key instead."""
+    o = t(spark, sf_dir, "orders")
+    c = t(spark, sf_dir, "customer")
+    l = t(spark, sf_dir, "lineitem")
+    sums = (
+        l.groupBy("l_orderkey")
+        .agg(F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"))
+        .filter(F.col("sum_qty") > 120)
+    )
+    return (
+        sums.join(o, F.col("l_orderkey") == o.o_orderkey)
+        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .select("c_name", "o_orderkey", "o_totalprice", "sum_qty")
+        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
+        .limit(20)
+    )
+
 
 _SQL_DISC_E4 = (
     "CAST(round(l_extendedprice * 100) AS BIGINT)"

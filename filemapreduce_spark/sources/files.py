@@ -218,6 +218,13 @@ def _list_via_pyarrow(
     reads — the same cost class as Spark's own InMemoryFileIndex.
     Unsupported schemes (or unreachable stores) fail HERE, at plan
     time, instead of as wrapped task retries inside the job.
+
+    Hidden paths are skipped as Spark's file listing skips them
+    (``HadoopFSUtils.shouldFilterOutPathName``), for directories and
+    files alike: a name starting with ``.``, or with ``_`` unless it
+    holds ``=``, or ending in ``._COPYING_``; ``_metadata`` and
+    ``_common_metadata`` names are kept. So a root lists the same
+    files here as through ``read_files`` or a local chunked scan.
     """
     import fnmatch
 
@@ -236,6 +243,15 @@ def _list_via_pyarrow(
                 f"read_files_chunked: unsupported or unreachable"
                 f" filesystem root {root_uri!r}: {e}"
             ) from e
+
+    def hidden(name: str) -> bool:
+        exclude = (
+            (name.startswith("_") and "=" not in name)
+            or name.startswith(".")
+            or name.endswith("._COPYING_")
+        )
+        return exclude and not name.startswith(("_common_metadata", "_metadata"))
+
     base = base.rstrip("/")
     infos = fs.get_file_info(pafs.FileSelector(base, recursive=True))
     rows = []
@@ -246,6 +262,8 @@ def _list_via_pyarrow(
         if glob is not None and not fnmatch.fnmatchcase(name, glob):
             continue  # listing-time prune, pathGlobFilter parity
         rel = i.path[len(base) + 1 :] if i.path.startswith(base + "/") else i.path
+        if any(map(hidden, rel.split("/"))):
+            continue  # a hidden file, or a file under a hidden directory
         rows.append((rel, i.path, int(i.size), i.mtime))
     return spark.createDataFrame(rows, _CHUNK_META_SCHEMA)
 
@@ -306,14 +324,15 @@ def read_files_chunked(
     sort-merge or boundary-patch downstream.
 
     Roots: plain local paths use Spark's binaryFile listing + local
-    seek I/O. ``<scheme>://`` roots (s3://, gs://, hdfs://, file://)
+    seek I/O. ``<scheme>://`` roots (s3://, gs://, hdfs://)
     go through ``pyarrow.fs``: a driver-side metadata listing
     (``get_file_info``, O(files), no bytes) builds the same plan, and
     each executor task issues a positioned ``read_at`` — a ranged GET
-    on object stores, a seek on HDFS/local. ``file://`` roots take
-    this generic path on purpose so the object-store code is
-    exercised by local tests end-to-end. Unsupported schemes fail
-    fast at plan time on the driver.
+    on object stores, a seek on HDFS/local. ``file:`` roots
+    (``file:/x``, ``file:///x``) are local paths and take the local
+    path; passing ``filesystem=pyarrow.fs.LocalFileSystem()`` runs
+    the generic path over a local tree. Unsupported schemes fail fast
+    at plan time on the driver.
 
     ``filesystem``: an explicit ``pyarrow.fs.FileSystem`` handle
     (a credentialed ``S3FileSystem``, a ``SubTreeFileSystem``, a

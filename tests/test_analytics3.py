@@ -1,4 +1,5 @@
-"""Invariant tests for the analytics batch 3 (analytics3.py).
+"""Invariant tests for max_drawdown_by_type, welch_ttest_vs_view and
+bloom_semi_prune_join.
 
 The oracle gate checks value parity; these check the semantic
 invariants: drawdown non-negativity and peak dominance, Welch test

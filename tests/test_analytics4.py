@@ -1,5 +1,5 @@
-"""Invariant tests for analytics4.py (interval union, temperature
-weights, seasonal backtest)."""
+"""Invariant tests for interval union, temperature weights and the seasonal
+backtest."""
 
 from __future__ import annotations
 

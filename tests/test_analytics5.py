@@ -1,4 +1,4 @@
-"""Invariant tests for analytics5.py (KS test, geo radius join)."""
+"""Invariant tests for the KS test and the geo radius join."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from filemapreduce_spark.queries import load_all
-from filemapreduce_spark.queries.analytics5 import (
+from filemapreduce_spark.queries.search import (
     _CELL_DEG,
     _COS_LAT0,
     _M_PER_DEG,

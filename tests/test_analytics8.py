@@ -197,7 +197,7 @@ def test_luhn_known_pans(spark):
     """ISO test card numbers through the Spark checksum expression."""
     from pyspark.sql import functions as F
 
-    from filemapreduce_spark.queries.coverage6 import _spark_luhn_sum
+    from filemapreduce_spark.queries.audit import _spark_luhn_sum
 
     pans = [
         ("4111111111111111", True),   # classic Visa test number

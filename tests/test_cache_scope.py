@@ -50,7 +50,7 @@ def test_registry_query_leaves_no_pinned_blocks(spark, sf_oracle):
     from filemapreduce_spark.queries import load_all
 
     registry = load_all()
-    # neardup_minhash_lsh persists its signature base (llm.py)
+    # neardup_minhash_lsh persists its signature base (queries/dedup.py)
     with cache_scope():
         df = registry["neardup_minhash_lsh"].fn(spark, sf_oracle)
         rows = df.collect()

@@ -6,6 +6,7 @@ bounded slices that reassemble to the exact original bytes."""
 import hashlib
 import os
 
+import pyarrow.fs as pafs
 import pytest
 from pyspark.sql import functions as F
 
@@ -80,10 +81,13 @@ def test_chunked_small_file_is_single_chunk(spark, big_tree):
 
 
 def test_chunked_generic_uri_path_reassembles(spark, big_tree):
-    """file:// routes through the generic pyarrow.fs ranged-read path
-    (the object-store code), end-to-end on a >100 MB file."""
+    """An injected pyarrow filesystem routes through the generic
+    pyarrow.fs ranged-read path (the object-store code), end-to-end on
+    a >100 MB file. (A ``file://`` root would take the local path.)"""
     chunk = 32 << 20
-    df = read_files_chunked(spark, "file://" + big_tree, chunk_bytes=chunk)
+    df = read_files_chunked(
+        spark, big_tree, chunk_bytes=chunk, filesystem=pafs.LocalFileSystem()
+    )
     rows = (
         df.filter(F.col("path") == "data/big.bin")
         .select("chunk_idx", "n_chunks", "offset", "content", "file_length")
@@ -104,13 +108,33 @@ def test_chunked_generic_uri_path_reassembles(spark, big_tree):
 def test_chunked_generic_uri_respects_path_filter(spark, big_tree):
     df = read_files_chunked(
         spark,
-        "file://" + big_tree,
+        big_tree,
         path_filter="**/small.bin",
         chunk_bytes=64 << 20,
+        filesystem=pafs.LocalFileSystem(),
     )
     rows = df.collect()
     assert [r["path"] for r in rows] == ["data/small.bin"]
     assert bytes(rows[0]["content"]) == b"tiny payload"
+
+
+def test_chunked_listings_skip_hidden_paths_alike(spark, tmp_path):
+    """The whole-file scan, the local chunked scan and the generic
+    pyarrow listing all skip Spark's hidden paths (names starting with
+    ``_`` or ``.``, files and directories alike)."""
+    for rel in ["a.txt", "_b.txt", ".c.txt", "sub/d.txt", ".hid/e.txt", "_hid/f.txt"]:
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_bytes(b"x")
+    root = str(tmp_path)
+
+    def paths(df):
+        return sorted(r["path"] for r in df.select("path").collect())
+
+    want = ["a.txt", "sub/d.txt"]
+    assert paths(read_files(spark, root)) == want
+    assert paths(read_files_chunked(spark, root)) == want
+    generic = read_files_chunked(spark, root, filesystem=pafs.LocalFileSystem())
+    assert paths(generic) == want
 
 
 def test_chunked_single_slash_file_uri_is_local(spark, big_tree):

@@ -1,4 +1,5 @@
-"""Invariant tests for the round-3 coverage batch (coverage3.py).
+"""Invariant tests for the round-3 coverage batch (gaps and islands,
+proration, gap fill, BFS, rank fusion, the key-gap audit).
 
 The DuckDB oracle gate already checks value parity; these tests check
 the SEMANTIC invariants the oracles can't see on their own — exact

@@ -1,4 +1,5 @@
-"""Invariant tests for coverage4.py and the foreachBatch upsert."""
+"""Invariant tests for the round-4 audit/sketch coverage batch and the
+foreachBatch upsert."""
 
 from __future__ import annotations
 
@@ -137,7 +138,7 @@ def test_clamped_balance_stays_in_bounds_and_diverges_from_sum(
     balance equals max(0, min(cap, unclamped)) is NOT generally true,
     but balance == unclamped must hold whenever the unclamped prefix
     path never left the bounds — verified on a hand-folded sample."""
-    from filemapreduce_spark.queries.udx import _CLAMP_CAP
+    from filemapreduce_spark.queries.engine import _CLAMP_CAP
 
     rows = registry["clamped_running_balance"].fn(spark, SF_SMALL).collect()
     assert rows

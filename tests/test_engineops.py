@@ -1,5 +1,5 @@
 """Oracle-parity pytest guards for the engine/sink queries added in
-round 4 (queries/engineops.py + streaming_incremental_file_arrival).
+round 4 (queries/engine.py + streaming_incremental_file_arrival).
 
 The driver sweep checks these at sf0.01; this local guard runs the
 same strict compare at sf0.001 so a regression is visible from

@@ -1,4 +1,4 @@
-"""Invariant tests for llm3.py (SRP-LSH, vocab coverage)."""
+"""Invariant tests for SRP-LSH and vocabulary coverage."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import hashlib
 import pytest
 
 from filemapreduce_spark.queries import load_all
-from filemapreduce_spark.queries.llm3 import _PLANES, _N_PLANES, _DIM
+from filemapreduce_spark.queries.similarity import _PLANES, _N_PLANES, _DIM
 
 SF_SMALL = "/root/testdata/sf0.001"
 

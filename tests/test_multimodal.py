@@ -8,7 +8,7 @@ import struct
 import pytest
 
 from filemapreduce_spark.queries import load_all
-from filemapreduce_spark.queries.llm import decode_wav_payload
+from filemapreduce_spark.queries.multimodal import decode_wav_payload
 
 
 @pytest.fixture(scope="module")
@@ -101,28 +101,28 @@ def _ppm(w=4, h=2, maxval=255, data=None):
 
 
 def test_ppm_rejects_bad_magic():
-    from filemapreduce_spark.queries.multimodal2 import parse_ppm
+    from filemapreduce_spark.queries.multimodal import parse_ppm
 
     with pytest.raises(ValueError, match="not a P6"):
         parse_ppm(1, b"P5\n2 2\n255\n" + bytes(12))
 
 
 def test_ppm_rejects_bad_maxval():
-    from filemapreduce_spark.queries.multimodal2 import parse_ppm
+    from filemapreduce_spark.queries.multimodal import parse_ppm
 
     with pytest.raises(ValueError, match="maxval"):
         parse_ppm(1, _ppm(maxval=15, data=bytes(24)))
 
 
 def test_ppm_rejects_truncated_payload():
-    from filemapreduce_spark.queries.multimodal2 import parse_ppm
+    from filemapreduce_spark.queries.multimodal import parse_ppm
 
     with pytest.raises(ValueError, match="!= 4\\*2\\*3"):
         parse_ppm(1, _ppm(data=bytes(10)))
 
 
 def test_ppm_parses_multiline_whitespace_header():
-    from filemapreduce_spark.queries.multimodal2 import parse_ppm
+    from filemapreduce_spark.queries.multimodal import parse_ppm
 
     raw = b"P6 2\n1\t255\n" + bytes([10, 20, 30, 40, 50, 60])
     w, h, arr = parse_ppm(1, raw)
@@ -136,7 +136,7 @@ def test_ppm_pool_known_values():
     each pooled channel is the floor-mean of its 4 source bytes."""
     import numpy as np
 
-    from filemapreduce_spark.queries.multimodal2 import parse_ppm
+    from filemapreduce_spark.queries.multimodal import parse_ppm
 
     w, h = 3, 3  # odd dims: pooling must crop to 2x2
     data = bytes(range(w * h * 3))

@@ -1,5 +1,5 @@
-"""Invariant tests for pipeline2.py (domain cap, shard striping,
-length-bucket batching)."""
+"""Invariant tests for domain caps, shard striping and length-bucket
+batching."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from filemapreduce_spark.queries import load_all
-from filemapreduce_spark.queries.pipeline2 import (
+from filemapreduce_spark.queries.curation import (
     _BATCH_SIZE,
     _CAP_K,
     _N_SHARDS,

@@ -113,7 +113,7 @@ def test_frame_sampler_counts_codepoints(spark):
     32-char frames (stride 4 keeps frame 0 only), not six byte-frames."""
     import hashlib
 
-    from filemapreduce_spark.queries.llm import multimodal_frame_sample
+    from filemapreduce_spark.queries.multimodal import multimodal_frame_sample
 
     # route through the registered function via a temp parquet dir
     import tempfile

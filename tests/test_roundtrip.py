@@ -1,4 +1,4 @@
-"""Invariant tests for the sink round-trip queries (roundtrip.py).
+"""Invariant tests for the sink round-trip queries (queries/engine.py).
 
 The DuckDB oracle gate proves content parity; these check the
 LAYOUT properties the aggregates can't see: that the partitioned

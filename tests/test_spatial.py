@@ -16,7 +16,7 @@ from collections import Counter
 import pytest
 
 from filemapreduce_spark.queries import load_all
-from filemapreduce_spark.queries.spatial import _BOX, _POLYGONS, _edges
+from filemapreduce_spark.queries.search import _BOX, _POLYGONS, _edges
 
 
 @pytest.fixture(scope="module")

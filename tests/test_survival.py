@@ -1,4 +1,4 @@
-"""Invariant tests for survival.py (Kaplan-Meier, calibration)."""
+"""Invariant tests for Kaplan-Meier and calibration."""
 
 from __future__ import annotations
 
@@ -50,7 +50,7 @@ def test_subjects_cache_caps_one_entry_and_releases_base(spark, registry):
     base so eviction releases it, and (b) keep at most one entry per
     live session even when sweeping multiple sf_dirs (round-7 advice
     items 1+2)."""
-    from filemapreduce_spark.queries import survival as sv
+    from filemapreduce_spark.queries import stats as sv
 
     sv._signup_purchase_subjects(spark, SF_SMALL).count()
     assert len(sv._SUBJECTS_CACHE) == 1

@@ -23,6 +23,10 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, "/root/repo")
 
 from filemapreduce_spark.queries import load_all  # noqa: E402
+from filemapreduce_spark.session import (  # noqa: E402
+    CORRECTNESS_CONF,
+    PERF_CONF,
+)
 
 _REGISTRY = load_all()
 
@@ -77,19 +81,12 @@ def _ensure_conf(spark: SparkSession) -> None:
     block the rest.
     """
     settings = {
-        "spark.sql.session.timeZone": "UTC",
-        # events.parquet stores TIMESTAMP(NANOS); read nanos as long
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+        **CORRECTNESS_CONF,
         # perf: the driver's runs are sf0.001/sf0.01 (~MB tables) —
         # 8 fat shuffle partitions beat core-count-many near-empty
         # ones at that size (measured -26%; BASELINE.md round 3)
         "spark.sql.shuffle.partitions": "8",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        **PERF_CONF,
     }
     for k, v in settings.items():
         try:

@@ -58,15 +58,6 @@ def charge_e6(
     return cents(price) * (100 - cents(discount)) * (100 + cents(tax))
 
 
-# SQL fragments for the DuckDB oracle twins (same arithmetic, same
-# names, so generated plans stay visibly parallel).
+# ``cents`` as SQL for the DuckDB oracle twins (same arithmetic, so
+# generated plans stay visibly parallel).
 SQL_CENTS = "CAST(round({col} * 100) AS BIGINT)"
-SQL_DISC_PRICE_E4 = (
-    "CAST(round({price} * 100) AS BIGINT)"
-    " * (100 - CAST(round({disc} * 100) AS BIGINT))"
-)
-SQL_CHARGE_E6 = (
-    "CAST(round({price} * 100) AS BIGINT)"
-    " * (100 - CAST(round({disc} * 100) AS BIGINT))"
-    " * (100 + CAST(round({tax} * 100) AS BIGINT))"
-)

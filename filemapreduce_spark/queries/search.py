@@ -457,17 +457,23 @@ rbo_rank_agreement.__doc__ = (
 # --------------------------------------------------------------------
 # nDCG retrieval-quality audit (graded-relevance ranking metric).
 # --------------------------------------------------------------------
-_NDCG_QUERIES = {
-    1: ("spark", "join", "merge"),
-    2: ("scan", "filter", "column"),
-    3: ("stream", "window", "batch"),
-}
+# The fixed (qid, term) rows of the nDCG and AP audits: the two metrics
+# are meant to be read side by side over the same ranking.
+_QUERY_TERMS = [
+    (1, "spark"), (1, "join"), (1, "merge"),
+    (2, "scan"), (2, "filter"), (2, "column"),
+    (3, "stream"), (3, "window"), (3, "batch"),
+]
 _NDCG_K = 10
 
 
-# Per (query, doc, term) term frequencies of the query terms in q: the
-# first CTEs of the retrieval-audit oracles (q is defined just before).
-_SQL_TERM_HITS = f"""tok AS (
+# The query rows q and the per (query, doc, term) term frequencies of
+# their terms: the first CTEs of the retrieval-audit oracles.
+_SQL_QUERY_ROWS = " UNION ALL ".join(
+    f"SELECT {qid} AS qid, '{term}' AS term" for qid, term in _QUERY_TERMS
+)
+_SQL_TERM_HITS = f"""q AS ({_SQL_QUERY_ROWS}),
+    tok AS (
       SELECT doc_id, unnest({SQL_WORDS}) AS w FROM documents
     ), hits AS (
       SELECT q.qid, tok.doc_id, q.term,
@@ -477,15 +483,23 @@ _SQL_TERM_HITS = f"""tok AS (
     )"""
 
 
-def _ndcg_oracle() -> str:
-    qrows = " UNION ALL ".join(
-        f"SELECT {qid} AS qid, '{term}' AS term"
-        for qid, terms in _NDCG_QUERIES.items()
-        for term in terms
+def _term_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(qid, doc_id, term, tf) of the audit query terms over
+    ``documents``: the Spark side of ``_SQL_TERM_HITS``."""
+    q = spark.createDataFrame(_QUERY_TERMS, "qid long, term string")
+    tok = t(spark, sf_dir, "documents").select(
+        "doc_id", F.explode(words("text")).alias("w")
     )
+    return (
+        tok.join(F.broadcast(q), F.col("term") == F.col("w"))
+        .groupBy("qid", "doc_id", "term")
+        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
+    )
+
+
+def _ndcg_oracle() -> str:
     return f"""
-    WITH q AS ({qrows}),
-    {_SQL_TERM_HITS}, scored AS (
+    WITH {_SQL_TERM_HITS}, scored AS (
       SELECT qid, doc_id,
              CAST(SUM(tf) AS BIGINT) AS tf_sum,
              CAST(COUNT(*) AS BIGINT) AS rel
@@ -539,22 +553,7 @@ def ndcg_retrieval_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition by query id over only the MATCHING docs (candidate
     set, not the corpus). Metric aggregation is #queries rows.
     """
-    d = t(spark, sf_dir, "documents")
-    from pyspark.sql import Window
-
-    qrows = [
-        (qid, term)
-        for qid, terms in _NDCG_QUERIES.items()
-        for term in terms
-    ]
-    q = spark.createDataFrame(qrows, "qid long, term string")
-    tok = d.select("doc_id", F.explode(words("text")).alias("w"))
-    hits = (
-        tok.join(F.broadcast(q), F.col("term") == F.col("w"))
-        .groupBy("qid", "doc_id", "term")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
-    scored = hits.groupBy("qid", "doc_id").agg(
+    scored = _term_hits(spark, sf_dir).groupBy("qid", "doc_id").agg(
         F.sum("tf").cast("long").alias("tf_sum"),
         F.count(F.lit(1)).cast("long").alias("rel"),
     )
@@ -601,21 +600,12 @@ ndcg_retrieval_audit.__doc__ = ndcg_retrieval_audit.__doc__.replace(
 )
 
 
-# Same fixed query set as the ndcg row above — the two metrics
-# are meant to be read side by side over the same ranking.
-_MAP_QUERIES = _NDCG_QUERIES
 _MAP_REL = 2  # binary relevance: doc contains >= 2 distinct terms
 
 
 def _map_oracle() -> str:
-    qrows = " UNION ALL ".join(
-        f"SELECT {qid} AS qid, '{term}' AS term"
-        for qid, terms in _MAP_QUERIES.items()
-        for term in terms
-    )
     return f"""
-    WITH q AS ({qrows}),
-    {_SQL_TERM_HITS}, scored AS (
+    WITH {_SQL_TERM_HITS}, scored AS (
       SELECT qid, doc_id,
              CAST(SUM(tf) AS BIGINT) AS tf_sum,
              CASE WHEN COUNT(*) >= {_MAP_REL} THEN 1 ELSE 0 END AS rel
@@ -667,20 +657,7 @@ def map_retrieval_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative windows partition by query id over the MATCHING
     candidate set only (never the corpus); output is #queries rows.
     """
-    d = t(spark, sf_dir, "documents")
-    qrows = [
-        (qid, term)
-        for qid, terms in _MAP_QUERIES.items()
-        for term in terms
-    ]
-    q = spark.createDataFrame(qrows, "qid long, term string")
-    tok = d.select("doc_id", F.explode(words("text")).alias("w"))
-    hits = (
-        tok.join(F.broadcast(q), F.col("term") == F.col("w"))
-        .groupBy("qid", "doc_id", "term")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
-    scored = hits.groupBy("qid", "doc_id").agg(
+    scored = _term_hits(spark, sf_dir).groupBy("qid", "doc_id").agg(
         F.sum("tf").cast("long").alias("tf_sum"),
         F.when(F.count(F.lit(1)) >= _MAP_REL, 1).otherwise(0).alias("rel"),
     )

@@ -13,6 +13,28 @@ import os
 
 from pyspark.sql import SparkSession
 
+# SQL confs the queries need for oracle parity, whatever the session.
+CORRECTNESS_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    # the synthetic events table stores TIMESTAMP(NANOS); read the
+    # raw int64 and convert (ts div 1000 → microseconds) on load
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # isAdjustedToUTC=false parquet columns: infer TIMESTAMP, not
+    # TIMESTAMP_NTZ — keeps filter pushdown on the scan column and
+    # (with the UTC session tz) matches DuckDB's naive reading
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+}
+
+# SQL perf confs of every query session (shuffle partitions aside,
+# which each session sizes for itself).
+PERF_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+}
+
 
 def driver_memory() -> str:
     """The driver heap: ``SPARK_GRAFT_DRIVER_MEM`` if set, else a quarter
@@ -46,29 +68,20 @@ def get_spark(
             )
         )
 
-    builder = (
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        **PERF_CONF,
+        **CORRECTNESS_CONF,
+        "spark.driver.memory": driver_memory(),
+        "spark.ui.enabled": "false",
+        "spark.sql.parquet.filterPushdown": "true",
+        **(extra_conf or {}),
+    }
+    spark = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", driver_memory())
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        # the synthetic events table stores TIMESTAMP(NANOS); read the
-        # raw int64 and convert (ts div 1000 → microseconds) on load
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # isAdjustedToUTC=false parquet columns: infer TIMESTAMP, not
-        # TIMESTAMP_NTZ — keeps filter pushdown on the scan column and
-        # (with the UTC session tz) matches DuckDB's naive reading
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        .config(map=conf)
+        .getOrCreate()
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

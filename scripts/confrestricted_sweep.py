@@ -3,12 +3,12 @@
 
 Simulates a driver that forbids runtime conf changes: the session
 keeps Spark's defaults (200 shuffle partitions, default broadcast
-threshold, no Arrow tuning). Only the two CORRECTNESS-required confs
-are applied (UTC timezone; nanos-as-long for events.parquet — without
-them the timestamp columns themselves read differently, which is a
-data-format matter, not tuning). Queries are taken straight from the
-registry (not the __spark_entry__ wrapper, whose _ensure_conf would
-re-apply the perf confs). The compare is driver_sim's.
+threshold, no Arrow tuning). Only ``session.CORRECTNESS_CONF`` is
+applied (UTC timezone; nanos-as-long and no TIMESTAMP_NTZ inference for
+the parquet timestamps — without them the timestamp columns themselves
+read differently, which is a data-format matter, not tuning). Queries
+are taken straight from the registry (not the __spark_entry__ wrapper,
+whose _ensure_conf would re-apply the perf confs). The compare is driver_sim's.
 
 Usage: python scripts/confrestricted_sweep.py [sf_dir] [query ...]
 Exit 0 = all strict dtype+value compares pass.
@@ -31,7 +31,7 @@ def main():
     from pyspark.sql import SparkSession
 
     from filemapreduce_spark.queries import load_all
-    from filemapreduce_spark.session import driver_memory
+    from filemapreduce_spark.session import CORRECTNESS_CONF, driver_memory
 
     spark = (
         SparkSession.builder.master(
@@ -40,9 +40,7 @@ def main():
         .appName("confrestricted_sweep")
         .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        .config(map=CORRECTNESS_CONF)
         .getOrCreate()
     )
 

@@ -6,11 +6,9 @@ in one session; the second result must match the first exactly
 This exercises paths a single sweep never touches — per-invocation
 scratch dirs (no collisions), analyzed-plan caches, the engineops VFS
 cache, and determinism of every sampling/hashing operator under
-repeated invocation. FMR_STREAM_FORCE_REEXEC=1 is set before any query
-runs so the streaming completed-result memoization is bypassed and the
-second invocation genuinely re-runs the micro-batch machinery
-(otherwise the check would re-hash the first run's memory sink table
-and prove nothing).
+repeated invocation. A streaming query runs its stream on every call,
+into a new memory-sink table, so the second run re-executes the
+micro-batch machinery rather than re-reading the first run's result.
 
 Usage: python scripts/idempotence_sweep.py [sf_dir] [query ...]
 Exit 0 = every query's two executions identical.
@@ -31,7 +29,6 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    os.environ["FMR_STREAM_FORCE_REEXEC"] = "1"
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()

@@ -290,3 +290,29 @@ def test_native_session_window_agrees_with_manual_sessionization(spark):
         (r["user_id"], r[start_col]) for r in manual.collect()
     }
     assert native == manual_set
+
+
+def _stream_tables(spark) -> set[str]:
+    return {
+        t.name
+        for t in spark.catalog.listTables()
+        if t.name.startswith("stream_out_")
+    }
+
+
+@pytest.mark.parametrize(
+    "name", ["streaming_incremental_file_arrival", "streaming_tumbling_counts"]
+)
+def test_each_call_runs_the_stream(spark, sf_small, name):
+    """A streaming registry query runs its stream on every call: the
+    second call in the same session writes a new memory-sink table
+    (no result kept from the first call) and gets the same rows."""
+    from filemapreduce_spark.queries import load_all
+
+    fn = load_all()[name].fn
+    results = []
+    for _ in range(2):
+        before = _stream_tables(spark)
+        results.append(fn(spark, sf_small).collect())
+        assert len(_stream_tables(spark) - before) == 1
+    assert results[0] and results[0] == results[1]

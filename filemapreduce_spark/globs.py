@@ -137,10 +137,13 @@ class PathFilter(Filter):
     def filename_glob(self) -> str | None:
         """Best-effort glob over the FINAL path segment for Spark's
         ``pathGlobFilter`` option (which only sees file names). Returns
-        None when the last segment is itself ``**`` (matches anything).
+        None when the last segment is itself ``**`` (matches anything)
+        or holds a character that Hadoop's glob or ``fnmatch`` reads as
+        syntax (``[x].json`` would match ``x.json`` there, while this
+        filter matches it literally); the anchored regex still filters.
         """
         last = self._segs()[-1]
-        if last == RECURSIVE_WILDCARD:
+        if last == RECURSIVE_WILDCARD or any(c in last for c in "?[]{}\\"):
             return None
         return last.replace(RECURSIVE_WILDCARD, WILDCARD)
 

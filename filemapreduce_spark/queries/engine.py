@@ -19,6 +19,7 @@ from filemapreduce_spark.operators.money import SQL_CENTS, cents
 from filemapreduce_spark.operators.scratch import scratch_dir
 from filemapreduce_spark.operators.textops import ascii_fold
 from filemapreduce_spark.queries import register
+from filemapreduce_spark.session import memo
 from filemapreduce_spark.sinks import compact_files, write_clustered, write_partitioned
 from filemapreduce_spark.sources.tables import load_table as t
 
@@ -26,25 +27,10 @@ from filemapreduce_spark.sources.tables import load_table as t
 _DOC_CAP = 40  # documents with doc_id < 40 seed the VFS trees
 _ORD_CAP = 200  # orders with o_orderkey < 200 seed the JSON files
 
-# driver-built VFS dicts, keyed by (session id, sf_dir): the collect
-# is bounded (<= 40 docs / <= 50 orders) and reused by every engine
-# query in a sweep. Entries for other session ids are purged on each
-# miss so restarts don't grow the dict unboundedly (the dicts are
-# plain data, so a stale id() can only waste memory, never leak a
-# dead session's DataFrames — recollecting after a purge is cheap).
-_VFS_CACHE: dict[tuple[int, str, str], dict[str, str]] = {}
 
-
-def _vfs_cached(spark: SparkSession, key: tuple, build) -> dict[str, str]:
-    hit = _VFS_CACHE.get(key)
-    if hit is None:
-        for k in [k for k in _VFS_CACHE if k[0] != id(spark)]:
-            del _VFS_CACHE[k]
-        hit = build()
-        _VFS_CACHE[key] = hit
-    return hit
-
-
+# The VFS dicts are built on the driver and memoized per session
+# (session.memo): the collect is bounded (<= 40 docs / <= 50 orders)
+# and every engine query in a sweep reuses it.
 def _vfs_docs(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     def build() -> dict[str, str]:
         rows = (
@@ -63,7 +49,7 @@ def _vfs_docs(spark: SparkSession, sf_dir: str) -> dict[str, str]:
             for r in rows
         }
 
-    return _vfs_cached(spark, (id(spark), sf_dir, "docs"), build)
+    return memo(spark, ("vfs_docs", sf_dir), build)
 
 
 def _vfs_orders_json(spark: SparkSession, sf_dir: str) -> dict[str, str]:
@@ -85,7 +71,7 @@ def _vfs_orders_json(spark: SparkSession, sf_dir: str) -> dict[str, str]:
                 )
         return out
 
-    return _vfs_cached(spark, (id(spark), sf_dir, "orders_json"), build)
+    return memo(spark, ("vfs_orders_json", sf_dir), build)
 
 
 # source/lang are path SEGMENTS in the VFS layout: a document with a

@@ -343,6 +343,30 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FRAME = 16  # audio energy window, in per-channel samples
 
 
+def _decode_wav_batch(pdf):
+    """One Arrow batch of (doc_id, payload) WAV containers → (ids,
+    chs, samples, s_off, n0): the doc ids and channel counts, every
+    doc's PCM concatenated as int64, each doc's first sample offset
+    (plus the total) and its channel-0 sample count. The chunk walk
+    stays per doc; everything after it is whole-batch numpy."""
+    import numpy as np
+
+    ids_l, chs_l, chunks = [], [], []
+    for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
+        doc_id = int(doc_id)
+        ch, _rate, data = parse_wav(doc_id, bytes(b))
+        ids_l.append(doc_id)
+        chs_l.append(ch)
+        chunks.append(data)
+    ids = np.array(ids_l, dtype=np.int64)
+    chs = np.array(chs_l, dtype=np.int64)
+    samples = np.frombuffer(b"".join(chunks), dtype="<i2").astype(np.int64)
+    n_samp = np.array([len(c) // 2 for c in chunks], dtype=np.int64)
+    s_off = np.zeros(len(ids) + 1, dtype=np.int64)
+    np.cumsum(n_samp, out=s_off[1:])
+    return ids, chs, samples, s_off, (n_samp + chs - 1) // chs
+
+
 def _python_stage_partitions(spark: SparkSession) -> int:
     """Task count for Arrow/Python stages over the toy corpus: match
     the session's shuffle sizing (per-task Python dispatch costs
@@ -438,23 +462,8 @@ def audio_frame_energy_top2(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            ids_l, chs_l, chunks = [], [], []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                doc_id = int(doc_id)
-                ch, _rate, data = parse_wav(doc_id, bytes(b))
-                ids_l.append(doc_id)
-                chs_l.append(ch)
-                chunks.append(data)
-            ids = np.array(ids_l, dtype=np.int64)
-            chs = np.array(chs_l, dtype=np.int64)
-            samples = np.frombuffer(b"".join(chunks), dtype="<i2").astype(
-                np.int64
-            )
-            n_samp = np.array([len(c) // 2 for c in chunks], dtype=np.int64)
-            s_off = np.zeros(len(ids) + 1, dtype=np.int64)
-            np.cumsum(n_samp, out=s_off[1:])
+            ids, chs, samples, s_off, n0 = _decode_wav_batch(pdf)
             # channel-0 sample positions: s_off[d] + k*ch_d
-            n0 = (n_samp + chs - 1) // chs
             o0 = np.zeros(len(ids) + 1, dtype=np.int64)
             np.cumsum(n0, out=o0[1:])
             kk = np.arange(o0[-1], dtype=np.int64) - np.repeat(o0[:-1], n0)
@@ -921,22 +930,7 @@ def audio_decimate_2to1(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            ids_l, chs_l, chunks = [], [], []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                doc_id = int(doc_id)
-                ch, rate, data = parse_wav(doc_id, bytes(b))
-                ids_l.append(doc_id)
-                chs_l.append(ch)
-                chunks.append(data)
-            ids = np.array(ids_l, dtype=np.int64)
-            chs = np.array(chs_l, dtype=np.int64)
-            samples = np.frombuffer(b"".join(chunks), dtype="<i2").astype(
-                np.int64
-            )
-            n_samp = np.array([len(c) // 2 for c in chunks], dtype=np.int64)
-            s_off = np.zeros(len(ids) + 1, dtype=np.int64)
-            np.cumsum(n_samp, out=s_off[1:])
-            n0 = (n_samp + chs - 1) // chs
+            ids, chs, samples, s_off, n0 = _decode_wav_batch(pdf)
             n_out = n0 // 2
             oo = np.zeros(len(ids) + 1, dtype=np.int64)
             np.cumsum(n_out, out=oo[1:])

@@ -3,18 +3,18 @@ inequality indices, hypothesis tests, experiment readouts (lift,
 effect sizes, variance reduction), resampling, and survival curves.
 
 The survival queries share one signup -> first-purchase subject table
-(``_signup_purchase_subjects``), cached per (session, sf_dir).
+(``_signup_purchase_subjects``), built once per (session, sf_dir)
+through ``session.memo`` and persisted until the cache is cleared.
 """
 
 from __future__ import annotations
-
-import threading
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from filemapreduce_spark.operators.money import cents
 from filemapreduce_spark.queries import register
+from filemapreduce_spark.session import memo
 from filemapreduce_spark.sources.tables import load_table as t
 
 # The observation horizon of the survival queries: a subject with no
@@ -1125,9 +1125,9 @@ def nelson_aalen_cumhaz(spark: SparkSession, sf_dir: str) -> DataFrame:
     over that grid — bounded by the observation horizon in days (the
     same allowlisted shape as the KM row), never by user count.
     """
-    # shared persisted subject table (_signup_purchase_subjects): same
-    # derivation + same horizon as the KM/log-rank/RMST family — one
-    # corpus pass per session instead of one (or more) per query
+    # the family's shared subject table (_signup_purchase_subjects):
+    # same derivation + horizon as KM/log-rank/RMST, one corpus pass
+    # per session until the cache is cleared, then one more
     subjects = _signup_purchase_subjects(spark, sf_dir).select(
         "t_days", "event"
     )
@@ -3885,77 +3885,39 @@ def stats_corr_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Per-user (user_id, t_days, event) subject table — the shared base of
 # the whole signup→first-purchase survival family (Kaplan–Meier,
-# log-rank, RMST). Built and persisted ONCE per (session, sf_dir):
-# before this cut each query re-derived the signup reduction up to
-# three times inside its own plan (the static audit showed 8 parquet
-# scans on rmst alone), and each family member repeated the corpus
-# pass — at 100 TB that is the dominant cost, not the day-grain math.
-# value = (subjects, signup_base): the intermediate signup table is
-# persisted too (it feeds both the purchase probe and the outer join
-# during the single build pass) and must be evicted WITH the subject
-# table — tracking only `subjects` left `s`'s blocks pinned for the
-# whole session (round-7 advice item 1).
-_SUBJECTS_CACHE: dict[tuple[int, str], tuple[DataFrame, DataFrame]] = {}
-_SUBJECTS_LOCK = threading.Lock()
-
-
+# log-rank, RMST, Nelson–Aalen). Its plan is built once per (session,
+# sf_dir) through session.memo and persisted, so the family makes one
+# corpus pass per session instead of one (or more) per query; derived
+# inside each query, the signup reduction ran up to three times in one
+# plan (the static audit showed 8 parquet scans on rmst alone). The
+# signup base is persisted too: it feeds both the purchase probe and
+# the outer join of the one build pass.
 def _signup_purchase_subjects(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # serialized: concurrent harnesses (bench's 8-thread suite, any
-    # multi-threaded caller) could otherwise race the eviction loop
-    # against an insert (RuntimeError) or double-build-and-persist the
-    # same base, leaking the loser's cached blocks
-    with _SUBJECTS_LOCK:
-        return _signup_purchase_subjects_locked(spark, sf_dir)
-
-
-def _signup_purchase_subjects_locked(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    key = (id(spark), sf_dir)
-    cached = _SUBJECTS_CACHE.get(key)
-    # storageLevel guard: harnesses call spark.catalog.clearCache()
-    # between queries, which unpersists the blocks but leaves this
-    # dict entry pointing at a never-re-persisted DataFrame — without
-    # the check the "one corpus pass" cut would silently stop caching
-    # after the first survival query under those protocols. A cleared
-    # entry falls through to a fresh build (fresh persist markers).
-    # NOTE: df.is_cached is STALE after clearCache (it reads the
-    # analyzed plan's flag, not the CacheManager — measured round 7);
-    # storageLevel re-consults the CacheManager and drops to NONE.
-    def _live(df: DataFrame) -> bool:
+    subjects, s = memo(
+        spark,
+        ("signup_purchase_subjects", sf_dir),
+        lambda: _subject_plans(spark, sf_dir),
+    )
+    # clearCache() and cache_scope() release the blocks but leave the
+    # memo entry, so persist again whatever the CacheManager no longer
+    # holds. df.is_cached is stale after clearCache (it reads the
+    # DataFrame's own flag); storageLevel asks the CacheManager. The
+    # base goes first, so the subjects' cached plan reads it. Two
+    # threads may both persist: Spark keeps one entry per plan.
+    for df in (s, subjects):
         lvl = df.storageLevel
-        return lvl.useMemory or lvl.useDisk
+        if not (lvl.useMemory or lvl.useDisk):
+            df.persist()
+    return subjects
 
-    if (
-        cached is not None
-        and cached[0].sparkSession is spark
-        and _live(cached[0])
-    ):
-        return cached[0]
-    # Evict dead-session entries, the stale entry for this key, AND
-    # same-session entries for OTHER sf_dirs: a long session sweeping
-    # many fixture dirs would otherwise pin one subject table (plus
-    # its signup base) per dir (round-7 advice item 2 — cap the cache
-    # at one entry per live session).
-    for k in [
-        k
-        for k, v in _SUBJECTS_CACHE.items()
-        if v[0].sparkSession is not spark or k[0] == id(spark)
-    ]:
-        for df in _SUBJECTS_CACHE[k]:
-            try:  # release blocks before dropping the last reference —
-                # del alone would orphan persisted partitions in the
-                # executors with no handle left to unpersist them
-                df.unpersist()
-            except Exception:
-                pass  # dead session: blocks are already gone
-        del _SUBJECTS_CACHE[k]
+
+def _subject_plans(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(subjects, signup base), neither persisted yet."""
     e = t(spark, sf_dir, "events")
     s = (
         e.where(F.col("event_type") == "signup")
         .groupBy("user_id")
         .agg(F.min("ts").alias("s_ts"))
-        .persist()  # feeds both the purchase probe and the outer join
     )
     p = (
         e.where(F.col("event_type") == "purchase")
@@ -3982,10 +3944,8 @@ def _signup_purchase_subjects_locked(
             .otherwise(0)
             .alias("event"),
         )
-        .persist()
     )
-    _SUBJECTS_CACHE[key] = (subjects, s)
-    return subjects
+    return subjects, s
 
 
 # --------------------------------------------------------------------

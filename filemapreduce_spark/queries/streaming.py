@@ -14,7 +14,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from filemapreduce_spark.operators.scratch import scratch_dir
 from filemapreduce_spark.queries import register
+from filemapreduce_spark.session import memo
 from filemapreduce_spark.sources.tables import load_table as t
 
 
@@ -151,21 +153,17 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# raw parquet schema per (session, path) — the footer read costs a
-# driver round trip per call otherwise, and the file is immutable
-_SCHEMA_CACHE: dict[tuple[int, str], object] = {}
-
-
 def _events_stream(spark: SparkSession, sf_dir: str):
     """Bounded file-source stream over events.parquet (symlinked into a
     temp dir — the file stream source requires a directory)."""
     stream_dir = _tmpdir("fmr_stream_src_")
     os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
-    skey = (id(spark), f"{sf_dir}/events.parquet")
-    raw_schema = _SCHEMA_CACHE.get(skey)
-    if raw_schema is None:
-        raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        _SCHEMA_CACHE[skey] = raw_schema
+    # the raw parquet schema, read once per session: the footer read
+    # costs a driver round trip per call otherwise
+    path = f"{sf_dir}/events.parquet"
+    raw_schema = memo(
+        spark, ("parquet_schema", path), lambda: spark.read.parquet(path).schema
+    )
     stream = spark.readStream.schema(raw_schema).parquet(stream_dir)
     if dict(stream.dtypes).get("ts") == "bigint":
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -173,8 +171,8 @@ def _events_stream(spark: SparkSession, sf_dir: str):
 
 
 def _run_to_memory(agg_writer, mode: str) -> DataFrame:
-    """Run a bounded stream to completion into a new memory-sink table
-    (``stream_out_*``) and return that table."""
+    """Run a bounded stream to completion into a new memory sink
+    (``stream_out_*``) and return its rows."""
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
     spark = SparkSession.getActiveSession() or agg_writer._df.sparkSession
     # State-store instance count is frozen at stream start from
@@ -208,7 +206,16 @@ def _run_to_memory(agg_writer, mode: str) -> DataFrame:
     # bounded query is done: its source-symlink + checkpoint dirs are
     # dead weight now (results live in the in-memory sink table)
     _cleanup_pending()
-    return spark.table(name)
+    return _take_sink(spark, name)
+
+
+def _take_sink(spark: SparkSession, name: str) -> DataFrame:
+    """The memory sink ``name`` as a DataFrame, its temp view dropped:
+    the resolved plan holds the sink's rows, so the session keeps no
+    ``stream_out_*`` view per call."""
+    df = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return df
 
 
 @register(
@@ -648,7 +655,10 @@ def streaming_foreachbatch_upsert(
     result.
     """
     src = _tmpdir("fmr_fb_src_")
-    state_root = _tmpdir("fmr_fb_state_")
+    # the returned DataFrame reads the last generation lazily, so the
+    # state outlives this call (the next stream's cleanup must not
+    # take it) and is removed at interpreter exit
+    state_root = scratch_dir("fb_state")
     ev = t(spark, sf_dir, "events").select("user_id", "value", "event_id")
     # deterministic 4-way hash slicing -> 4 micro-batches
     ev.repartition(4, "event_id").write.mode("overwrite").parquet(src)
@@ -822,4 +832,4 @@ def streaming_incremental_file_arrival(
         # the result lives in the memory sink; the waves, source
         # symlinks and checkpoint are dead weight now
         _cleanup_pending()
-    return spark.table(name)
+    return _take_sink(spark, name)

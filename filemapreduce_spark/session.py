@@ -10,8 +10,11 @@ and shuffle partitions sized to cores rather than the 200 default.
 from __future__ import annotations
 
 import os
+from typing import Callable, Hashable, TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 # SQL confs the queries need for oracle parity, whatever the session.
 CORRECTNESS_CONF = {
@@ -85,3 +88,20 @@ def get_spark(
     )
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def memo(spark: SparkSession, key: Hashable, build: Callable[[], T]) -> T:
+    """``build()``'s value, built once per session under ``key``.
+
+    The dict lives on the session object, so its entries are released
+    with the session and another session (``spark.newSession()``, a
+    restart) never sees them. Two threads missing the same key at once
+    may both build; the first value stored is the one every caller
+    gets. A value that can go stale (a persisted DataFrame that
+    ``clearCache()`` released) is the caller's to check.
+    """
+    store = vars(spark).setdefault("_fmr_memo", {})
+    try:
+        return store[key]
+    except KeyError:
+        return store.setdefault(key, build())

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from filemapreduce_spark.session import memo
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -54,31 +56,15 @@ def _file_count(spark: SparkSession, path: str) -> int:
         return 1
 
 
-# Analyzed-DataFrame cache. The test tables are immutable, but every
-# load_table call re-reads parquet footers for schema inference and
-# (for the compute-heavy tables) re-checks the file count — pure
-# driver-side overhead that the per-query benchmark pays 37×. Keyed by
-# session id so a restarted session never reuses stale plans.
-_DF_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (id(spark), sf_dir, name)
-    cached = _DF_CACHE.get(key)
-    # identity check guards against id() reuse after an old session is
-    # garbage-collected: a stale entry's DataFrame belongs to a
-    # different (dead) session object and must be rebuilt
-    if cached is not None and cached.sparkSession is spark:
-        return cached
-    # miss (first load, session restart, or id() collision with a dead
-    # session): sweep entries held by other sessions so the dict neither
-    # grows unboundedly across restarts nor pins dead sessions via
-    # strong references
-    for k in [k for k, v in _DF_CACHE.items() if v.sparkSession is not spark]:
-        del _DF_CACHE[k]
-    df = _load_table_uncached(spark, sf_dir, name)
-    _DF_CACHE[key] = df
-    return df
+    """The table's DataFrame, built once per session: a repeat call
+    returns the same object, so the parquet footers are read (and the
+    compute-heavy tables' files counted) once, not once per query."""
+    return memo(
+        spark,
+        ("table", sf_dir, name),
+        lambda: _load_table_uncached(spark, sf_dir, name),
+    )
 
 
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -125,20 +111,15 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
     return df
 
 
-# Base-table row counts per (sf_dir, name). The test tables are
-# immutable files, so a count is a property of the path, not the
-# session — queries that derive a plan parameter from corpus size
-# (e.g. SemDeDup's k) pay the count job once per process, not per run.
-_COUNT_CACHE: dict[tuple[str, str], int] = {}
-
-
 def table_rowcount(spark: SparkSession, sf_dir: str, name: str) -> int:
-    key = (sf_dir, name)
-    n = _COUNT_CACHE.get(key)
-    if n is None:
-        n = load_table(spark, sf_dir, name).count()
-        _COUNT_CACHE[key] = n
-    return n
+    """The table's row count, counted once per session: queries that
+    derive a plan parameter from corpus size (e.g. SemDeDup's k) pay
+    the count job once, not once per run."""
+    return memo(
+        spark,
+        ("rowcount", sf_dir, name),
+        lambda: load_table(spark, sf_dir, name).count(),
+    )
 
 
 def load_tables(

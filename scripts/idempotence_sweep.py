@@ -4,10 +4,11 @@ in one session; the second result must match the first exactly
 (strict dtype+value, driver_sim's ``strict_diff``).
 
 This exercises paths a single sweep never touches — per-invocation
-scratch dirs (no collisions), analyzed-plan caches, the engineops VFS
-cache, and determinism of every sampling/hashing operator under
+scratch dirs (no collisions), the per-session memo (``session.memo``:
+loaded tables, the engine queries' VFS dicts, the survival subject
+table), and determinism of every sampling/hashing operator under
 repeated invocation. A streaming query runs its stream on every call,
-into a new memory-sink table, so the second run re-executes the
+into a memory sink of its own, so the second run re-executes the
 micro-batch machinery rather than re-reading the first run's result.
 
 Usage: python scripts/idempotence_sweep.py [sf_dir] [query ...]

@@ -10,6 +10,7 @@ import pyarrow.fs as pafs
 import pytest
 from pyspark.sql import functions as F
 
+from filemapreduce_spark.globs import PathFilter
 from filemapreduce_spark.sources.files import (
     read_files,
     read_files_chunked,
@@ -134,6 +135,32 @@ def test_chunked_listings_skip_hidden_paths_alike(spark, tmp_path):
     assert paths(read_files(spark, root)) == want
     assert paths(read_files_chunked(spark, root)) == want
     generic = read_files_chunked(spark, root, filesystem=pafs.LocalFileSystem())
+    assert paths(generic) == want
+
+
+@pytest.mark.parametrize("pattern", ["**/[*].json", "**/{a,b}.json"])
+def test_listing_prunes_only_what_the_path_filter_rejects(spark, tmp_path, pattern):
+    """``[...]`` and ``{a,b}`` are literal in a path filter but syntax
+    in Hadoop's ``pathGlobFilter`` and in ``fnmatch``: a file-name glob
+    handed to either would drop ``[x].json`` and ``{a,b}.json`` at
+    listing time. Every scan returns exactly the paths the filter
+    matches."""
+    rels = ["a/[x].json", "a/x.json", "a/{a,b}.json", "a/a.json"]
+    for rel in rels:
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_bytes(b"{}")
+    root = str(tmp_path)
+    want = sorted(r for r in rels if PathFilter(pattern).match(r))
+    assert want
+
+    def paths(df):
+        return sorted(r["path"] for r in df.select("path").collect())
+
+    assert paths(read_files(spark, root, path_filter=pattern)) == want
+    assert paths(read_files_chunked(spark, root, path_filter=pattern)) == want
+    generic = read_files_chunked(
+        spark, root, path_filter=pattern, filesystem=pafs.LocalFileSystem()
+    )
     assert paths(generic) == want
 
 

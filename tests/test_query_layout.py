@@ -7,6 +7,9 @@ registry (AST and ``load_all`` only; no Spark session).
 - ``load_all`` imports every module file.
 - No module binds one top-level name twice, so no merge of two
   modules silently overrides a name.
+- No library module keeps a memo of its own (a module-level
+  ``*_CACHE`` or an ``id(spark)`` key): per-session values go through
+  ``session.memo``, whose dict lives on the session.
 - The registered names, oracles and result orders hash to a committed
   value: a change that only moves or deletes code leaves it alone.
 """
@@ -18,7 +21,8 @@ from pathlib import Path
 
 from filemapreduce_spark.queries import load_all
 
-QUERIES = Path(__file__).resolve().parent.parent / "filemapreduce_spark" / "queries"
+LIBRARY = Path(__file__).resolve().parent.parent / "filemapreduce_spark"
+QUERIES = LIBRARY / "queries"
 PKG = "filemapreduce_spark.queries"
 MODULES = sorted(p.stem for p in QUERIES.glob("*.py") if p.stem != "__init__")
 
@@ -92,6 +96,31 @@ def test_no_top_level_name_is_bound_twice():
             twice += [(module, n) for n in names if n in seen]
             seen.update(names)
     assert twice == []
+
+
+def test_no_module_keeps_its_own_session_memo():
+    found = []
+    for path in sorted(LIBRARY.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        rel = str(path.relative_to(LIBRARY))
+        for node in tree.body:
+            if isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                found += [
+                    (rel, t.id) for t in targets
+                    if isinstance(t, ast.Name) and t.id.endswith("_CACHE")
+                ]
+        found += [
+            (rel, f"id(spark) at line {n.lineno}")
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Name)
+            and n.func.id == "id"
+            and len(n.args) == 1
+            and isinstance(n.args[0], ast.Name)
+            and n.args[0].id == "spark"
+        ]
+    assert found == []
 
 
 def test_registry_names_oracles_and_orders_are_frozen():

@@ -2,6 +2,8 @@
 streaming queries: foreachBatch file sink with multi-batch replay.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -304,15 +306,33 @@ def _stream_tables(spark) -> set[str]:
     "name", ["streaming_incremental_file_arrival", "streaming_tumbling_counts"]
 )
 def test_each_call_runs_the_stream(spark, sf_small, name):
-    """A streaming registry query runs its stream on every call: the
-    second call in the same session writes a new memory-sink table
-    (no result kept from the first call) and gets the same rows."""
+    """A streaming registry query runs its stream on every call, into
+    a memory sink of its own (no result kept from the first call), and
+    leaves no ``stream_out_*`` view in the session; both calls get the
+    same rows."""
     from filemapreduce_spark.queries import load_all
 
     fn = load_all()[name].fn
-    results = []
+    results, sinks = [], []
     for _ in range(2):
-        before = _stream_tables(spark)
-        results.append(fn(spark, sf_small).collect())
-        assert len(_stream_tables(spark) - before) == 1
+        df = fn(spark, sf_small)
+        assert _stream_tables(spark) == set()
+        plan = df._jdf.queryExecution().analyzed().toString()
+        sinks.append(set(re.findall(r"stream_out_[0-9a-f]{8}", plan)))
+        results.append(df.collect())
+    assert len(sinks[0]) == 1 and sinks[0] != sinks[1]
     assert results[0] and results[0] == results[1]
+
+
+def test_upsert_result_outlives_the_next_streaming_call(spark, events, sf_small):
+    """streaming_foreachbatch_upsert's DataFrame reads its last state
+    generation lazily: the scratch cleanup of a later streaming call
+    must leave that state in place."""
+    from filemapreduce_spark.queries import load_all
+
+    registry = load_all()
+    upsert = registry["streaming_foreachbatch_upsert"].fn(spark, sf_small)
+    registry["streaming_tumbling_counts"].fn(spark, sf_small).collect()
+    rows = upsert.collect()
+    assert rows
+    assert sum(r["n_events"] for r in rows) == events.count()

@@ -46,30 +46,33 @@ def test_km_first_step_matches_hand_computation(spark, registry):
 
 
 def test_subjects_cache_caps_one_entry_and_releases_base(spark, registry):
-    """The shared subjects cache must (a) track the persisted signup
-    base so eviction releases it, and (b) keep at most one entry per
-    live session even when sweeping multiple sf_dirs (round-7 advice
-    items 1+2)."""
+    """A survival query inside ``cache_scope()`` leaves nothing pinned
+    at the scope's exit: neither the shared subject table nor the
+    signup base it persisted. The session's memo keeps their plans, and
+    the next call persists a live base again."""
+    from filemapreduce_spark import cache_scope
     from filemapreduce_spark.queries import stats as sv
+    from filemapreduce_spark.session import memo
 
-    sv._signup_purchase_subjects(spark, SF_SMALL).count()
-    assert len(sv._SUBJECTS_CACHE) == 1
-    subj1, base1 = sv._SUBJECTS_CACHE[(id(spark), SF_SMALL)]
-    assert base1.storageLevel.useMemory or base1.storageLevel.useDisk
-
-    other = "/root/testdata/sf0.01"
-    sv._signup_purchase_subjects(spark, other).count()
-    # same session, different sf_dir: the old entry must be GONE and
-    # BOTH of its persisted frames released
-    assert list(sv._SUBJECTS_CACHE) == [(id(spark), other)]
-    for df in (subj1, base1):
+    def pinned(df):
         lvl = df.storageLevel
-        assert not (lvl.useMemory or lvl.useDisk)
-    # cleanup so later tests rebuild fresh
-    for dfs in list(sv._SUBJECTS_CACHE.values()):
-        for df in dfs:
-            df.unpersist()
-    sv._SUBJECTS_CACHE.clear()
+        return lvl.useMemory or lvl.useDisk
+
+    spark.catalog.clearCache()
+    with cache_scope():
+        registry["kaplan_meier_signup_purchase"].fn(spark, SF_SMALL).collect()
+    subjects, base = memo(
+        spark,
+        ("signup_purchase_subjects", SF_SMALL),
+        lambda: pytest.fail("the survival query left no memo entry"),
+    )
+    assert not pinned(subjects) and not pinned(base)
+
+    again = sv._signup_purchase_subjects(spark, SF_SMALL)
+    assert again is subjects
+    assert pinned(again) and pinned(base)
+    assert again.count() > 0
+    spark.catalog.clearCache()
 
 
 def test_calibration_buckets_cover_all_events(spark, registry):

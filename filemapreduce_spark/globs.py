@@ -53,6 +53,12 @@ class Filter:
         """Anchored regex (Java/RE2-portable) equivalent to ``match``."""
         raise NotImplementedError
 
+    def filename_glob(self) -> str | None:
+        """Glob over the final path segment for Spark's
+        ``pathGlobFilter`` listing-time prune, or None for no prune
+        (an OR of filters has none: that option takes one glob)."""
+        return None
+
 
 def _segment_regex(seg: str) -> str:
     """Regex for one glob segment (anchoring handled by caller)."""
@@ -137,15 +143,15 @@ class PathFilter(Filter):
     def filename_glob(self) -> str | None:
         """Best-effort glob over the FINAL path segment for Spark's
         ``pathGlobFilter`` option (which only sees file names). Returns
-        None when the last segment is itself ``**`` (matches anything)
-        or holds a character that Hadoop's glob or ``fnmatch`` reads as
-        syntax (``[x].json`` would match ``x.json`` there, while this
-        filter matches it literally); the anchored regex still filters.
+        None when the last segment matches any name (``*`` or ``**``)
+        or holds a character that Hadoop's glob reads as syntax
+        (``[x].json`` would match ``x.json`` there, while this filter
+        matches it literally); the anchored regex still filters.
         """
-        last = self._segs()[-1]
-        if last == RECURSIVE_WILDCARD or any(c in last for c in "?[]{}\\"):
+        last = self._segs()[-1].replace(RECURSIVE_WILDCARD, WILDCARD)
+        if last == WILDCARD or any(c in last for c in "?[]{}\\"):
             return None
-        return last.replace(RECURSIVE_WILDCARD, WILDCARD)
+        return last
 
 
 @dataclass(frozen=True)
@@ -169,10 +175,6 @@ class MultiFilter(Filter):
 
     def to_regex(self) -> str:
         return "|".join(f"(?:{f.to_regex()})" for f in self.filters)
-
-    def filename_glob(self) -> str | None:
-        # pathGlobFilter accepts a single glob only; give up on OR.
-        return None
 
 
 def as_filter(f: Filter | str | None) -> Filter | None:

@@ -9,6 +9,7 @@ import atexit
 import os
 import shutil
 import tempfile
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -21,10 +22,11 @@ from filemapreduce_spark.sources.tables import load_table as t
 
 
 # Temp dirs (stream-source symlink dirs, checkpoint dirs) live only as
-# long as the bounded query that uses them: _run_to_memory deletes them
-# right after awaitTermination, and atexit sweeps anything left by an
-# aborted run — repeated driver sweeps don't accumulate /tmp litter.
-_PENDING_DIRS: list[str] = []
+# long as the call that made them: each is filed under its thread, the
+# call removes its own thread's dirs when its bounded stream is done,
+# and atexit sweeps anything left by an aborted call. Calls running in
+# other threads of one session keep theirs.
+_PENDING_DIRS: dict[int, list[str]] = {}
 
 
 def _tmpdir(prefix: str) -> str:
@@ -35,16 +37,21 @@ def _tmpdir(prefix: str) -> str:
     # storage instead; these queries run to completion and delete it.
     base = "/dev/shm" if os.path.isdir("/dev/shm") else None
     d = tempfile.mkdtemp(prefix=prefix, dir=base)
-    _PENDING_DIRS.append(d)
+    _PENDING_DIRS.setdefault(threading.get_ident(), []).append(d)
     return d
 
 
 def _cleanup_pending() -> None:
-    while _PENDING_DIRS:
-        shutil.rmtree(_PENDING_DIRS.pop(), ignore_errors=True)
+    """Remove the dirs this thread made."""
+    for d in _PENDING_DIRS.pop(threading.get_ident(), []):
+        shutil.rmtree(d, ignore_errors=True)
 
 
-atexit.register(_cleanup_pending)
+@atexit.register
+def _cleanup_all() -> None:
+    for dirs in list(_PENDING_DIRS.values()):
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)
 
 
 @register(
@@ -182,10 +189,13 @@ def _run_to_memory(agg_writer, mode: str) -> DataFrame:
     # offset/commit/state fsync cost ~33% better than 8 (measured);
     # a production stream sizes this to state-key cardinality
     # instead, so an untuned (200-partition) session is left alone.
+    # A session already at 4 is left alone: a call that starts while
+    # another thread's call holds the 4 must not save it and restore
+    # it over the session's own value.
     prev = None
     try:
         cur = spark.conf.get("spark.sql.shuffle.partitions")
-        if cur is not None and int(cur) <= 16:
+        if cur is not None and cur != "4" and int(cur) <= 16:
             prev = cur
             spark.conf.set("spark.sql.shuffle.partitions", "4")
     except Exception:
@@ -203,9 +213,9 @@ def _run_to_memory(agg_writer, mode: str) -> DataFrame:
     finally:
         if prev is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-    # bounded query is done: its source-symlink + checkpoint dirs are
-    # dead weight now (results live in the in-memory sink table)
-    _cleanup_pending()
+        # bounded query is done: its source-symlink + checkpoint dirs
+        # are dead weight now (results live in the in-memory sink)
+        _cleanup_pending()
     return _take_sink(spark, name)
 
 
@@ -726,13 +736,18 @@ def streaming_foreachbatch_upsert(
         state["path"] = new_path
         state["gen"] = str(gen)
 
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", _tmpdir("fmr_stream_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    try:
+        q = (
+            stream.writeStream.foreachBatch(upsert)
+            .option("checkpointLocation", _tmpdir("fmr_stream_ckpt_"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        # the source slices and checkpoint are dead weight now; the
+        # state generations live under scratch_dir
+        _cleanup_pending()
 
     assert state["path"] is not None, "stream produced no batches"
     return (

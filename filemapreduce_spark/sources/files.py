@@ -11,6 +11,12 @@ tree (/root/reference/interfaces.go:89-94) with a disk implementation
   ``pathGlobFilter`` provides listing-time pruning (the reference's
   ``CouldMatch`` subtree pruning, work.go:75-77). Works unchanged on
   HDFS/S3 via the Hadoop FS layer — this is the 100 TB path.
+- Chunked disk or object store: ``read_files_chunked`` lists and opens
+  every root, local or remote, through one ``pyarrow.fs.FileSystem``
+  (one listing on the driver, one positioned reader in the tasks). It
+  keeps Spark's hidden-path rule and reports ``mod_time`` at Spark's
+  millisecond precision, so both scans of one tree list the same files
+  with the same times.
 - In-memory: ``files_from_memory`` builds the same shape from a dict
   (the reference's StaticVirtualFileSystem).
 
@@ -134,10 +140,9 @@ def read_files(
         spark.read.format("binaryFile")
         .option("recursiveFileLookup", "true")
     )
-    if flt is not None:
-        glob = getattr(flt, "filename_glob", lambda: None)()
-        if glob is not None and glob != "*":
-            reader = reader.option("pathGlobFilter", glob)
+    glob = flt.filename_glob() if flt is not None else None
+    if glob is not None:
+        reader = reader.option("pathGlobFilter", glob)
 
     abs_root = os.path.abspath(root).rstrip("/")
     df = reader.load(abs_root)
@@ -201,71 +206,47 @@ CHUNKED_FILES_SCHEMA = T.StructType(
 )
 
 
-def _list_via_pyarrow(
-    spark: SparkSession,
-    root_uri: str,
-    glob: str | None,
-    filesystem=None,
-) -> DataFrame:
-    """Metadata-only recursive listing of a ``<scheme>://`` root via
-    ``pyarrow.fs`` → (path, uri, length, mod_time) DataFrame.
+def _hidden(name: str) -> bool:
+    """Spark's file-listing rule (``HadoopFSUtils.
+    shouldFilterOutPathName``): a name starting with ``.``, or with
+    ``_`` unless it holds ``=``, or ending in ``._COPYING_`` is hidden;
+    ``_metadata`` and ``_common_metadata`` names are kept."""
+    exclude = (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+    return exclude and not name.startswith(("_common_metadata", "_metadata"))
 
-    ``uri`` holds the FILESYSTEM path (e.g. ``bucket/key``) — the
-    executor re-binds it to the filesystem resolved from the original
-    root URI, which keeps hosted schemes (hdfs://namenode:port/...)
-    intact where scheme+path reconstruction would drop the authority.
-    The listing is driver-side but O(files) metadata with zero byte
-    reads — the same cost class as Spark's own InMemoryFileIndex.
-    Unsupported schemes (or unreachable stores) fail HERE, at plan
-    time, instead of as wrapped task retries inside the job.
 
-    Hidden paths are skipped as Spark's file listing skips them
-    (``HadoopFSUtils.shouldFilterOutPathName``), for directories and
-    files alike: a name starting with ``.``, or with ``_`` unless it
-    holds ``=``, or ending in ``._COPYING_``; ``_metadata`` and
-    ``_common_metadata`` names are kept. So a root lists the same
-    files here as through ``read_files`` or a local chunked scan.
+def _list_files(fs, base: str, flt: Filter | None, chunk_bytes: int) -> list:
+    """Metadata-only recursive listing of ``base`` in ``fs`` → one
+    ``(path, uri, length, mod_time, n_chunks)`` tuple per file.
+
+    ``path`` is relative to ``base``; ``uri`` is the path within
+    ``fs`` that tasks open. Files under a hidden name (``_hidden``) and
+    files whose relative path the filter's anchored regex rejects are
+    dropped — the same paths a Spark scan of the tree keeps.
+    ``mod_time`` is cut to the millisecond, the precision of Spark's
+    listing, so ``read_files`` and this scan report equal times.
     """
-    import fnmatch
-
     import pyarrow.fs as pafs
 
-    if filesystem is not None:
-        # injected handle (a configured S3FileSystem, a SubTree, an
-        # FSSpecHandler wrapper, ...): the root is a path WITHIN it;
-        # read_files_chunked has checked its type
-        fs, base = filesystem, root_uri
-    else:
-        try:
-            fs, base = pafs.FileSystem.from_uri(root_uri)
-        except Exception as e:
-            raise NotImplementedError(
-                f"read_files_chunked: unsupported or unreachable"
-                f" filesystem root {root_uri!r}: {e}"
-            ) from e
-
-    def hidden(name: str) -> bool:
-        exclude = (
-            (name.startswith("_") and "=" not in name)
-            or name.startswith(".")
-            or name.endswith("._COPYING_")
-        )
-        return exclude and not name.startswith(("_common_metadata", "_metadata"))
-
+    keep = re.compile(flt.to_regex()).search if flt is not None else None
     base = base.rstrip("/")
-    infos = fs.get_file_info(pafs.FileSelector(base, recursive=True))
     rows = []
-    for i in infos:
+    for i in fs.get_file_info(pafs.FileSelector(base, recursive=True)):
         if i.type != pafs.FileType.File:
             continue
-        name = i.path.rsplit("/", 1)[-1]
-        if glob is not None and not fnmatch.fnmatchcase(name, glob):
-            continue  # listing-time prune, pathGlobFilter parity
         rel = i.path[len(base) + 1 :] if i.path.startswith(base + "/") else i.path
-        if any(map(hidden, rel.split("/"))):
-            continue  # a hidden file, or a file under a hidden directory
-        rows.append((rel, i.path, int(i.size), i.mtime))
-    return spark.createDataFrame(rows, _CHUNK_META_SCHEMA)
+        if any(map(_hidden, rel.split("/"))) or (keep is not None and not keep(rel)):
+            continue
+        mtime = i.mtime
+        if mtime is not None:
+            mtime = mtime.replace(microsecond=mtime.microsecond // 1000 * 1000)
+        n_chunks = max(1, -(-i.size // chunk_bytes))
+        rows.append((rel, i.path, i.size, mtime, n_chunks))
+    return rows
 
 
 _CHUNK_META_SCHEMA = T.StructType(
@@ -274,32 +255,9 @@ _CHUNK_META_SCHEMA = T.StructType(
         T.StructField("uri", T.StringType(), False),
         T.StructField("length", T.LongType(), False),
         T.StructField("mod_time", T.TimestampType(), True),
+        T.StructField("n_chunks", T.LongType(), False),
     ]
 )
-
-
-def _classify_root(root: str) -> tuple[str, str]:
-    """Classify a chunked-scan root: ``("local", local_path)`` or
-    ``("uri", uri)``.
-
-    A root is a URI only when it spells an explicit scheme — either
-    ``<scheme>://...`` or the hostless local form ``file:/path``. An
-    existing local path always wins: a RELATIVE root whose first
-    segment contains a colon (e.g. ``data:v2/files``) is a directory
-    name, not a ``data:`` scheme (round-7 advice: the old bare
-    ``^scheme:`` match misclassified it).
-    """
-    root = str(root)
-    if os.path.exists(root):
-        return "local", root
-    m = re.match(r"^file:(?://)?(/.*)$", root)
-    if m:
-        # explicit file: URI — strip the scheme BEFORE abspath (the
-        # old path fed 'file:/x' to abspath and mangled it)
-        return "local", m.group(1)
-    if re.match(r"^[A-Za-z][A-Za-z0-9+.-]*://", root):
-        return "uri", root
-    return "local", root
 
 
 def read_files_chunked(
@@ -315,38 +273,36 @@ def read_files_chunked(
     represent (the reference streams these through its ``io.Reader``
     loader, filesystem.go:12).
 
-    Shape: the chunk PLAN is built from a metadata-only listing (no
-    bytes read) exploded to (path, chunk_idx, offset) rows, so a
+    Shape: the chunk PLAN is built on the driver from one
+    metadata-only listing (``get_file_info``, O(files), no bytes read,
+    no Spark job) exploded to (path, chunk_idx, offset) rows, so a
     40 GiB file becomes 320 independent 128 MiB tasks instead of one
-    straggler; each mapInPandas task then opens its file and reads
-    ONLY its [offset, offset+chunk_bytes) slice. Reassembly keys
-    (chunk_idx, n_chunks, offset) ride along so loaders can
-    sort-merge or boundary-patch downstream.
+    straggler; each mapInPandas task then issues a positioned
+    ``read_at`` for ONLY its [offset, offset+chunk_bytes) slice — a
+    ranged GET on object stores, a seek on HDFS and local disk.
+    Reassembly keys (chunk_idx, n_chunks, offset) ride along so
+    loaders can sort-merge or boundary-patch downstream.
 
-    Roots: plain local paths use Spark's binaryFile listing + local
-    seek I/O. ``<scheme>://`` roots (s3://, gs://, hdfs://)
-    go through ``pyarrow.fs``: a driver-side metadata listing
-    (``get_file_info``, O(files), no bytes) builds the same plan, and
-    each executor task issues a positioned ``read_at`` — a ranged GET
-    on object stores, a seek on HDFS/local. ``file:`` roots
-    (``file:/x``, ``file:///x``) are local paths and take the local
-    path; passing ``filesystem=pyarrow.fs.LocalFileSystem()`` runs
-    the generic path over a local tree. Unsupported schemes fail fast
-    at plan time on the driver.
+    Roots: every root is listed and opened through one
+    ``pyarrow.fs.FileSystem`` (the reference's single ``List``/``Open``
+    per backend, interfaces.go:89-94), resolved once on the driver by
+    ``FileSystem.from_uri``: an existing local path (``data:v2``
+    included) through its absolute path, otherwise the root as a URI
+    (``/abs``, ``file:/abs``, ``file:///abs``, ``s3://``, ``gs://``,
+    ``hdfs://``). Unsupported schemes fail fast at plan time. The
+    resolved handle is shipped to executors in the task closure
+    (pyarrow filesystems pickle).
 
     ``filesystem``: an explicit ``pyarrow.fs.FileSystem`` handle
     (a credentialed ``S3FileSystem``, a ``SubTreeFileSystem``, a
-    ``PyFileSystem(FSSpecHandler(...))`` over any fsspec store).
-    When given, ``root`` is a path WITHIN that filesystem, the same
-    generic listing + positioned-read code runs against it, and the
-    handle itself is shipped to executors (pyarrow filesystems
-    pickle) instead of being re-resolved per task from a URI.
+    ``PyFileSystem(FSSpecHandler(...))`` over any fsspec store) to use
+    instead of resolving one; ``root`` is then a path WITHIN it.
     """
     import pandas as pd
+    import pyarrow.fs as pafs
 
+    root = str(root)
     if filesystem is not None:
-        import pyarrow.fs as pafs
-
         if not isinstance(filesystem, pafs.FileSystem):
             # fail at plan time with the wrapper named, instead of as an
             # opaque AttributeError deep inside get_file_info / task
@@ -360,118 +316,47 @@ def read_files_chunked(
                 f" (got {type(filesystem).__module__}."
                 f"{type(filesystem).__qualname__})"
             )
-
-    flt = as_filter(path_filter)
-    glob = None
-    if flt is not None:
-        g = getattr(flt, "filename_glob", lambda: None)()
-        if g is not None and g != "*":
-            glob = g
-
-    if filesystem is not None:
-        mode, loc = "uri", str(root)
+        fs, base = filesystem, root
     else:
-        mode, loc = _classify_root(root)
+        try:
+            fs, base = pafs.FileSystem.from_uri(
+                os.path.abspath(root) if os.path.exists(root) else root
+            )
+        except Exception as e:
+            raise NotImplementedError(
+                f"read_files_chunked: unsupported or unreachable"
+                f" filesystem root {root!r}: {e}"
+            ) from e
 
-    if mode == "uri":
-        meta = _list_via_pyarrow(spark, loc, glob, filesystem=filesystem)
-        root_uri = loc
-    else:
-        reader = (
-            spark.read.format("binaryFile")
-            .option("recursiveFileLookup", "true")
-        )
-        if glob is not None:
-            reader = reader.option("pathGlobFilter", glob)
-        abs_root = os.path.abspath(loc).rstrip("/")
-        meta = reader.load(abs_root).select(
-            F.col("path").alias("uri"),
-            F.col("length"),
-            F.col("modificationTime").alias("mod_time"),
-        )
-        rel = F.regexp_replace(
-            F.col("uri"), "^.*?" + re.escape(abs_root) + "/", ""
-        )
-        meta = meta.select(rel.alias("path"), "uri", "length", "mod_time")
-        root_uri = None
-    if flt is not None:
-        meta = meta.filter(F.col("path").rlike(flt.to_regex()))
-
-    n_chunks = F.greatest(
-        F.lit(1).cast("long"),
-        F.ceil(F.col("length") / F.lit(chunk_bytes)).cast("long"),
-    )
-    # One task per chunk, like Spark's own maxPartitionBytes file
-    # splits — and the count must be EXPLICIT: the chunk-plan rows
-    # are a few KB of metadata, so a column-only repartition is
-    # AQE-coalescible (REPARTITION_BY_COL) and adaptive execution
-    # would merge the whole plan into ~one partition, serializing
-    # every 128 MiB ranged read behind a single task. The count is a
-    # metadata-only aggregate (uri mode already holds the listing on
-    # the driver; local mode sums over the binaryFile index, no file
-    # bytes), clamped to 65536 so a 100 TB corpus still plans
-    # instantly — above the clamp each task reads a handful of
-    # contiguous chunks, which is fine.
-    total_chunks = int(
-        meta.select(
-            F.coalesce(F.sum(n_chunks), F.lit(0)).alias("c")
-        ).collect()[0]["c"]
-    )
+    listing = _list_files(fs, base, as_filter(path_filter), chunk_bytes)
+    total_chunks = sum(row[-1] for row in listing)
     plan = (
-        meta.withColumn("n_chunks", n_chunks)
-        .select(
-            "path",
-            "uri",
-            "length",
-            "mod_time",
-            "n_chunks",
-            F.explode(
-                F.sequence(F.lit(0).cast("long"), F.col("n_chunks") - 1)
-            ).alias("chunk_idx"),
+        spark.createDataFrame(listing, _CHUNK_META_SCHEMA)
+        .withColumn(
+            "chunk_idx",
+            F.explode(F.sequence(F.lit(0).cast("long"), F.col("n_chunks") - 1)),
         )
         .withColumn("offset", F.col("chunk_idx") * F.lit(chunk_bytes))
-        # spread chunks across tasks — without this every chunk of a
-        # file sits in the listing's partition and serializes again
+        # One task per chunk, like Spark's own maxPartitionBytes file
+        # splits — and the count must be EXPLICIT: the chunk-plan rows
+        # are a few KB of metadata, so a column-only repartition is
+        # AQE-coalescible (REPARTITION_BY_COL) and adaptive execution
+        # would merge the whole plan into ~one partition, serializing
+        # every 128 MiB ranged read behind a single task. The count
+        # comes from the driver's listing, clamped to 65536 so a
+        # 100 TB corpus still plans instantly — above the clamp each
+        # task reads a handful of contiguous chunks, which is fine.
         .repartition(
             max(1, min(total_chunks, 65536)), "path", "chunk_idx"
         )
     )
 
     def _read_slices(batches):
-        # one FileSystem handle per task, resolved lazily from the
-        # root URI (not per row): from_uri can be a network round
-        # trip on object stores
-        fs_cache: list = []
-
-        def _fs():
-            if not fs_cache:
-                if filesystem is not None:
-                    # injected handle, shipped via the task closure
-                    fs_cache.append(filesystem)
-                else:
-                    import pyarrow.fs as pafs
-
-                    fs_cache.append(
-                        pafs.FileSystem.from_uri(root_uri)[0]
-                    )
-            return fs_cache[0]
-
         for pdf in batches:
             contents = []
             for uri, off in zip(pdf["uri"], pdf["offset"]):
-                if root_uri is not None:
-                    # generic path: positioned read — a ranged GET on
-                    # object stores, a seek on HDFS/local
-                    with _fs().open_input_file(uri) as f:
-                        contents.append(f.read_at(chunk_bytes, int(off)))
-                    continue
-                # Spark's binaryFile listing spells local files as
-                # file:/abs or file:///abs — strip scheme (and the
-                # always-empty authority) down to the local path
-                local = re.sub(r"^file:(?://[^/]*)?", "", uri)
-                with open(local, "rb") as f:
-                    f.seek(int(off))
-                    contents.append(f.read(chunk_bytes))
+                with fs.open_input_file(uri) as f:
+                    contents.append(f.read_at(chunk_bytes, int(off)))
             yield pd.DataFrame(
                 {
                     "path": pdf["path"],

@@ -5,6 +5,7 @@ bounded slices that reassemble to the exact original bytes."""
 
 import hashlib
 import os
+import uuid
 
 import pyarrow.fs as pafs
 import pytest
@@ -82,9 +83,9 @@ def test_chunked_small_file_is_single_chunk(spark, big_tree):
 
 
 def test_chunked_generic_uri_path_reassembles(spark, big_tree):
-    """An injected pyarrow filesystem routes through the generic
-    pyarrow.fs ranged-read path (the object-store code), end-to-end on
-    a >100 MB file. (A ``file://`` root would take the local path.)"""
+    """An injected pyarrow filesystem is listed and read through that
+    handle instead of one resolved from the root, end-to-end on a
+    >100 MB file."""
     chunk = 32 << 20
     df = read_files_chunked(
         spark, big_tree, chunk_bytes=chunk, filesystem=pafs.LocalFileSystem()
@@ -120,9 +121,10 @@ def test_chunked_generic_uri_respects_path_filter(spark, big_tree):
 
 
 def test_chunked_listings_skip_hidden_paths_alike(spark, tmp_path):
-    """The whole-file scan, the local chunked scan and the generic
-    pyarrow listing all skip Spark's hidden paths (names starting with
-    ``_`` or ``.``, files and directories alike)."""
+    """The whole-file scan and the chunked scan, with the filesystem
+    resolved from the root or injected, all skip Spark's hidden paths
+    (names starting with ``_`` or ``.``, files and directories
+    alike)."""
     for rel in ["a.txt", "_b.txt", ".c.txt", "sub/d.txt", ".hid/e.txt", "_hid/f.txt"]:
         (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
         (tmp_path / rel).write_bytes(b"x")
@@ -286,3 +288,77 @@ def test_chunked_injected_filesystem_ranged_reads(spark, tmp_path):
         bytes(rows[("big.bin", i)]["content"]) for i in range(4)
     )
     assert joined == big
+
+
+def test_chunked_planning_runs_no_spark_job(spark, tmp_path):
+    """The chunk plan comes from one driver-side listing: planning a
+    local root starts no Spark job (no listing or chunk-count job);
+    reading it does."""
+    for i in range(3):
+        (tmp_path / f"f{i}.bin").write_bytes(bytes([i]) * 1000)
+    sc = spark.sparkContext
+    group = f"chunked_plan_{uuid.uuid4().hex[:8]}"
+
+    def jobs() -> int:
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    sc.setJobGroup(group, group)
+    try:
+        df = read_files_chunked(spark, str(tmp_path), chunk_bytes=300)
+        planned = jobs()
+        assert df.count() == 12
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert planned == 0
+    assert jobs() > 0
+
+
+@pytest.mark.parametrize("injected", [False, True])
+def test_chunked_listing_matches_read_files(spark, tmp_path, injected):
+    """One tree, two scans: ``read_files`` and ``read_files_chunked``
+    report the same ``(path, length, mod_time)`` per file, through a
+    symlinked directory and a symlinked file, past hidden paths and a
+    literal ``[x].json``. Each file's mtime has a sub-millisecond part,
+    which both scans drop (Spark lists at millisecond precision)."""
+    root = tmp_path / "tree"
+    rels = [
+        "a/[x].json",
+        "a/b.txt",
+        "real/c.txt",
+        "k=1/d.txt",
+        "_e.txt",
+        ".f.txt",
+        ".hid/g.txt",
+        "_hid/h.txt",
+    ]
+    for n, rel in enumerate(rels):
+        f = root / rel
+        f.parent.mkdir(parents=True, exist_ok=True)
+        f.write_bytes(b"x" * (n + 1))
+        os.utime(f, ns=(1_600_000_000_123_456_789 + n, 1_600_000_000_123_456_789 + n))
+    (root / "lnk").symlink_to(root / "real", target_is_directory=True)
+    (root / "flink.txt").symlink_to(root / "a" / "b.txt")
+
+    whole = {
+        (r["path"], r["length"], r["mod_time"])
+        for r in read_files(spark, str(root)).select("path", "length", "mod_time").collect()
+    }
+    fs = pafs.LocalFileSystem() if injected else None
+    chunked = {
+        (r["path"], r["file_length"], r["mod_time"])
+        for r in read_files_chunked(spark, str(root), filesystem=fs)
+        .filter(F.col("chunk_idx") == 0)
+        .select("path", "file_length", "mod_time")
+        .collect()
+    }
+    assert {p for p, _, _ in whole} == {
+        "a/[x].json",
+        "a/b.txt",
+        "real/c.txt",
+        "k=1/d.txt",
+        "lnk/c.txt",
+        "flink.txt",
+    }
+    assert all(t.microsecond == 123000 for _, _, t in whole)
+    assert chunked == whole

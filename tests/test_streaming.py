@@ -2,7 +2,9 @@
 streaming queries: foreachBatch file sink with multi-batch replay.
 """
 
+import os
 import re
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 from pyspark.sql import functions as F
@@ -336,3 +338,85 @@ def test_upsert_result_outlives_the_next_streaming_call(spark, events, sf_small)
     rows = upsert.collect()
     assert rows
     assert sum(r["n_events"] for r in rows) == events.count()
+
+
+def test_streaming_calls_in_threads(spark, sf_small):
+    """Streaming queries running at once in three threads of one
+    session each return their serial rows: a call removes only the
+    scratch dirs it made (a dir made in the main thread outlives the
+    threads' calls) and leaves the session's shuffle partitions as it
+    found them."""
+    from filemapreduce_spark.queries import load_all
+    from filemapreduce_spark.queries.streaming import _cleanup_pending, _tmpdir
+
+    registry = load_all()
+    names = [
+        "streaming_tumbling_counts",
+        "streaming_sliding_counts",
+        "streaming_dedup_keys",
+    ]
+
+    def rows(name):
+        return sorted(registry[name].fn(spark, sf_small).collect(), key=repr)
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    try:
+        serial = {n: rows(n) for n in names}
+        mine = _tmpdir("fmr_test_")
+        with ThreadPoolExecutor(len(names)) as pool:
+            threaded = dict(zip(names, pool.map(rows, names)))
+        assert os.path.isdir(mine)
+        _cleanup_pending()
+        assert not os.path.exists(mine)
+        assert threaded == serial
+        assert all(serial.values())
+        assert spark.conf.get(key) == "8"
+    finally:
+        spark.conf.set(key, prev)
+
+
+
+def test_scratch_dirs_stay_with_their_thread():
+    """Many threads making and removing stream scratch dirs at once,
+    with fast thread switching: a thread's cleanup removes exactly the
+    dirs it made. Half the threads clean up first; the other half's
+    dirs must still be there afterwards."""
+    import sys
+    import threading
+
+    from filemapreduce_spark.queries.streaming import _cleanup_pending, _tmpdir
+
+    n_threads = 4 * (os.cpu_count() or 1)
+    phase = threading.Barrier(n_threads, timeout=60)
+    errors = []
+
+    def work(i):
+        try:
+            mine = [_tmpdir("fmr_test_") for _ in range(3)]
+            phase.wait()  # every thread holds its dirs
+            if i % 2 == 0:
+                _cleanup_pending()
+            phase.wait()  # the first half has cleaned up
+            assert all(os.path.isdir(d) for d in mine) == (i % 2 == 1)
+            _cleanup_pending()
+            assert not any(os.path.exists(d) for d in mine)
+        except Exception as e:  # reported by the main thread
+            errors.append(e)
+            phase.abort()
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=work, args=(i,)) for i in range(n_threads)
+        ]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []

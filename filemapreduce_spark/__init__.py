@@ -14,13 +14,12 @@ Public surface:
 """
 
 from filemapreduce_spark.cache import cache_scope
-from filemapreduce_spark.globs import MultiFilter, PathFilter, compile_glob
+from filemapreduce_spark.globs import MultiFilter, PathFilter
 from filemapreduce_spark.core.engine import FileEngine, Job
 
 __all__ = [
     "PathFilter",
     "MultiFilter",
-    "compile_glob",
     "Job",
     "FileEngine",
     "cache_scope",

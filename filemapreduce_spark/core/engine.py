@@ -144,11 +144,11 @@ class FileEngine:
     FS layer reaches) or an explicit files DF (e.g. the in-memory VFS).
 
     Single-file size contract: loaders see each file as ONE
-    ``content`` row, so a file is bounded by the ~2 GiB cell ceiling
-    (``sources.files.WHOLE_FILE_LIMIT_BYTES``) and a multi-GB file is
-    a one-task straggler well before that. Pre-flight oversized trees
-    with ``read_files(..., max_file_bytes=...)`` (fails fast, names
-    the paths) and route big inputs through ``read_files_chunked``
+    ``content`` row, so a file is bounded by Spark's
+    ``spark.sql.sources.binaryFile.maxLength`` (default 2^31-1 bytes;
+    the scan fails with an error naming the file) and a multi-GB file
+    is a one-task straggler well before that. Set that conf lower to
+    fail earlier, and route big inputs through ``read_files_chunked``
     (bounded slices + reassembly keys) with a chunk-aware mapper.
     """
 
@@ -219,35 +219,27 @@ class FileEngine:
             if job.sort_key is not None:
                 # Deterministic order for order-sensitive reducers: the
                 # reference funnels everything into ONE reducer
-                # goroutine (mapreduce.go:401-431); the Spark analog is
-                # a single sorted partition. WARNING — this serializes
-                # the reduce: ``repartition(1)`` moves the WHOLE mapped
-                # output through one task, so a sort_key on a large
-                # mapped stream is a deliberate scale trade-off
-                # (faithful to the reference's single-reducer
-                # semantics), not a default. Order-INSENSITIVE reducers
-                # must leave sort_key unset — aggregation then runs
-                # partial+final fully distributed, and tests assert no
-                # single-partition funnel appears in their plans.
-                # sort_partitions > 1 swaps the funnel for a
-                # range-partitioned sort: globally ordered layout, key
-                # runs kept whole per partition, reduce runs N-wide —
-                # valid for key-run-decomposable reducers (see Job).
+                # goroutine (mapreduce.go:401-431). Ranges on the
+                # LEADING key, each sorted on the full key: at the
+                # default sort_partitions=1 one sorted partition
+                # (``Exchange SinglePartition`` + ``Sort``). WARNING —
+                # that serializes the reduce: the WHOLE mapped output
+                # moves through one task, a deliberate scale trade-off
+                # (faithful to the reference), not a default.
+                # Order-INSENSITIVE reducers must leave sort_key unset:
+                # aggregation then runs partial+final fully distributed,
+                # and tests assert no single-partition funnel in their
+                # plans. sort_partitions > 1 runs the reduce N-wide with
+                # a globally ordered layout and each leading-key run
+                # whole in one partition — valid for key-run-
+                # decomposable reducers (see Job); ranges on a composite
+                # key would split a run at a tuple boundary.
                 keys = job.sort_key
                 if not isinstance(keys, (list, tuple)):
                     keys = [keys]
-                # n validated unconditionally at the top of plan()
-                if n > 1:
-                    # partition on the LEADING key only: ranges on a
-                    # composite key would split a leading-key run at a
-                    # tuple boundary, breaking run-decomposability.
-                    mapped = mapped.repartitionByRange(
-                        n, keys[0]
-                    ).sortWithinPartitions(*keys)
-                else:
-                    mapped = mapped.repartition(1).sortWithinPartitions(
-                        *keys
-                    )
+                mapped = mapped.repartitionByRange(
+                    n, keys[0]
+                ).sortWithinPartitions(*keys)
             return job.reducer(mapped)
         return mapped
 

@@ -22,12 +22,11 @@ Two consumers:
 - Planner-side: ``Filter.match`` / ``Filter.could_match`` for traversal
   pruning parity and tests (pure Python, driver-side only — never in a
   hot row loop).
-- DataFrame-side: ``compile_glob`` produces an anchored regex usable in
-  ``F.regexp_like(path_col, ...)`` (Java regex; we emit only portable
-  constructs: character classes, ``[^/]``, non-capturing groups) plus a
-  best-effort filename glob for Spark's ``pathGlobFilter`` scan option
-  (listing-time pruning — the Spark analog of the reference's
-  ``CouldMatch`` subtree pruning, interfaces.go:4-7 / work.go:75-77).
+- DataFrame-side: ``Filter.to_regex`` produces an anchored regex that
+  each Job applies with ``rlike`` to the relative-path column of the
+  shared scan (Java regex; we emit only portable constructs: character
+  classes, ``[^/]``, non-capturing groups). The scan itself lists the
+  whole root: there is no listing-time prune.
 """
 
 from __future__ import annotations
@@ -52,12 +51,6 @@ class Filter:
     def to_regex(self) -> str:
         """Anchored regex (Java/RE2-portable) equivalent to ``match``."""
         raise NotImplementedError
-
-    def filename_glob(self) -> str | None:
-        """Glob over the final path segment for Spark's
-        ``pathGlobFilter`` listing-time prune, or None for no prune
-        (an OR of filters has none: that option takes one glob)."""
-        return None
 
 
 def _segment_regex(seg: str) -> str:
@@ -140,19 +133,6 @@ class PathFilter(Filter):
                 parts.append(_segment_regex(seg))
         return "^" + "/".join(parts) + "$"
 
-    def filename_glob(self) -> str | None:
-        """Best-effort glob over the FINAL path segment for Spark's
-        ``pathGlobFilter`` option (which only sees file names). Returns
-        None when the last segment matches any name (``*`` or ``**``)
-        or holds a character that Hadoop's glob reads as syntax
-        (``[x].json`` would match ``x.json`` there, while this filter
-        matches it literally); the anchored regex still filters.
-        """
-        last = self._segs()[-1].replace(RECURSIVE_WILDCARD, WILDCARD)
-        if last == WILDCARD or any(c in last for c in "?[]{}\\"):
-            return None
-        return last
-
 
 @dataclass(frozen=True)
 class MultiFilter(Filter):
@@ -182,9 +162,3 @@ def as_filter(f: Filter | str | None) -> Filter | None:
     if f is None or isinstance(f, Filter):
         return f
     return PathFilter(f)
-
-
-def compile_glob(pattern: str) -> str:
-    """Compile a glob pattern to an anchored regex string suitable for
-    ``F.regexp_like`` / ``rlike`` on a relative-path column."""
-    return PathFilter(pattern).to_regex()

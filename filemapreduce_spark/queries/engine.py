@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from filemapreduce_spark.core.engine import FileEngine, Job
-from filemapreduce_spark.globs import MultiFilter, compile_glob
+from filemapreduce_spark.globs import MultiFilter, PathFilter
 from filemapreduce_spark.operators.money import SQL_CENTS, cents
 from filemapreduce_spark.operators.scratch import scratch_dir
 from filemapreduce_spark.operators.textops import ascii_fold
@@ -686,7 +686,7 @@ def engine_strict_abort_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _GLOB = "src1*/*.txt"
-_REGEX = compile_glob(_GLOB)  # ^src1[^/]*/[^/]*\.txt$
+_REGEX = PathFilter(_GLOB).to_regex()  # ^src1[^/]*/[^/]*\.txt$
 
 
 @register(

@@ -2,7 +2,6 @@ from filemapreduce_spark.sources.files import (
     FILES_SCHEMA,
     files_from_memory,
     read_files,
-    with_text,
 )
 from filemapreduce_spark.sources.tables import TABLE_NAMES, load_tables, register_views
 
@@ -10,7 +9,6 @@ __all__ = [
     "FILES_SCHEMA",
     "read_files",
     "files_from_memory",
-    "with_text",
     "TABLE_NAMES",
     "load_tables",
     "register_views",

@@ -7,10 +7,12 @@ tree (/root/reference/interfaces.go:89-94) with a disk implementation
 
 - Disk: ``spark.read.format("binaryFile")`` with ``recursiveFileLookup``
   — Spark's InMemoryFileIndex does the listing/traversal (the
-  reference's hand-rolled DFS at mapreduce.go:142-205), and
-  ``pathGlobFilter`` provides listing-time pruning (the reference's
-  ``CouldMatch`` subtree pruning, work.go:75-77). Works unchanged on
-  HDFS/S3 via the Hadoop FS layer — this is the 100 TB path.
+  reference's hand-rolled DFS at mapreduce.go:142-205). The whole root
+  is listed once and each Job filters the shared scan with its own
+  anchored path regex, as the reference lists the tree once and lets
+  each job filter what it sees (jobs.go:3-5, mapreduce.go:176-184).
+  A root with a scheme (``file:``, ``hdfs://``, ``s3a://``) goes to
+  the Hadoop FS layer unchanged — this is the 100 TB path.
 - Chunked disk or object store: ``read_files_chunked`` lists and opens
   every root, local or remote, through one ``pyarrow.fs.FileSystem``
   (one listing on the driver, one positioned reader in the tasks). It
@@ -55,14 +57,15 @@ Canonical schema: path STRING (relative, '/'-separated), content BINARY,
 length LONG, mod_time TIMESTAMP.
 
 Single-file size contract: the canonical DF materializes each file as
-ONE ``content`` row, so a file is capped at the JVM byte-array /
-single-cell limit (~2 GiB) and a multi-GB file makes its task a
-straggler long before that. The reference's ``io.Reader`` streaming
-loader (filesystem.go:12) has no whole-file equivalent here by
-design. For oversized inputs use ``read_files_chunked`` (bounded
-``chunk_bytes`` slices, one row per chunk, reassembly keys included);
-``read_files(max_file_bytes=...)`` fails fast with the offending
-paths before any content is read.
+ONE ``content`` row, so a file is capped at Spark's
+``spark.sql.sources.binaryFile.maxLength`` (default 2^31-1 bytes, the
+JVM byte-array limit); the scan of a longer file fails with an error
+that names it. Set that conf lower to fail earlier. A multi-GB file
+makes its task a straggler long before the cap. The reference's
+``io.Reader`` streaming loader (filesystem.go:12) has no whole-file
+equivalent here by design. For oversized inputs use
+``read_files_chunked`` (bounded ``chunk_bytes`` slices, one row per
+chunk, reassembly keys included).
 """
 
 from __future__ import annotations
@@ -86,13 +89,6 @@ FILES_SCHEMA = T.StructType(
 )
 
 
-# Hard ceiling of the whole-file row representation: one content cell
-# is a JVM byte array (2^31-1 bytes). Files at/above this fail inside
-# the scan with an opaque JVM error — read_files(max_file_bytes=...)
-# turns that into a named, actionable failure up front.
-WHOLE_FILE_LIMIT_BYTES = (1 << 31) - 1
-
-
 def scan_partitions(
     total_bytes: int, parallelism: int, max_partition_bytes: int, open_cost: int
 ) -> int:
@@ -104,17 +100,20 @@ def scan_partitions(
     return max(1, -(-total_bytes // split))
 
 
-def read_files(
-    spark: SparkSession,
-    root: str,
-    path_filter: Filter | str | None = None,
-    max_file_bytes: int | None = None,
-) -> DataFrame:
+def _local_or_uri(root: str) -> str:
+    """An existing local path as its absolute path (``data:v2``
+    included), otherwise the root unchanged (a URI such as
+    ``file:///abs``, ``hdfs://`` or ``s3a://``)."""
+    root = str(root)
+    return os.path.abspath(root) if os.path.exists(root) else root
+
+
+def read_files(spark: SparkSession, root: str) -> DataFrame:
     """Recursive binary scan rooted at ``root`` → canonical files DF.
 
-    ``path_filter``'s final segment becomes a ``pathGlobFilter`` so
-    non-matching files are pruned at listing time (never opened); the
-    full anchored regex is applied on the relative path for exactness.
+    ``root`` is a local path or a URI the Hadoop FS layer reads
+    (``file:``, ``hdfs://``, ``s3a://``); ``path`` is each file's path
+    with the Hadoop-qualified root and its ``/`` cut off the front.
 
     Partitions: Spark's split-size rule (``FilePartition.
     maxSplitBytes``) over the listed bytes, ``n = max(1, ceil(bytes /
@@ -127,58 +126,28 @@ def read_files(
     cores, down to one; larger trees get ``max(defaultParallelism,
     ceil(bytes / maxPartitionBytes))``. An unknown size never
     coalesces. See the module docstring.
-
-    ``max_file_bytes`` (opt-in; costs one metadata-only listing job):
-    fail fast with the offending paths if any matched file exceeds
-    the limit, instead of an opaque mid-scan JVM failure at the
-    ~2 GiB row ceiling (``WHOLE_FILE_LIMIT_BYTES``) or a multi-GB
-    single-task straggler. Oversized inputs belong on
-    ``read_files_chunked``.
     """
-    flt = as_filter(path_filter)
-    reader = (
+    root = _local_or_uri(root)
+    df = (
         spark.read.format("binaryFile")
         .option("recursiveFileLookup", "true")
+        .load(root)
     )
-    glob = flt.filename_glob() if flt is not None else None
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-
-    abs_root = os.path.abspath(root).rstrip("/")
-    df = reader.load(abs_root)
+    # the prefix the listing puts on every path: the root qualified by
+    # its filesystem, as Spark qualifies it (file:///a -> file:/a)
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(root)
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    prefix = hpath.getFileSystem(hconf).makeQualified(hpath).toString().rstrip("/")
     # the relation's size statistic: the listing's summed file lengths
     listed_bytes = int(
         str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     )
-    rel = F.regexp_replace(F.col("path"), "^.*?" + re.escape(abs_root) + "/", "")
     df = df.select(
-        rel.alias("path"),
+        F.substr("path", F.lit(len(prefix) + 2)).alias("path"),
         F.col("content"),
         F.col("length"),
         F.col("modificationTime").alias("mod_time"),
     )
-    if flt is not None:
-        df = df.filter(F.col("path").rlike(flt.to_regex()))
-    if max_file_bytes is not None:
-        # column pruning drops `content`, so this reads footers/
-        # listing metadata only — no file bytes
-        over = (
-            df.select("path", "length")
-            .filter(F.col("length") > max_file_bytes)
-            .limit(5)
-            .collect()
-        )
-        if over:
-            listing = ", ".join(
-                f"{r['path']} ({r['length']:,} B)" for r in over
-            )
-            raise RuntimeError(
-                f"read_files: file(s) exceed max_file_bytes="
-                f"{max_file_bytes:,} and would breach the whole-file "
-                f"row contract (~2 GiB cell ceiling / single-task "
-                f"straggler): {listing}. Use read_files_chunked for "
-                "oversized inputs."
-            )
     # an unknown size (Long.MaxValue) needs more partitions than any
     # scan has, so it changes nothing
     conf = spark._jsparkSession.sessionState().conf()
@@ -269,9 +238,9 @@ def read_files_chunked(
 ) -> DataFrame:
     """Chunked binary scan: one row per ``chunk_bytes`` slice of each
     file — the scale path for inputs beyond the whole-file row
-    ceiling (``WHOLE_FILE_LIMIT_BYTES``) that ``read_files`` cannot
-    represent (the reference streams these through its ``io.Reader``
-    loader, filesystem.go:12).
+    ceiling (``spark.sql.sources.binaryFile.maxLength``) that
+    ``read_files`` cannot represent (the reference streams these
+    through its ``io.Reader`` loader, filesystem.go:12).
 
     Shape: the chunk PLAN is built on the driver from one
     metadata-only listing (``get_file_info``, O(files), no bytes read,
@@ -319,9 +288,7 @@ def read_files_chunked(
         fs, base = filesystem, root
     else:
         try:
-            fs, base = pafs.FileSystem.from_uri(
-                os.path.abspath(root) if os.path.exists(root) else root
-            )
+            fs, base = pafs.FileSystem.from_uri(_local_or_uri(root))
         except Exception as e:
             raise NotImplementedError(
                 f"read_files_chunked: unsupported or unreachable"
@@ -384,8 +351,3 @@ def files_from_memory(
         data = content.encode("utf-8") if isinstance(content, str) else bytes(content)
         rows.append((path, data, len(data), None))
     return spark.createDataFrame(rows, FILES_SCHEMA)
-
-
-def with_text(df: DataFrame, encoding: str = "UTF-8") -> DataFrame:
-    """Add a decoded ``text`` column from ``content`` bytes."""
-    return df.withColumn("text", F.decode(F.col("content"), encoding))

@@ -1,7 +1,8 @@
 """Single-file size ceiling contract (sources/files.py): the
-whole-file path fails fast with named paths when a file exceeds the
-declared limit, and read_files_chunked reads a >100 MB file as
-bounded slices that reassemble to the exact original bytes."""
+whole-file scan fails with the file named when it exceeds Spark's
+``spark.sql.sources.binaryFile.maxLength``, and read_files_chunked
+reads a >100 MB file as bounded slices that reassemble to the exact
+original bytes."""
 
 import hashlib
 import os
@@ -11,6 +12,7 @@ import pyarrow.fs as pafs
 import pytest
 from pyspark.sql import functions as F
 
+from filemapreduce_spark import FileEngine, Job
 from filemapreduce_spark.globs import PathFilter
 from filemapreduce_spark.sources.files import (
     read_files,
@@ -33,16 +35,50 @@ def big_tree(tmp_path_factory):
     return str(root)
 
 
+MAX_LENGTH = "spark.sql.sources.binaryFile.maxLength"
+
+
 def test_read_files_failfast_names_oversized_file(spark, big_tree):
-    with pytest.raises(RuntimeError) as ei:
-        read_files(spark, big_tree, max_file_bytes=64 << 20)
-    msg = str(ei.value)
-    assert "big.bin" in msg and "read_files_chunked" in msg
+    """A file longer than ``binaryFile.maxLength`` fails the scan with
+    an error that names it."""
+    before = spark.conf.get(MAX_LENGTH)
+    spark.conf.set(MAX_LENGTH, str(64 << 20))
+    try:
+        with pytest.raises(Exception) as ei:
+            read_files(spark, big_tree).select("path", "content").collect()
+    finally:
+        spark.conf.set(MAX_LENGTH, before)
+    assert "big.bin" in str(ei.value)
 
 
 def test_read_files_passes_under_limit(spark, big_tree):
-    df = read_files(spark, big_tree, max_file_bytes=256 << 20)
-    assert df.filter(F.col("path") == "data/small.bin").count() == 1
+    df = read_files(spark, big_tree)
+    rows = df.filter(F.col("path") == "data/small.bin").collect()
+    assert [bytes(r["content"]) for r in rows] == [b"tiny payload"]
+
+
+def test_engine_fails_naming_a_file_over_the_cell_limit(spark, tmp_path):
+    """Under the default conf a 2^31-byte file (one byte over the JVM
+    byte-array cap) fails a shared-scan run with an error that names
+    the file. The file is sparse, so no bytes are written."""
+    (tmp_path / "ok.txt").write_bytes(b"x")
+    huge = tmp_path / "d" / "huge.bin"
+    huge.parent.mkdir()
+    huge.touch()
+    os.truncate(huge, 1 << 31)
+    st = os.stat(huge)
+    assert st.st_size == 1 << 31 and st.st_blocks * 512 < 1 << 20
+    jobs = [
+        Job(name="n", finalizer=lambda df: df.count()),
+        Job(
+            name="bytes",
+            reducer=lambda df: df.agg(F.sum("length")),
+            finalizer=lambda df: df.collect()[0][0],
+        ),
+    ]
+    with pytest.raises(Exception) as ei:
+        FileEngine(spark, root=str(tmp_path)).run(jobs)
+    assert "huge.bin" in str(ei.value)
 
 
 def test_chunked_read_reassembles_exactly(spark, big_tree):
@@ -143,10 +179,10 @@ def test_chunked_listings_skip_hidden_paths_alike(spark, tmp_path):
 @pytest.mark.parametrize("pattern", ["**/[*].json", "**/{a,b}.json"])
 def test_listing_prunes_only_what_the_path_filter_rejects(spark, tmp_path, pattern):
     """``[...]`` and ``{a,b}`` are literal in a path filter but syntax
-    in Hadoop's ``pathGlobFilter`` and in ``fnmatch``: a file-name glob
-    handed to either would drop ``[x].json`` and ``{a,b}.json`` at
-    listing time. Every scan returns exactly the paths the filter
-    matches."""
+    in Hadoop's globs and in ``fnmatch``: a file-name glob handed to
+    either would drop ``[x].json`` and ``{a,b}.json`` at listing time.
+    A FileEngine Job and every chunked scan return exactly the paths
+    the filter matches."""
     rels = ["a/[x].json", "a/x.json", "a/{a,b}.json", "a/a.json"]
     for rel in rels:
         (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
@@ -158,7 +194,8 @@ def test_listing_prunes_only_what_the_path_filter_rejects(spark, tmp_path, patte
     def paths(df):
         return sorted(r["path"] for r in df.select("path").collect())
 
-    assert paths(read_files(spark, root, path_filter=pattern)) == want
+    job = Job(name="paths", path_filter=pattern)
+    assert paths(FileEngine(spark, root=root).plan(job)) == want
     assert paths(read_files_chunked(spark, root, path_filter=pattern)) == want
     generic = read_files_chunked(
         spark, root, path_filter=pattern, filesystem=pafs.LocalFileSystem()

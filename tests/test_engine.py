@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from filemapreduce_spark import FileEngine, Job
-from filemapreduce_spark.sources.files import files_from_memory, with_text
+from filemapreduce_spark.sources.files import files_from_memory, read_files
 
 # FIXTURES.md §A2 — numbers_tree (testFixtures/a, trailing newlines as
 # in the reference files)
@@ -311,8 +311,6 @@ def test_disk_scan_partitions_sized_by_bytes(spark, tmp_path):
     Spark job; an explicit files DF keeps its own partitioning."""
     import math
 
-    from filemapreduce_spark.sources.files import read_files
-
     tree = {
         f"d{i % 7}/s{i % 11}/f{i}.txt": "x" * (40 + i % 90) for i in range(300)
     }
@@ -355,6 +353,51 @@ def test_disk_scan_partitions_sized_by_bytes(spark, tmp_path):
     )
     wide = mem.repartition(3 * dp)
     assert FileEngine(spark, files_df=wide).run([_partitions_job()])["n"] == 3 * dp
+
+
+def test_uri_roots_read_like_the_plain_path(spark, tmp_path):
+    """``file:/abs`` and ``file:///abs`` roots name the same tree as
+    ``/abs``: ``read_files`` and a two-job ``FileEngine.run`` give the
+    same rows for all three (relative paths included, also below a
+    folder that repeats the root's name)."""
+    root = tmp_path / "p"
+    _write_tree(root, {"x/a.txt": "1\n2", "p/p/b.txt": "3", "c/d.json": "{}"})
+    plain = str(root)
+
+    def scanned(r):
+        return sorted(
+            (row.path, bytes(row.content), row.length)
+            for row in read_files(spark, r).collect()
+        )
+
+    def engine(r):
+        out = FileEngine(spark, root=r).run(
+            [
+                Job(
+                    name="paths",
+                    finalizer=lambda df: sorted(x.path for x in df.collect()),
+                ),
+                Job(
+                    name="sum",
+                    path_filter="**/*.txt",
+                    loader="text",
+                    mapper=lambda df: df.select(
+                        F.explode(F.split("data", "\n")).alias("v")
+                    ),
+                    reducer=lambda df: df.agg(F.sum(F.col("v").cast("long"))),
+                    finalizer=lambda df: df.collect()[0][0],
+                ),
+            ]
+        )
+        return out["paths"], out["sum"]
+
+    want = scanned(plain)
+    assert [p for p, _, _ in want] == ["c/d.json", "p/p/b.txt", "x/a.txt"]
+    ran = engine(plain)
+    assert ran == (["c/d.json", "p/p/b.txt", "x/a.txt"], 6)
+    for uri in ("file:" + plain, "file://" + plain):
+        assert scanned(uri) == want, uri
+        assert engine(uri) == ran, uri
 
 
 def test_scan_split_unchanged_from_open_cost_per_core(spark, tmp_path):
@@ -537,8 +580,12 @@ def test_sorted_reduce_deterministic_order(spark):
 
 
 def test_with_text_helper(spark):
-    df = with_text(files_from_memory(spark, {"x.txt": "héllo"}))
-    assert df.collect()[0].text == "héllo"
+    """The ``text`` loader decodes content as UTF-8."""
+    eng = FileEngine.from_memory(spark, {"x.txt": "héllo"})
+    out = eng.run(
+        [Job(name="t", loader="text", finalizer=lambda df: df.collect())]
+    )
+    assert [r.data for r in out["t"]] == ["héllo"]
 
 
 def test_csv_loader(spark):
@@ -753,7 +800,7 @@ def test_unsorted_reducer_stays_distributed(spark):
 
 def test_sorted_reducer_uses_single_partition_funnel(spark):
     """With sort_key set, the plan DOES show the documented
-    single-partition funnel (repartition(1) + local sort) — the
+    single-partition funnel (one range partition + local sort) — the
     deliberate, reference-faithful serialization point."""
     eng = FileEngine.from_memory(spark, NUMBERS_TREE)
     plan_df = eng.plan(

@@ -4,7 +4,7 @@ See FIXTURES.md §A6."""
 
 import pytest
 
-from filemapreduce_spark.globs import MultiFilter, PathFilter, compile_glob
+from filemapreduce_spark.globs import MultiFilter, PathFilter
 
 # ported from glob_test.go:7-34 (CouldMatch table)
 COULD_MATCH = [
@@ -70,11 +70,11 @@ def test_match_table(pattern, path, expected):
     "pattern,path,expected", MATCH + FIXED + ANCHORED + RECURSIVE_DEPTH
 )
 def test_regex_agrees_with_match(pattern, path, expected):
-    """compile_glob must agree with the Python matcher (it's what the
+    """``to_regex`` must agree with the Python matcher (it's what the
     DataFrame plan uses via rlike)."""
     import re
 
-    assert bool(re.search(compile_glob(pattern), path)) is expected
+    assert bool(re.search(PathFilter(pattern).to_regex(), path)) is expected
 
 
 def test_multifilter_or():
